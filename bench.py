@@ -659,31 +659,38 @@ def _compact_summary_line(out: dict, budget: int = 1900) -> str:
             return line
     # still too big: truncate MONOTONICALLY — the previous artifact's kept
     # set stays whole (PERF treats a missing name as a dropped query no
-    # matter why), coarser precision is tried before any row is dropped,
-    # and the leftover budget goes to the slowest new rows.
+    # matter why), and precision coarsens tier by tier before any row is
+    # dropped. The chosen tier is the FINEST one that carries the kept set
+    # plus the slowest new row (a new row left off the line never joins
+    # the next round's kept set); failing that, the finest one
+    # that carries the kept set. The leftover budget then fills strictly
+    # slowest-first and stops at the first row that does not fit, so a
+    # short fast name can never take the place of a long slow one.
     slim["queries_truncated"] = True
     prev_kept = _prev_artifact_kept_set()
+
+    def _sig(v: float, digits: int):
+        r = float(f"{v:.{digits}g}")
+        return int(r) if r.is_integer() else r
 
     def _fmt(v, tier: int):
         if not isinstance(v, float):
             return v  # None (errored query) passes through
-        # tier 1: 1 decimal for >=10 s rows (<=0.5% error — frees budget
-        # for more rows); tier 2: 1 decimal for everything >=1 s
-        if v >= (10.0 if tier == 1 else 1.0):
-            return round(v, 1)
-        return round(v, 2)
+        if tier == 1:  # 1 decimal for >=10 s rows (<=0.5% error)
+            return round(v, 1) if v >= 10.0 else round(v, 2)
+        if tier == 2:  # 1 decimal for everything >=1 s
+            return round(v, 1) if v >= 1.0 else round(v, 2)
+        if v >= 10.0:  # tiers 3-4: integer seconds (<=5% error)
+            return int(round(v))
+        # tier 3: 2 significant digits; tier 4 (coarsest, the guaranteed
+        # fit): 1 significant digit — at most 3 chars for any 0.1-10 s row
+        return _sig(v, 2 if tier == 3 else 1)
 
-    # both precision tiers are tried and the one carrying MORE rows wins
-    # (ties prefer the finer tier): at 1898/1900 chars tier 1's greedy
-    # fill can strand a long-named slow new row (streaming_dedup_probe,
-    # 29 chars) while a short fast name slips in — the driver then never
-    # sees the new row at all, and it misses the next round's kept set.
-    best = None
-    for tier in (1, 2):
+    fallback = None
+    for tier in (1, 2, 3, 4):
         qq = {k: _fmt(v, tier) for k, v in out["queries"].items()}
         kept = {k: qq[k] for k in qq if k in prev_kept}
-        slim["queries"] = kept
-        line = json.dumps(slim, separators=(",", ":"))
+        line = json.dumps({**slim, "queries": kept}, separators=(",", ":"))
         if len(line) > budget:
             continue  # prev set alone does not fit at this precision
         rest = sorted(
@@ -691,16 +698,18 @@ def _compact_summary_line(out: dict, budget: int = 1900) -> str:
             key=lambda k: (qq[k] is not None, qq[k] if qq[k] is not None else 0.0),
             reverse=True,
         )
+        n_new = 0
         for k in rest:
-            trial = {**slim["queries"], k: qq[k]}
+            trial = {**kept, k: qq[k]}
             tline = json.dumps({**slim, "queries": trial}, separators=(",", ":"))
-            if len(tline) <= budget:
-                slim["queries"] = trial
-                line = tline
-        if best is None or len(slim["queries"]) > best[0]:
-            best = (len(slim["queries"]), line)
-    if best is not None:
-        return best[1]
+            if len(tline) > budget:
+                break
+            kept, line, n_new = trial, tline, n_new + 1
+        if n_new or not rest:
+            return line
+        fallback = fallback or line
+    if fallback is not None:
+        return fallback
     # last resort (the previous kept set alone exceeds the budget even at
     # coarse precision): keep the slowest rows — the pre-r13 behavior
     by_time = sorted(

@@ -26,7 +26,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
 from collections import Counter
 
 from pyspark.sql import Column, DataFrame, Window
@@ -194,135 +193,6 @@ def _dup_run_stats(arr: Column) -> Column:
     return F.aggregate(F.array_sort(arr), init, merge, finish)
 
 
-def _positional_ngrams(w: Column, n: int) -> Column:
-    """NON-distinct space-joined word n-grams in positional order (the
-    counting stream, unlike word_ngrams' distinct set)."""
-    return F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def _top_gram_cover(w: Column, n: int) -> Column:
-    """Char coverage (count * gram char length, spaces excluded) of the
-    most frequent word n-gram; ties on count break toward the larger
-    coverage, so the emitted number is max(count) then max(coverage) —
-    the conservative reading of Gopher's 'most frequently occurring
-    n-gram' rule and exactly what a GROUP BY twin computes. Sorted-array
-    fold: one O(m log m) row-local pass."""
-    zero = F.lit(0).cast("long")
-    pad = F.lit(n - 1).cast("long")
-
-    def merge(acc, x):
-        same = x == acc["prev"]
-        cnt = acc["run"]
-        cov = cnt * (F.length(acc["prev"]) - pad)
-        better = ~same & (
-            (cnt > acc["best_cnt"]) | ((cnt == acc["best_cnt"]) & (cov > acc["best_cov"]))
-        )
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("long")).alias("run"),
-            F.when(better, cnt).otherwise(acc["best_cnt"]).alias("best_cnt"),
-            F.when(better, cov).otherwise(acc["best_cov"]).alias("best_cov"),
-        )
-
-    def finish(acc):
-        cnt = acc["run"]
-        cov = cnt * (F.length(acc["prev"]) - pad)
-        better = (cnt > acc["best_cnt"]) | (
-            (cnt == acc["best_cnt"]) & (cov > acc["best_cov"])
-        )
-        return F.when(better & (cnt > 0), cov).otherwise(acc["best_cov"])
-
-    init = F.struct(
-        F.lit("").alias("prev"),
-        zero.alias("run"),
-        zero.alias("best_cnt"),
-        zero.alias("best_cov"),
-    )
-    return F.aggregate(F.array_sort(_positional_ngrams(w, n)), init, merge, finish)
-
-
-def _sorted_positional_grams(w: Column, n: int) -> Column:
-    """(gram, position) structs sorted by gram (then position) — duplicate
-    grams are adjacent after the sort. Evaluated ONCE per row as long as
-    the result is materialized as its own column (an attribute): Spark
-    never hoists loop-invariant subtrees out of higher-order-function
-    lambdas, so a lambda body that embeds this expression would re-sort
-    per ELEMENT (O(m^2 log m) per row — the bug this staging avoids)."""
-    m = F.size(w)
-    grams = F.when(
-        m >= n,
-        F.transform(
-            F.sequence(F.lit(1), m - (n - 1)),
-            lambda i: F.struct(
-                F.concat_ws(" ", F.slice(w, i, n)).alias("g"), i.alias("p")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<g:string,p:int>>"))
-    return F.array_sort(grams)
-
-
-def _dup_pos_mask(s: Column) -> Column:
-    """From the gram-sorted struct array (an ATTRIBUTE column — see
-    _sorted_positional_grams), a boolean mask in POSITIONAL order: entry
-    p-1 is true iff the gram starting at position p occurs >= 2 times.
-    Neighbor equality in the sorted array; F.get on a materialized array
-    is O(1) per element."""
-    flags = F.transform(
-        s,
-        lambda x, i: F.struct(
-            x["p"].alias("p"),
-            (
-                F.coalesce(F.get(s, i - 1)["g"] == x["g"], F.lit(False))
-                | F.coalesce(F.get(s, i + 1)["g"] == x["g"], F.lit(False))
-            ).alias("d"),
-        ),
-    )
-    return F.transform(F.array_sort(flags), lambda x: x["d"])
-
-
-def _dup_cover_chars(w: Column, dmask: Column, n: int) -> Column:
-    """Union char coverage of tokens inside any duplicated n-gram —
-    Gopher's duplicated-n-gram numerator, 'taking care not to count
-    characters in overlapping n-grams more than once' (position-set
-    union, not a sum over grams). Token j is covered iff some duplicated
-    gram starts in [j-n+1, j]: an n-way OR of the mask shifted by
-    0..n-1, built with zip_with whose inputs are evaluated once per row
-    (never inside a lambda body). O(m*n) per row, zero shuffle."""
-    false_lit = F.lit(False)
-
-    def shifted(k: int) -> Column:
-        parts = []
-        if k:
-            parts.append(F.array_repeat(false_lit, k))
-        parts.append(dmask)
-        if n - 1 - k:
-            parts.append(F.array_repeat(false_lit, n - 1 - k))
-        return F.concat(*parts) if len(parts) > 1 else parts[0]
-
-    covered = shifted(0)
-    for k in range(1, n):
-        covered = F.zip_with(
-            covered,
-            shifted(k),
-            lambda a, b: F.coalesce(a, false_lit) | F.coalesce(b, false_lit),
-        )
-    per_tok = F.zip_with(
-        w,
-        covered,
-        lambda tok, c: F.when(
-            F.coalesce(c, false_lit), F.length(tok).cast("long")
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    total = F.aggregate(per_tok, F.lit(0).cast("long"), lambda acc, x: acc + x)
-    return F.when(F.size(w) >= n, total).otherwise(F.lit(0).cast("long"))
-
-
 # Gopher (Rae et al. 2021, table A1) repetition thresholds: a document is
 # REMOVED when the fraction exceeds the bound. Integer cross-multiplied in
 # the keep flags so no float ever enters the contract.
@@ -331,8 +201,7 @@ _GOPHER_DUP_PCT = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}  # dup n-gram (%)
 
 
 def _gram_char_stats(w: list, top_ns: tuple, dup_ns: tuple) -> list:
-    """Exact integer gram statistics for ONE token list — the Python twin
-    of the S1–S3 JVM expression stages below, returning
+    """Exact integer gram statistics for ONE token list, returning
     ``[n_tokens, token_chars, top{n}_char_n…, dup{n}_char_n…]``.
 
     Everything is equality/counting over the token strings the JVM
@@ -340,9 +209,17 @@ def _gram_char_stats(w: list, top_ns: tuple, dup_ns: tuple) -> list:
     Python at all: Python ``len(str)`` counts code points exactly like
     Spark ``length``, and tuple equality over interned token ids is the
     same equivalence as gram-string equality (tokens contain no spaces,
-    so the space-joined gram is injective in the token tuple). Top-gram
-    ties break by (count, char coverage) max — order-independent, the
-    same integers the sorted-array fold derives."""
+    so the space-joined gram is injective in the token tuple).
+
+    * top-gram: char coverage (count * gram char length, spaces
+      excluded) of the most frequent n-gram; ties on count break toward
+      the larger coverage — the conservative reading of Gopher's 'most
+      frequently occurring n-gram' rule, and exactly what a GROUP BY
+      computes;
+    * dup-gram: union char coverage of tokens inside any duplicated
+      n-gram — 'taking care not to count characters in overlapping
+      n-grams more than once' (position-set union, not a sum over
+      grams)."""
     m = len(w)
     lens = [len(x) for x in w]
     pref = [0] * (m + 1)
@@ -389,16 +266,16 @@ def _gram_char_stats(w: list, top_ns: tuple, dup_ns: tuple) -> list:
 
 
 def _gram_stats_arrow(s0: DataFrame, top_ns: tuple, dup_ns: tuple) -> DataFrame:
-    """Arrow-batch replacement for the S1–S3 JVM stages of
-    :func:`gopher_repetition` (optimization guide §4.2: hand whole
-    batches of heavy per-row work to native-speed code instead of
-    interpreted higher-order-function expressions — measured 5.8× on the
+    """The n-gram half of :func:`gopher_repetition` as one Arrow-batch
+    stage (optimization guide §4.2: hand whole batches of heavy per-row
+    work to native-speed code instead of interpreted higher-order-function
+    expressions — measured 5.8× over the sorted-array JVM folds on the
     10×-corpus battery, 49.4→8.5 s). The JVM still tokenizes
     (``word_tokens`` stays a codegen projection, so scan pruning and the
     oracle-pinned regex semantics are untouched); only the token arrays
     cross the boundary, and the stats come back as int64 columns. Every
-    other input column passes through the batch zero-copy. Bit-identical
-    to the JVM path — pinned in tests/test_repetition.py."""
+    other input column passes through the batch zero-copy. Pinned against
+    a brute-force reference in tests/test_repetition.py."""
     import pyarrow as pa
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -434,7 +311,6 @@ def gopher_repetition(
     text_col: str,
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-    engine: str | None = None,
 ) -> DataFrame:
     """The full Gopher repetition battery (Rae et al. 2021 §A1.1 table A1,
     the within-document repetition half that `gopher_quality` — the
@@ -449,10 +325,11 @@ def gopher_repetition(
     denominators. All outputs are exact integers; the keep flags
     cross-multiply so the contract is float-free end to end.
 
-    Scale shape: every statistic is a row-local fold over sorted arrays
-    (duplicate runs adjacent after array_sort) — the whole operator is
-    ONE projection, no explode, no groupBy, no join, nothing leaves the
-    row. Per-row cost O(L log L + m log m + m*n); a 100 TB corpus pays
+    Scale shape: line/paragraph stats are row-local folds over sorted
+    arrays (duplicate runs adjacent after array_sort) and the n-gram stats
+    one Arrow-batch stage over the token arrays (:func:`_gram_stats_arrow`)
+    — no explode, no groupBy, no join, nothing leaves the row. Per-row
+    cost O(L log L + m·(|top_ns| + |dup_ns|)); a 100 TB corpus pays
     exactly one scan. The superseded `repetition_signals` kept the
     explode+groupBy shape for its two bigram signals — this battery
     subsumes it.
@@ -465,54 +342,15 @@ def gopher_repetition(
             raise ValueError(f"dup n-gram threshold undefined for n={n}")
 
     t = F.coalesce(F.col(text_col), F.lit(""))
-    # S0: per-row fold stats + the token array, materialized once. Each
-    # later stage references the previous stage's columns as attributes —
-    # a non-cheap column referenced more than once survives
-    # CollapseProject, so nothing expensive ever lands inside a
-    # higher-order-function lambda body (where it would re-evaluate per
-    # element — see _sorted_positional_grams).
     s0 = df.select(
         F.col(id_col),
         _dup_run_stats(_nonempty_trimmed(F.split(t, "\n"))).alias("_l"),
         _dup_run_stats(_nonempty_trimmed(F.split(t, "\n{2,}"))).alias("_p"),
         word_tokens(t).alias("_w"),
     )
-    w = F.col("_w")
-    # Engine switch (r12): "arrow" hands the gram battery to
-    # _gram_stats_arrow (one mapInArrow stage, measured 5.8× at 10×);
-    # "jvm" keeps the original expression stages. Same integers either
-    # way (parity pinned); line/para stats and tokenization are JVM in
-    # both.
-    if engine is None:
-        engine = os.environ.get("SPARK_GRAFT_GOPHER_ENGINE", "arrow")
-    if engine == "arrow":
-        s3 = _gram_stats_arrow(s0, tuple(top_ns), tuple(dup_ns))
-    else:
-        # S1: token totals, top-gram folds, and the gram-sorted struct
-        # arrays.
-        s1 = s0.select(
-            "*",
-            F.size(w).cast("long").alias("n_tokens"),
-            F.aggregate(
-                w, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-            ).alias("token_chars"),
-            *[_top_gram_cover(w, n).alias(f"top{n}_char_n") for n in top_ns],
-            *[_sorted_positional_grams(w, n).alias(f"_s{n}") for n in dup_ns],
-        )
-        # S2: positional duplicate masks from the sorted gram arrays.
-        s2 = s1.select(
-            "*", *[_dup_pos_mask(F.col(f"_s{n}")).alias(f"_m{n}") for n in dup_ns]
-        )
-        # S3: union char coverage per n.
-        s3 = s2.select(
-            "*",
-            *[
-                _dup_cover_chars(w, F.col(f"_m{n}"), n).alias(f"dup{n}_char_n")
-                for n in dup_ns
-            ],
-        )
+    stats = _gram_stats_arrow(s0, tuple(top_ns), tuple(dup_ns))
 
-    out = s3.select(
+    out = stats.select(
         id_col,
         F.col("_l")["total"].alias("n_lines"),
         F.col("_l")["dup_n"].alias("dup_line_n"),
@@ -1278,23 +1116,36 @@ def contrastive_negatives(
 # ---------------------------------------------------------------------------
 
 
-def _hashed_ngram_counts_arrow(
-    df: DataFrame, id_col: str, text_col: str, num_buckets: int
+def hashed_ngram_counts(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_buckets: int = 4096,
 ) -> DataFrame:
-    """Arrow-batch twin of :func:`hashed_ngram_counts` (guide §4.2):
-    tokenization STAYS a JVM codegen projection (word_tokens' regex
+    """DSIR's feature map: bag-of-hashed-word-{1,2}-gram counts,
+    ``(id, bucket, c)`` with ``bucket ∈ [0, num_buckets)``.
+
+    Word unigrams AND bigrams (the DSIR paper's feature space) hash into
+    ``num_buckets`` via the engine-portable md5 hash — bucket values
+    replay ``portable_hash60`` exactly (md5 of the n-gram's UTF-8 bytes,
+    first 15 hex digits as an integer, mod num_buckets), the hash the
+    dedup oracle family rides, so the whole DSIR chain stays
+    DuckDB-checkable. Counts, not distinct presence: importance weights
+    are a product over TOKEN occurrences, so a term repeated k times
+    contributes k·logratio.
+
+    Plan: tokenization stays a JVM codegen projection (word_tokens' regex
     semantics never cross into Python), the token arrays cross once, and
-    the per-doc (bucket → count) map folds in Python — every n-gram of
-    one document lives in one batch row, so the explode AND the
-    (id, bucket) hash-aggregate exchange disappear from the plan. Bucket
-    values replay portable_hash60 exactly: md5 of the n-gram's UTF-8
-    bytes, first 15 hex digits as an integer (60-bit, non-negative), mod
-    num_buckets — bit-identical on both engines (parity pinned in
-    tests/test_curation.py)."""
+    the per-doc (bucket → count) map folds in one Arrow-batch stage
+    (optimization guide §4.2) — every n-gram of one document lives in one
+    batch row, so there is no explode and no (id, bucket) exchange. Docs
+    with zero tokens emit zero rows (their log-weight is 0 — an empty
+    product); callers left-join back to the id universe.
+
+    Scale: output is min(tokens, num_buckets) rows per doc, produced
+    scan-locally; nothing scales with the bucket dimension."""
     import pyarrow as pa
     from pyspark.sql import types as T
-
-    from pgdedupe_spark.operators.dedup import word_tokens
 
     src = df.select(F.col(id_col), word_tokens(F.col(text_col)).alias("_w"))
     out_schema = T.StructType(
@@ -1322,7 +1173,7 @@ def _hashed_ngram_counts_arrow(
                         toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)
                     )
                 if not grams:
-                    continue  # zero-token docs emit zero rows, like explode
+                    continue  # zero-token docs emit zero rows
                 counts: dict[int, int] = {}
                 for g in grams:
                     bkt = int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16) % nb
@@ -1341,62 +1192,6 @@ def _hashed_ngram_counts_arrow(
             )
 
     return src.mapInArrow(batches, schema=out_schema)
-
-
-def hashed_ngram_counts(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_buckets: int = 4096,
-    engine: str | None = None,
-) -> DataFrame:
-    """DSIR's feature map: bag-of-hashed-word-{1,2}-gram counts,
-    ``(id, bucket, c)`` with ``bucket ∈ [0, num_buckets)``.
-
-    Word unigrams AND bigrams (the DSIR paper's feature space) hash into
-    ``num_buckets`` via the engine-portable md5 hash — the same
-    ``portable_hash60`` the dedup oracle family rides, so the whole DSIR
-    chain stays DuckDB-checkable. Counts, not distinct presence: importance
-    weights are a product over TOKEN occurrences, so a term repeated k
-    times contributes k·logratio.
-
-    Plan: per-row array expressions (codegen) → one explode → one hash
-    aggregate keyed (id, bucket) with map-side combine. No joins, no
-    Python. Docs with zero tokens emit zero rows (their log-weight is 0 —
-    an empty product); callers left-join back to the id universe.
-
-    Scale: output is at most tokens-per-doc rows pre-combine and
-    min(tokens, num_buckets) per doc post-combine; the aggregate is keyed
-    by (id, bucket) so it scales with the corpus, never with the bucket
-    dimension."""
-    from pgdedupe_spark.operators.dedup import portable_hash60, word_tokens
-
-    # Engine switch (r12, the gopher-battery convention): "arrow" folds the
-    # n-gram hashing AND the per-doc (id, bucket) aggregation into one
-    # mapInArrow stage — no explode, no exchange; "jvm" keeps the original
-    # explode + hash-aggregate plan. Same rows either way (parity pinned).
-    if engine is None:
-        engine = os.environ.get("SPARK_GRAFT_DSIR_ENGINE", "arrow")
-    if engine == "arrow":
-        return _hashed_ngram_counts_arrow(df, id_col, text_col, num_buckets)
-    w = word_tokens(F.col(text_col))
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - 1),
-            lambda i: F.concat_ws(" ", F.slice(w, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    feats = F.concat(w, bigrams)
-    return (
-        df.select(F.col(id_col), F.explode(feats).alias("_ng"))
-        .select(
-            F.col(id_col),
-            (portable_hash60(F.col("_ng")) % F.lit(num_buckets)).alias("bucket"),
-        )
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
 
 
 def dsir_logratio_table(
@@ -1422,7 +1217,7 @@ def dsir_logratio_table(
     libm last-ulp disagreement between engines is absorbed by the rounding
     (the registry's d3_uncertain_pairs device).
 
-    Plan: two explode+agg passes (raw, target) → full outer join on bucket
+    Plan: two featurization passes (raw, target) → full outer join on bucket
     (≤ B rows a side) → one-row totals crossJoin (broadcast). Everything
     after the two corpus scans operates on the B-row dimension."""
     rb = _bucket_totals(
@@ -1436,12 +1231,9 @@ def dsir_logratio_table(
 
 def _bucket_totals(feats: DataFrame, out_col: str) -> DataFrame:
     """(id, bucket, c) → (bucket, total). Second-level re-agg of the
-    per-doc counts rather than a direct explode→bucket agg: when the SAME
-    ``feats`` frame also feeds the per-doc weight join (dsir_weights),
-    both branches share the (id, bucket) Exchange subplan bit-for-bit, so
-    Spark's ReuseExchange collapses them and the corpus is scanned +
-    exploded ONCE instead of twice — the dominant cost at 100 TB. (The
-    sums are identical either way; this is purely a plan-shape choice.)"""
+    per-doc counts, so the SAME ``feats`` frame can also feed the per-doc
+    weight join (dsir_weights) and, materialized once, the corpus is
+    featurized ONCE instead of twice — the dominant cost at 100 TB."""
     return feats.groupBy("bucket").agg(F.sum("c").alias(out_col))
 
 
@@ -1476,7 +1268,6 @@ def dsir_weights(
     num_buckets: int = 4096,
     alpha: float = 1.0,
     materialize: bool = False,
-    engine: str | None = None,
 ) -> DataFrame:
     """Per-document DSIR log importance weight:
 
@@ -1506,22 +1297,22 @@ def dsir_weights(
     decimals; the final left join restores featureless docs. No window,
     no Python.
     """
-    feats = hashed_ngram_counts(df, id_col, text_col, num_buckets, engine=engine)
+    feats = hashed_ngram_counts(df, id_col, text_col, num_buckets)
     _checkpoints: list[DataFrame] = []
     if materialize:
         # r12: the (id, bucket, c) feature frame feeds BOTH the raw-model
         # fit (collected below) and the scoring join — declaratively the
-        # corpus is exploded + hash-aggregated twice, once per consumer.
+        # corpus is featurized twice, once per consumer.
         # An eager checkpoint computes it once (its own job) and both
-        # consumers read the stored rows: one corpus explode instead of
-        # two, bit-identical values (same expressions, same rows). This
+        # consumers read the stored rows: one corpus featurization instead
+        # of two, bit-identical values (same expressions, same rows). This
         # is the ccnet_lm / llm_prep stage-boundary sidecar pattern; the
         # handle rides the result for release_materialized.
         feats = feats.localCheckpoint(eager=True)
         _checkpoints.append(feats)
     rb = _bucket_totals(feats, "cr")
     tb = _bucket_totals(
-        hashed_ngram_counts(target, id_col, text_col, num_buckets, engine=engine), "ct"
+        hashed_ngram_counts(target, id_col, text_col, num_buckets), "ct"
     )
     dim_rows = (
         rb.join(tb, "bucket", "full_outer")

@@ -21,8 +21,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -208,18 +206,9 @@ def ngram_jaccard_pairs(
 
 def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """The per-doc ``(_id, _sh)`` shingle frame every dedup operator
-    starts from — Arrow twin by default (r12; see :func:`_shingles_arrow`
-    for the quadratic-substring measurement and the bit-parity argument),
-    ``SPARK_GRAFT_SHINGLE_ENGINE=jvm`` keeps the generated projection."""
-    if os.environ.get("SPARK_GRAFT_SHINGLE_ENGINE", "arrow") == "arrow":
-        return _shingles_arrow(_fan_out(df, id_col), id_col, text_col, n)
-    return (
-        _fan_out(df, id_col)
-        .select(
-            F.col(id_col).alias("_id"), char_shingles(F.col(text_col), n).alias("_sh")
-        )
-        .filter(F.size("_sh") > 0)
-    )
+    starts from (see :func:`_shingles_arrow` for the quadratic-substring
+    measurement and the bit-parity argument against :func:`char_shingles`)."""
+    return _shingles_arrow(_fan_out(df, id_col), id_col, text_col, n)
 
 
 def _ngram_docs_and_candidates(
@@ -434,7 +423,9 @@ def minhash_signature_array(
     mod 2^31-1 (zip_with over literal constant arrays), and
     zip_with/least folds the state — ~4.5 s at sf0.1, bit-identical to
     the k-pass formulation (equality pinned in tests/test_recall.py).
-    DuckDB replicates the same arithmetic.
+    DuckDB replicates the same arithmetic. The MinHash pipeline runs the
+    portable family through :func:`_minhash_sig_arrow`; this fold is its
+    bit-parity reference.
 
     ``portable=False``: the same fold with xxhash64(seed, shingle) —
     bit-identical values to :func:`minhash_signature_cols` (INT seed
@@ -558,8 +549,8 @@ def _minhash_sig_arrow(sh: DataFrame, num_hashes: int) -> DataFrame:
     as the single most expensive expression in the dedup family).  Here
     md5 runs in C (hashlib) and the permutations/minima vectorize in
     numpy over all shingles of a doc at once.  Parity is pinned in
-    tests/test_recall.py (both engines, same rows) and by the
-    dedup_minhash_portable / er_gazetteer_fuzzy full-hash oracles.
+    tests/test_recall.py (against the JVM fold on the same frame) and by
+    the dedup_minhash_portable / er_gazetteer_fuzzy full-hash oracles.
 
     Only the md5 family has this twin: the xxhash64 variant has no
     bit-identical Python implementation in this environment, so
@@ -652,24 +643,12 @@ def _minhash_shingles_and_buckets(
     rows_per_band = num_hashes // bands
     if persist_sh is None:
         persist_sh = persist
-    # r12 engine switches (the gopher-battery convention):
-    # * shingling defaults to the Arrow twin for BOTH hash families —
-    #   the JVM projection is quadratic per doc (substring re-walks the
-    #   string per position; see _shingles_arrow) and measured as the
-    #   dominant census cost at 10× (env `SPARK_GRAFT_SHINGLE_ENGINE=jvm`
-    #   keeps the projection);
-    # * the signature fold defaults to Arrow only for the PORTABLE md5
-    #   family (_minhash_sig_arrow; env `SPARK_GRAFT_MINHASH_ENGINE=jvm`
-    #   keeps the fold). portable=False keeps the JVM fold always: a
-    #   vectorized-NumPy XXH64 twin (bit-parity verified) measured
-    #   SLOWER end-to-end — the native xxhash64 node is already cheap
-    #   and the Arrow boundary cost exceeded the kernel win (guide
-    #   §1.1's "ideal plan is usually slower at first" case; numbers in
-    #   OPTIMIZATION_r12.md).
-    engine_arrow_sig = (
-        portable
-        and os.environ.get("SPARK_GRAFT_MINHASH_ENGINE", "arrow") == "arrow"
-    )
+    # One signature kernel per hash family: the PORTABLE md5 family folds
+    # in Arrow (_minhash_sig_arrow); portable=False keeps the JVM
+    # xxhash64 fold — a vectorized-NumPy XXH64 (bit-parity verified)
+    # measured SLOWER end-to-end, since the native xxhash64 node is
+    # already cheap and the Arrow boundary cost exceeded the kernel win
+    # (numbers in OPTIMIZATION_r12.md).
     sh = _shingle_frame(df, id_col, text_col, n)
     if persist_sh:
         sh = _persist(sh)
@@ -680,26 +659,25 @@ def _minhash_shingles_and_buckets(
     # the fold runs once). Both hash families use the same fold shape,
     # and a MapInArrow node, while opaque to projection collapse, would
     # still be evaluated once per bucket self-join branch without it.
-    if engine_arrow_sig:
+    if portable:
         sig = _minhash_sig_arrow(sh, num_hashes)
     else:
         sig = sh.select(
             "_id",
-            minhash_signature_array("_sh", num_hashes, portable=portable).alias("_mhs"),
+            minhash_signature_array("_sh", num_hashes, portable=False).alias("_mhs"),
         )
-    if engine_arrow_sig or os.environ.get("SPARK_GRAFT_SHINGLE_ENGINE", "arrow") == "arrow":
-        # Re-establish the id hash-partitioning the JVM path inherits from
-        # _fan_out: a MapInArrow node reports UNKNOWN output partitioning
-        # (even though it moves no rows), so without this the downstream
-        # candidate-pair distinct inserts an ENSURE_REQUIREMENTS exchange
-        # over the PAIR-sized frame — and AQE then coalesces that tiny
-        # shuffle to 1-2 partitions, strangling the Jaccard-verify stage's
-        # parallelism (measured: verify 2.4 s → 15 s at sf0.1). One
-        # explicit-count exchange of the SKINNY signature frame (id + k
-        # longs — the lightweight proxy, guide §8) buys back both; the
-        # explicit count mirrors _fan_out (defaultParallelism; an
-        # AQE-coalescible column repartition would re-create the problem).
-        sig = sig.repartition(_explicit_parallelism(df.sparkSession), F.col("_id"))
+    # Re-establish the id hash-partitioning of _fan_out: the shingle
+    # frame's MapInArrow node reports UNKNOWN output partitioning (even
+    # though it moves no rows), so without this the downstream
+    # candidate-pair distinct inserts an ENSURE_REQUIREMENTS exchange
+    # over the PAIR-sized frame — and AQE then coalesces that tiny
+    # shuffle to 1-2 partitions, strangling the Jaccard-verify stage's
+    # parallelism (measured: verify 2.4 s → 15 s at sf0.1). One
+    # explicit-count exchange of the SKINNY signature frame (id + k
+    # longs — the lightweight proxy, guide §8) buys back both; the
+    # explicit count mirrors _fan_out (defaultParallelism; an
+    # AQE-coalescible column repartition would re-create the problem).
+    sig = sig.repartition(_explicit_parallelism(df.sparkSession), F.col("_id"))
     if persist:
         sig = _persist(sig)
     mh = [
@@ -988,8 +966,8 @@ def incremental_jaccard_pairs(
         )
         .select("new_id", "corpus_id")
         # r12 (guide §2.5): explicit-count repartition on BOTH pair
-        # columns + dropDuplicates instead of `.distinct()` — under the
-        # Arrow shingle engine the cached frames' partitioning is unknown
+        # columns + dropDuplicates instead of `.distinct()` — the Arrow
+        # shingle frame leaves the cached frames' partitioning unknown
         # to the planner, so the distinct added an exchange AQE coalesced
         # to ~7 partitions and the array_intersect verify of ~1M candidate
         # pairs ran 3.5× slower (measured 5.8 → 20.8 s at sf0.1). The full

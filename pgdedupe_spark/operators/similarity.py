@@ -14,7 +14,7 @@
 
 from __future__ import annotations
 
-import os
+import math
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -24,32 +24,17 @@ from pgdedupe_spark.operators.dedup import _explicit_parallelism
 from pgdedupe_spark.sources.io import local_sidecar_df
 
 
-def _ann_engine(engine: str | None) -> str:
-    """Engine switch for the PQ/IVF row-path math (the gopher-battery
-    convention): ``arrow`` (default) hands whole Arrow batches to numpy
-    with JVM-identical IEEE operation order; ``jvm`` keeps the generated
-    higher-order-function SQL. Same bits either way (parity pinned in
-    tests/test_pq.py / tests/test_ivf_index.py); env
-    ``SPARK_GRAFT_ANN_ENGINE`` overrides for A/B and fallback."""
-    if engine is None:
-        engine = os.environ.get("SPARK_GRAFT_ANN_ENGINE", "arrow")
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"unknown ANN engine {engine!r}")
-    return engine
-
-
 def _vec_matrix(arr, dim: int) -> np.ndarray:
     """Arrow list<float/double> column → (B, dim) float64 matrix.
-    Loud on nulls/ragged rows: the JVM expressions would produce nulls or
-    silently short slices there — refusing keeps the two engines'
-    disagreement impossible instead of subtle. float32→float64 widening
-    is exact, so parity with the JVM's implicit promotion holds."""
+    Loud on NULL and ragged vectors: every ANN kernel (LSH bucketize, IVF
+    assign, PQ encode) refuses them rather than bucketing or encoding a
+    made-up value. float32→float64 widening is exact."""
     if arr.null_count:
-        raise ValueError("null vector in ANN arrow path")
+        raise ValueError("null vector in ANN input")
     flat = arr.flatten()
     if len(flat) != len(arr) * dim:
         raise ValueError(
-            f"ragged vectors in ANN arrow path: {len(flat)} values for "
+            f"ragged vectors in ANN input: {len(flat)} values for "
             f"{len(arr)} rows at dim={dim}"
         )
     vals = flat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
@@ -148,23 +133,6 @@ def random_hyperplane_buckets(
     return embeddings.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
 
 
-def _bucket_expr(vec_col: str, planes: np.ndarray) -> Column:
-    """Sign-pattern bucket id for one table: bit b = (v·plane_b) > 0."""
-    sign_bits = []
-    for b, p in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in p])
-        proj = F.aggregate(
-            F.zip_with(F.col(vec_col), lit, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sign_bits.append(F.when(proj > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    bucket = sign_bits[0]
-    for sb in sign_bits[1:]:
-        bucket = bucket + sb
-    return bucket
-
-
 def lsh_cosine_topk(
     embeddings: DataFrame,
     id_col: str,
@@ -204,13 +172,11 @@ def lsh_cosine_topk(
     :func:`write_lsh_index` / :func:`lsh_topk_from_index`."""
     table_planes = _table_planes(dim, n_planes, n_tables, seed, plane_scale)
 
-    # r13: bucketize the QUERY side from the pre-filtered frame instead of
-    # filtering the corpus-wide bucket frame. Under the JVM engine the two
-    # are the same plan (the filter pushed below the projection); under the
-    # Arrow engine a filter cannot push below mapInArrow, so the old shape
-    # would have paid a second full-corpus bucketize for the handful of
-    # query rows. Stateless hashes: same expressions over the same rows
-    # give the same buckets either way.
+    # Bucketize the QUERY side from the pre-filtered frame instead of
+    # filtering the corpus-wide bucket frame: a filter cannot push below
+    # mapInArrow, so that shape would pay a second full-corpus bucketize
+    # for the handful of query rows. Stateless hashes: the same rows get
+    # the same buckets either way.
     q = _bucketize(
         embeddings.filter(F.expr(query_filter)), id_col, vec_col, table_planes
     ).select(F.col(id_col).alias("query_id"), "table", "bucket")
@@ -248,7 +214,12 @@ def _table_planes(
     bucket bit only when the whole projection sits within the rounding
     error of zero). Integer planes over integer-quantized vectors make
     every projection EXACT, which is what lets a DuckDB oracle reproduce
-    the buckets bit-for-bit (the ann_lsh hash-oracle twins)."""
+    the buckets bit-for-bit (the ann_lsh hash-oracle twins).
+
+    ``n_planes`` must lie in 1..31: a bucket id is ``sum(1 << b)`` over
+    the planes and is stored as int32, so a 32nd plane would wrap it."""
+    if not 1 <= n_planes <= 31:
+        raise ValueError(f"n_planes must be in 1..31 (int32 bucket ids), got {n_planes}")
     planes = [
         hyperplanes(dim, n_planes, seed if t == 0 else seed + 7919 * t)
         for t in range(max(1, n_tables))
@@ -258,26 +229,27 @@ def _table_planes(
     return planes
 
 
-def _bucketize_arrow(
+def _bucketize(
     embeddings: DataFrame, id_col: str, vec_col: str, table_planes: list[np.ndarray]
 ) -> DataFrame:
-    """Arrow twin of :func:`_bucketize` (r13, guide §4.2 — the same
-    treatment the PQ encode/IVF assign got in r12): the L×b sign-pattern
-    projections are interpreted higher-order folds on the JVM (~2k
-    interpreted multiply-adds per row for the 8-table default — the
-    dominant per-row cost of the LSH family), but one numpy pass per
-    table computes them vectorized. Bit-identical by construction:
+    """One scan → (id, table, bucket) rows for every table. The L×b
+    sign-pattern projections run as one numpy pass per table over whole
+    Arrow batches (interpreted higher-order folds on the JVM cost ~2k
+    multiply-adds per row at the 8-table default). The arithmetic is
+    fixed so a DuckDB or generated-SQL fold reproduces it bit for bit:
 
     * products: ``x * y`` with x from the vector (long→double promotion
-      is exact below 2^53, same as the JVM's implicit cast) and y the
-      float64 plane component — one IEEE multiply either way;
-    * projection: LEFT-CHAINED IEEE adds via :func:`_chain_sum`, exactly
-      the ``aggregate(…, 0.0, (acc,x) -> acc+x)`` fold order (0.0+t0 is
+      is exact below 2^53) and y the float64 plane component — one IEEE
+      multiply;
+    * projection: LEFT-CHAINED IEEE adds via :func:`_chain_sum`, the
+      ``aggregate(…, 0.0, (acc,x) -> acc+x)`` fold order (0.0+t0 is
       bit-exact t0);
-    * bucket id: sum of ``1<<b`` over ``proj > 0`` bits — exact integer.
+    * bucket id: sum of ``1<<b`` over ``proj > 0`` bits — exact integer
+      (int32: :func:`_table_planes` caps the planes at 31).
 
-    Parity pinned in tests/test_lsh_index.py (both integer-scaled planes
-    over quantized vectors and raw Gaussian planes over float vectors).
+    Pinned in tests/test_lsh_index.py against a generated-SQL reference
+    fold (integer-scaled planes over quantized vectors and raw Gaussian
+    planes over float vectors).
     """
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -318,22 +290,6 @@ def _bucketize_arrow(
             )
 
     return embeddings.select(id_col, vec_col).mapInArrow(batches, schema=out_schema)
-
-
-def _bucketize(
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    table_planes: list[np.ndarray],
-    engine: str | None = None,
-) -> DataFrame:
-    """One scan → (id, table, bucket) rows for every table."""
-    if _ann_engine(engine) == "arrow":
-        return _bucketize_arrow(embeddings, id_col, vec_col, table_planes)
-    buckets = F.array(*[_bucket_expr(vec_col, p) for p in table_planes])
-    return embeddings.select(
-        F.col(id_col), F.posexplode(buckets).alias("table", "bucket")
-    )
 
 
 def _widen_probes(q: DataFrame, n_flip_probes: int, n_planes: int) -> DataFrame:
@@ -559,31 +515,44 @@ def cosine_pairs(
     )
 
 
-def _assign_cells_arrow(
+def _assign_cells(
     embeddings: DataFrame,
     vec_col: str,
     centroids: list[tuple[int, list[float]]],
-    nrms: list[float],
 ) -> DataFrame:
-    """Arrow-batch twin of :func:`_assign_cells`'s JVM fold (guide §4.2),
-    bit-identical by construction — every IEEE operation replays the JVM
-    expression order:
+    """Nearest-centroid (cosine) assignment: one numpy argmax pass per
+    Arrow batch — no shuffle, no per-row Python. Every IEEE operation
+    keeps a fixed order, so a generated-SQL fold reproduces the cells bit
+    for bit (pinned in tests/test_pq.py):
 
-    * dot(vec, centroid-literal): the JVM zip_with promotes the float
-      element to double BEFORE multiplying (mixed float/double common
-      type), so the arrow path multiplies float64 matrices;
-    * the self-norm ``zip_with(vec, vec, x*y)`` has BOTH sides float32
-      when the column is array<float>, so products round to float32
-      FIRST and only the fold accumulates in double — replayed exactly;
+    * centroid norms are precomputed driver-side as a left-fold sum in
+      index order plus one IEEE sqrt;
+    * dot(vec, centroid) promotes the vector element to double BEFORE
+      multiplying, and the row norm's products round to float32 first
+      when the column is array<float> (only the fold accumulates in
+      double);
     * the argmax is the strict-``>`` first-wins fold (init score −2.0,
-      cell −1): NaN scores (zero vectors) never beat the accumulator.
+      cell −1): a zero vector's NaN scores never win, so it lands in
+      cell -1.
 
-    Parity pinned in tests/test_pq.py against the JVM engine."""
-    import math
-
+    The output column is ``cell`` by contract (index layouts partition on
+    it); an input already carrying one would be silently replaced, so that
+    collision raises instead. Every other input column passes through
+    unchanged. NULL and ragged vectors raise (:func:`_vec_matrix`)."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
+    if "cell" in embeddings.columns:
+        raise ValueError(
+            "_assign_cells writes its assignment to a `cell` column; "
+            "rename the existing `cell` column before indexing"
+        )
+    nrms = []
+    for _, vec in centroids:
+        acc = 0.0
+        for x in vec:  # left-fold in index order
+            acc += float(x) * float(x)
+        nrms.append(math.sqrt(acc))
     dim = len(centroids[0][1])
     cids = [int(cid) for cid, _ in centroids]
     C = np.asarray([vec for _, vec in centroids], dtype=np.float64)
@@ -610,82 +579,13 @@ def _assign_cells_arrow(
             for c in range(k):
                 dot = _chain_sum(Xd * C[c], axis=1) if n else np.empty(0)
                 s = dot / (nv * cnrm[c])
-                better = s > best  # NaN compares False, like the JVM fold
+                better = s > best  # NaN compares False: never wins
                 best[better] = s[better]
                 cell[better] = cid_arr[c]
             arrays = [b.column(nm) for nm in names] + [pa.array(cell, pa.int32())]
             yield pa.RecordBatch.from_arrays(arrays, names=names + ["cell"])
 
     return embeddings.mapInArrow(batches, schema=out_schema)
-
-
-def _assign_cells(
-    embeddings: DataFrame,
-    vec_col: str,
-    centroids: list[tuple[int, list[float]]],
-    engine: str | None = None,
-) -> DataFrame:
-    """Nearest-centroid (cosine) assignment as one JVM argmax fold over the
-    centroid literal array — no shuffle, no Python in the row path.
-
-    Expression-size engineering (same rules as :func:`pq_encode`, measured
-    when the 64-centroid stress tier landed): the literals and lambdas are
-    generated SQL text (py4j round-trips per F.lit/Python-lambda node cost
-    seconds of client time at 64×64), the row norm is computed ONCE as a
-    temp column instead of per centroid, centroid norms are precomputed
-    driver-side (same left-fold sum order and IEEE sqrt as the old in-plan
-    expression, so assignments are bit-identical to the original
-    formulation), and the cosine appears exactly once per centroid in the
-    plan (the old when/otherwise fold inlined it twice). First-wins strict
-    ``>`` keeps the original tie-break; a zero vector still lands in
-    cell -1 (NaN compares false).
-
-    The output column is ``cell`` by contract (index layouts partition on
-    it); an input already carrying one would be silently replaced, so that
-    collision raises instead. The norm temp column picks a collision-safe
-    name (same guard as compact_table's ``_z``; ADVICE r6 — a bare
-    ``_nv`` clobbered, then dropped, any user column of that name)."""
-    import math
-
-    if "cell" in embeddings.columns:
-        raise ValueError(
-            "_assign_cells writes its assignment to a `cell` column; "
-            "rename the existing `cell` column before indexing"
-        )
-    nrms = []
-    for _, vec in centroids:
-        acc = 0.0
-        for x in vec:  # left-fold in index order == the old JVM aggregate
-            acc += float(x) * float(x)
-        nrms.append(math.sqrt(acc))
-    if _ann_engine(engine) == "arrow":
-        return _assign_cells_arrow(embeddings, vec_col, centroids, nrms)
-    nv = "_nv"
-    while nv in embeddings.columns:
-        nv += "_"
-
-    cids = "array(" + ",".join(str(int(cid)) for cid, _ in centroids) + ")"
-    nrm_lit = "array(" + ",".join(f"{v!r}D" for v in nrms) + ")"
-    cent2d = _sql_array2d(np.array([vec for _, vec in centroids], dtype=np.float64))
-    nv_sql = (
-        f"sqrt(aggregate(zip_with(`{vec_col}`, `{vec_col}`, (x, y) -> x * y), "
-        f"0D, (a, b) -> a + b))"
-    )
-    fold = (
-        f"aggregate("
-        f"transform({cent2d}, (cc, i) -> named_struct("
-        f"'s', aggregate(zip_with(`{vec_col}`, cc, (x, y) -> x * y), 0D, (a, b) -> a + b)"
-        f" / (`{nv}` * element_at({nrm_lit}, i + 1)), "
-        f"'cid', element_at({cids}, i + 1))), "
-        f"named_struct('s', CAST(-2.0 AS DOUBLE), 'cid', -1), "
-        f"(acc, s) -> IF(s.s > acc.s, s, acc)"
-        f").cid AS cell"
-    )
-    return (
-        embeddings.withColumn(nv, F.expr(nv_sql))
-        .selectExpr("*", fold)
-        .drop(nv)
-    )
 
 
 def ivf_index(
@@ -1003,37 +903,41 @@ def _sql_array2d(a: np.ndarray) -> str:
     parse as DECIMAL in Spark SQL). Codebook-sized literals MUST go
     through SQL text: building them with per-element F.lit/F.array costs
     one py4j round-trip per float (~10 s of client time at m=16,
-    ksub=64), and per-centroid Python lambdas add seconds more — the
-    whole PQ expression layer is therefore generated SQL, parsed once."""
+    ksub=64), and per-centroid Python lambdas add seconds more — the PQ
+    query-side expressions (LUT, cell ranking) are therefore generated
+    SQL, parsed once."""
     rows = ",".join(
         "array(" + ",".join(f"{float(v)!r}D" for v in row) + ")" for row in a
     )
     return f"array({rows})"
 
 
-def _pq_encode_arrow(
+def pq_encode(
     embeddings: DataFrame,
     id_col: str,
     vec_col: str,
     codebooks: np.ndarray,
-    keep: tuple[str, ...],
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Arrow-batch twin of :func:`pq_encode`'s JVM fold (guide §4.2) —
-    bit-identical by construction: the JVM zip_with promotes float
-    elements to double before ``(x-y)*(x-y)`` (mixed float/double), the
-    per-subvector distance is a left-chained add (:func:`_chain_sum`),
-    the argmin is the strict-``<`` first-wins fold (np.argmin keeps the
-    first minimum), the ``‖c‖²`` table is the SAME numpy ``norms2`` the
-    JVM path embeds as literals, and ``_pqnorm`` chains the m terms in
-    subquantizer order before one IEEE sqrt. Parity pinned in
-    tests/test_pq.py. Precondition (loud, not silent): vectors are
-    null-free, NaN-free and exactly m·dsub long — the checks in
-    :func:`_vec_matrix` raise where the JVM path would emit garbage.
+    """Encode the corpus against trained codebooks: one numpy argmin pass
+    per subvector over whole Arrow batches — no shuffle, no per-row
+    Python.
 
-    No persist barrier and no ``_pq_encode_cache``: the MapInArrow node
-    is a small plan (nothing for the optimizer to re-walk), so the
-    anti-CollapseProject cache the JVM expression tree needs is
-    unnecessary here (release_encode_cache stays a no-op)."""
+    Output (id, *keep, codes array<int>, _pqnorm double): codes[j] is the
+    chosen centroid index for subvector j, ``_pqnorm`` the norm of the
+    reconstructed vector (Σ_j ‖c_j‖² of the chosen centroids — needed for
+    cosine ADC; carried as a column so the scan never reopens codebooks).
+    At 100 TB codes pack to binary(m); array<int> keeps the driver/oracle
+    plumbing simple at test scale and the layout point is identical.
+
+    Every IEEE operation keeps a fixed order, so a generated-SQL fold
+    reproduces the codes bit for bit (pinned in tests/test_pq.py): float
+    elements promote to double before ``(x-y)*(x-y)``, the per-subvector
+    distance is a left-chained add (:func:`_chain_sum`), the argmin keeps
+    the first minimum (ties break to the lowest centroid index), and
+    ``_pqnorm`` chains the m ``‖c‖²`` terms in subquantizer order before
+    one IEEE sqrt. NULL, ragged and wrong-length vectors raise
+    (:func:`_vec_matrix`)."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -1078,87 +982,7 @@ def _pq_encode_arrow(
                 arrays, names=pass_names + ["codes", "_pqnorm"]
             )
 
-    out = src.mapInArrow(batches, schema=out_schema)
-    out._pq_encode_cache = None
-    return out
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebooks: np.ndarray,
-    keep: tuple[str, ...] = (),
-    engine: str | None = None,
-) -> DataFrame:
-    """Encode the corpus against trained codebooks — pure JVM column math
-    (the no-Python-UDF rule holds: one argmin fold per subvector over the
-    centroid literal array, L2 on the ``slice`` of the vector).
-
-    Output (id, codes array<int>, _pqnorm double): codes[j] is the chosen
-    centroid index for subvector j, ``_pqnorm`` the norm of the
-    reconstructed vector (Σ_j ‖c_j‖² of the chosen centroids — needed for
-    cosine ADC; carried as a column so the scan never reopens codebooks).
-    At 100 TB codes pack to binary(m); array<int> keeps the driver/oracle
-    plumbing simple at test scale and the layout point is identical."""
-    if _ann_engine(engine) == "arrow":
-        return _pq_encode_arrow(embeddings, id_col, vec_col, codebooks, keep)
-    m, ksub, dsub = codebooks.shape
-    norms2 = (codebooks**2).sum(axis=2)
-
-    # Expression-size engineering (every variant below was measured):
-    # * Python-side lambda/literal construction pays a py4j round-trip per
-    #   node (~10 s at m=16, ksub=64) → the layer is generated SQL text.
-    # * argmin as array_position(d2s, array_min(d2s)) references the
-    #   distance array twice, and CollapseProject then inlines the copies
-    #   downstream — Catalyst optimization goes superlinear on the
-    #   duplicated ~50k-node tree (40s+). Instead ONE fold over
-    #   `transform` output carries (dist, code, ‖c‖²) in a struct: every
-    #   codebook literal appears exactly once in the plan.
-    # * The heavy projection is persisted: downstream plans (codes
-    #   array, ADC join) resolve against the cache, so the optimizer
-    #   never re-walks the codebook expressions. At 100 TB this persist
-    #   IS the product: codes are written once and every query scans the
-    #   m-byte codes, not the dim×4-byte raw vectors.
-    # Ties break to the lowest centroid index (strict < keeps the first
-    # minimum), deterministically.
-    best_exprs = []
-    for j in range(m):
-        n2_lit = "array(" + ",".join(f"{float(v)!r}D" for v in norms2[j]) + ")"
-        best_exprs.append(
-            f"aggregate("
-            f"transform({_sql_array2d(codebooks[j])}, (cc, i) -> named_struct("
-            f"'d', aggregate(zip_with(slice(`{vec_col}`, {j * dsub + 1}, {dsub}), cc, "
-            f"(x, y) -> (x-y)*(x-y)), 0D, (a, b) -> a+b), 'i', i)), "
-            f"named_struct('d', CAST('Infinity' AS DOUBLE), 'i', -1), "
-            f"(acc, s) -> IF(s.d < acc.d, s, acc), "
-            f"s -> named_struct('i', s.i, 'n2', element_at({n2_lit}, s.i + 1))"
-            f") AS _b_{j}"
-        )
-    keep_cols = [f"`{c}`" for c in keep]
-    step = embeddings.selectExpr(f"`{id_col}`", *keep_cols, *best_exprs).persist()
-    codes_sql = "array(" + ",".join(f"_b_{j}.i" for j in range(m)) + ")"
-    pqnorm_sql = "sqrt(" + " + ".join(f"_b_{j}.n2" for j in range(m)) + ")"
-    out = step.selectExpr(
-        f"`{id_col}`", *keep_cols, f"{codes_sql} AS codes", f"{pqnorm_sql} AS _pqnorm"
-    )
-    # hand the persisted projection to the caller so it can be released
-    # once the codes are consumed (write paths call release_encode_cache
-    # after their write action; ADVICE r6 — without this every
-    # write_pq_index/index_append leaked a cached frame for the session).
-    out._pq_encode_cache = step
-    return out
-
-
-def release_encode_cache(df: DataFrame) -> None:
-    """Unpersist the projection :func:`pq_encode` cached behind ``df``
-    (no-op for frames without one). Call after the action that consumed
-    the codes — the cache only exists to stop the optimizer re-walking
-    the codebook expression tree while the encode is live."""
-    cache = getattr(df, "_pq_encode_cache", None)
-    if cache is not None:
-        cache.unpersist()
-        df._pq_encode_cache = None
+    return src.mapInArrow(batches, schema=out_schema)
 
 
 def pq_cosine_topk(
@@ -1214,12 +1038,7 @@ def pq_cosine_topk(
         books,
     )
     cand = _pq_adc_shortlist(q, codes, int(refine) * k)
-    out = _score_topk(embeddings, id_col, vec_col, cand, k, query_filter)
-    # the returned plan still resolves against the encode cache; carry the
-    # handle so the consumer can release_encode_cache(out) post-action
-    # instead of leaking it for the session (ADVICE r6).
-    out._pq_encode_cache = encoded._pq_encode_cache
-    return out
+    return _score_topk(embeddings, id_col, vec_col, cand, k, query_filter)
 
 
 def _pq_query_lut(q: DataFrame, books: np.ndarray, keep_vec: bool = False) -> DataFrame:
@@ -1360,7 +1179,6 @@ def write_pq_index(
         .mode("overwrite")
         .parquet(path + "/codes")
     )
-    release_encode_cache(codes)
     _drop_stream_overlay(embeddings.sparkSession, path, "codes")
     spark = embeddings.sparkSession
     m_, ksub_, dsub = books.shape
@@ -1469,7 +1287,6 @@ def index_append(spark, index_path: str, new_embeddings: DataFrame) -> None:
         .mode("append")
         .parquet(f"{index_path}/{layer}")
     )
-    release_encode_cache(rows)
 
 
 def _index_batch_rows(
@@ -1532,7 +1349,6 @@ def index_append_epoch(
         .option("partitionOverwriteMode", "dynamic")
         .parquet(f"{index_path}/{layer}_stream")
     )
-    release_encode_cache(rows)
 
 
 def index_compact(spark, index_path: str) -> None:
@@ -1992,13 +1808,11 @@ def pq_knn_join(
         .withColumn("sim", dot / (F.col("_qn") * F.col("_cn")))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "sim", "rank")
     )
-    out._pq_encode_cache = codes._pq_encode_cache
-    return out
 
 
 def pq_knn_join_from_index(

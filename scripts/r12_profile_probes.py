@@ -44,7 +44,6 @@ def profile_pq_stress(spark, sf_dir):
         ivf_index,
         _assign_cells,
         pq_encode,
-        release_encode_cache,
         write_pq_index,
     )
     from pgdedupe_spark.registry import _serve_index_path
@@ -68,7 +67,6 @@ def profile_pq_stress(spark, sf_dir):
     codes = pq_encode(indexed, "vec_id", "embedding", books, keep=("cell",))
     codes.write.format("noop").mode("overwrite").save()
     t_encode = time.perf_counter() - t0
-    release_encode_cache(codes)
 
     path = "/tmp/r12_prof_pq_stress"
     t0 = time.perf_counter()
@@ -92,7 +90,7 @@ def profile_pq_stress(spark, sf_dir):
 
 def profile_pq_knn_join(spark, sf_dir):
     from pgdedupe_spark.operators.similarity import (
-        pinned_pq_layout, pq_encode, release_encode_cache, _assign_cells,
+        pinned_pq_layout, pq_encode, _assign_cells,
         _pq_query_lut,
     )
     from pgdedupe_spark.registry import _quantized_embeddings
@@ -110,7 +108,6 @@ def profile_pq_knn_join(spark, sf_dir):
     codes = pq_encode(r_idx, "vec_id", "embedding", books, keep=("cell",))
     codes.write.format("noop").mode("overwrite").save()
     t_encode = time.perf_counter() - t0
-    release_encode_cache(codes)
 
     t0 = time.perf_counter()
     q = left.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))

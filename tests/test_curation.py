@@ -780,22 +780,14 @@ def test_dsir_scoring_job_explodes_corpus_once(spark, sf_dir):
     w = dsir_weights(docs, "doc_id", "text", docs.filter(F.col("lang") == "en"))
     w.count()
     plan = w._jdf.queryExecution().executedPlan().toString()
-    # r12: the arrow feature engine folds explode+aggregate into ONE
-    # MapInArrow stage, so the scoring plan carries exactly one corpus
-    # featurization either way — one explode (jvm) or one MapInArrow
-    # (arrow), never the five recomputed subtrees of the unmaterialized
-    # r10 shape.
+    # the featurization is ONE MapInArrow stage (explode+aggregate folded
+    # per doc), so the scoring plan carries exactly one corpus
+    # featurization — never the five recomputed subtrees of the
+    # unmaterialized r10 shape.
     n_explode = plan.count("Generate explode")
     n_arrow = plan.count("MapInArrow")
-    assert (n_explode, n_arrow) in ((1, 0), (0, 1)), (n_explode, n_arrow)
+    assert (n_explode, n_arrow) == (0, 1), (n_explode, n_arrow)
     assert "PythonUDF" not in plan
-
-    w_jvm = dsir_weights(
-        docs, "doc_id", "text", docs.filter(F.col("lang") == "en"), engine="jvm"
-    )
-    w_jvm.count()
-    plan_jvm = w_jvm._jdf.queryExecution().executedPlan().toString()
-    assert plan_jvm.count("Generate explode") == 1, plan_jvm.count("Generate explode")
 
 
 def test_dsir_declarative_model_equals_materialized_fit(spark, sf_dir):
@@ -1268,22 +1260,3 @@ def test_llm_prep_scale_probe_self_checks(spark):
     assert row.budget_conserved
     assert row.packs_exact
     assert row.base_selected > 0
-
-
-def test_hashed_ngram_counts_engines_identical(spark, sf_dir):
-    """r12: the arrow hashed-ngram path (mapInArrow, per-doc bucket fold,
-    python md5) must emit EXACTLY the explode+aggregate JVM rows — same
-    (id, bucket, c) multiset, portable_hash60 replayed bit-for-bit."""
-    from pgdedupe_spark.operators.curation import hashed_ngram_counts
-    from pgdedupe_spark.sources.io import read_parquet_table
-    import os as _os
-
-    docs = read_parquet_table(spark, _os.path.join(sf_dir, "documents.parquet"))
-    jvm = sorted(
-        map(tuple, hashed_ngram_counts(docs, "doc_id", "text", 4096, engine="jvm").collect())
-    )
-    arrow = sorted(
-        map(tuple, hashed_ngram_counts(docs, "doc_id", "text", 4096, engine="arrow").collect())
-    )
-    assert jvm == arrow
-    assert len(jvm) > 0

@@ -204,26 +204,41 @@ def test_minhash_index_band_scan_is_partition_pruned(spark, tmp_path):
 
 
 def test_bucketize_arrow_engine_bit_identical(spark):
-    """r13: the Arrow bucketize twin must reproduce the JVM sign-pattern
-    buckets bit-for-bit — integer-scaled planes over quantized vectors
-    (the oracle family) AND raw Gaussian planes over float vectors (the
-    stress probe regime, where only the exact left-chained IEEE fold
-    order keeps near-zero projections on the same side of zero)."""
+    """_bucketize (numpy over Arrow batches) must reproduce the generated-
+    SQL sign-pattern fold bit-for-bit — integer-scaled planes over
+    quantized vectors (the oracle family) AND raw Gaussian planes over
+    float vectors (the stress probe regime, where only the exact
+    left-chained IEEE fold order keeps near-zero projections on the same
+    side of zero)."""
     from pgdedupe_spark.operators.similarity import _bucketize, _table_planes
     from pgdedupe_spark.registry import _quantized_embeddings
     from pgdedupe_spark.corpus import hash_embeddings
+    from tests.ann_reference import bucketize_sql
 
     qe = _quantized_embeddings(spark, "/root/testdata/sf0.001")
     fe = hash_embeddings(spark, n_vecs=400, dim=64)
     for emb, scale in ((qe, 1000), (fe, None)):
         planes = _table_planes(64, 4, 8, 42, scale)
-        rows_a = {
-            tuple(r)
-            for r in _bucketize(emb, "vec_id", "embedding", planes, engine="arrow").collect()
+        got = {tuple(r) for r in _bucketize(emb, "vec_id", "embedding", planes).collect()}
+        ref = {
+            tuple(r) for r in bucketize_sql(emb, "vec_id", "embedding", planes).collect()
         }
-        rows_j = {
-            tuple(r)
-            for r in _bucketize(emb, "vec_id", "embedding", planes, engine="jvm").collect()
-        }
-        assert rows_a == rows_j
-        assert len(rows_a) == emb.count() * 8
+        assert got == ref
+        assert len(got) == emb.count() * 8
+
+
+def test_table_planes_rejects_bucket_width_overflow(spark):
+    """Bucket ids are int32 sums of ``1 << b``: 31 planes is the widest
+    table that cannot wrap, so every LSH entry point (they all derive
+    planes through _table_planes) refuses 0 and >= 32 planes up front."""
+    import pytest
+
+    from pgdedupe_spark.operators.similarity import _table_planes, lsh_cosine_topk
+
+    assert len(_table_planes(8, 31, 2, 42)) == 2
+    for bad in (0, 32, 64):
+        with pytest.raises(ValueError, match="n_planes"):
+            _table_planes(8, bad, 1, 42)
+    emb = spark.createDataFrame([(1, [1.0] * 8)], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="n_planes"):
+        lsh_cosine_topk(emb, "vec_id", "embedding", n_planes=32, dim=8)

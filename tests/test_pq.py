@@ -165,10 +165,9 @@ def test_pq_index_reader_uses_persisted_id_col(spark, emb, tmp_path):
 
 
 def test_pq_write_paths_release_encode_cache(spark, emb, tmp_path):
-    """pq_encode persists its heavy projection; the write paths must
-    unpersist it once codes are on disk (ADVICE r6 — before this, every
-    write_pq_index/index_append leaked one cached frame per call for the
-    session's lifetime, exactly the accumulation bench.py scrubs)."""
+    """The PQ write paths leave no persisted frame behind once codes are
+    on disk (a leak here accumulates one cached frame per call for the
+    session's lifetime, exactly what bench.py scrubs)."""
     from pgdedupe_spark.operators.similarity import index_append, write_pq_index
 
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -215,7 +214,6 @@ def test_pq_knn_join_full_settings_degrade_to_exact(spark):
     from pgdedupe_spark.operators.similarity import (
         knn_join,
         pq_knn_join,
-        release_encode_cache,
     )
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -232,7 +230,6 @@ def test_pq_knn_join_full_settings_degrade_to_exact(spark):
     )
     a = {(r.query_id, r.rank): r.neighbor_id for r in exact.collect()}
     b = {(r.query_id, r.rank): r.neighbor_id for r in got.collect()}
-    release_encode_cache(got)
     assert a == b
 
 
@@ -240,7 +237,6 @@ def test_pq_knn_join_partial_probe_recall_and_plan(spark):
     from pgdedupe_spark.operators.similarity import (
         knn_join,
         pq_knn_join,
-        release_encode_cache,
     )
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -266,7 +262,6 @@ def test_pq_knn_join_partial_probe_recall_and_plan(spark):
     got = {}
     for r in out.collect():
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
-    release_encode_cache(out)
     hits = sum(len(want[q] & got.get(q, set())) for q in want)
     total = sum(len(v) for v in want.values())
     assert hits / total >= 0.9, hits / total
@@ -285,7 +280,6 @@ def test_pq_knn_join_from_index_matches_inmemory_and_prunes(spark, tmp_path):
         pq_knn_join,
         pq_knn_join_from_index,
         pq_train_codebooks,
-        release_encode_cache,
         write_pq_index,
     )
 
@@ -323,7 +317,6 @@ def test_pq_knn_join_from_index_matches_inmemory_and_prunes(spark, tmp_path):
     assert plan.count("Window [") == 2, plan
 
     mem_rows = sorted(map(tuple, mem.collect()))
-    release_encode_cache(mem)
     assert sorted(map(tuple, srv.collect())) == mem_rows
 
     # a selective left probes few cells → the static filter lists them
@@ -351,43 +344,55 @@ def test_pq_knn_join_from_index_matches_inmemory_and_prunes(spark, tmp_path):
 
 
 def test_ann_arrow_engine_parity_with_jvm(spark, emb):
-    """r12: the Arrow row-path engine (_pq_encode_arrow /
-    _assign_cells_arrow) must be BIT-IDENTICAL to the generated-SQL JVM
-    fold — on the float32 base embeddings (where the self-norm's float
-    products and the mixed float/double promotions are the parity
-    hazards) AND on a trained float codebook (not just the pinned
-    integer layout). codes, _pqnorm, and cell all compare exactly."""
+    """The numpy-over-Arrow kernels (_assign_cells, pq_encode) must be
+    BIT-IDENTICAL to the generated-SQL reference folds — on the float32
+    base embeddings (where the self-norm's float products and the mixed
+    float/double promotions are the parity hazards) AND on a trained
+    float codebook (not just the pinned integer layout). codes, _pqnorm,
+    and cell all compare exactly."""
     from pgdedupe_spark.operators.similarity import _assign_cells, ivf_index
+    from tests.ann_reference import assign_cells_sql, pq_encode_sql
 
     books = pq_train_codebooks(emb, "vec_id", "embedding", 64, m=16, ksub=32)
     _, cents = ivf_index(emb, "vec_id", "embedding", n_centroids=8)
 
-    def rows(engine):
-        assigned = _assign_cells(emb, "embedding", cents, engine=engine)
-        enc = pq_encode(assigned, "vec_id", "embedding", books,
-                        keep=("cell",), engine=engine)
-        got = sorted(
+    def rows(enc):
+        return sorted(
             (r.vec_id, r.cell, tuple(r.codes), r._pqnorm) for r in enc.collect()
         )
-        from pgdedupe_spark.operators.similarity import release_encode_cache
 
-        release_encode_cache(enc)
-        return got
-
-    jvm, arrow = rows("jvm"), rows("arrow")
-    assert jvm == arrow  # bitwise: floats compare equal only if identical
+    got = rows(
+        pq_encode(_assign_cells(emb, "embedding", cents), "vec_id", "embedding",
+                  books, keep=("cell",))
+    )
+    ref = rows(
+        pq_encode_sql(assign_cells_sql(emb, "embedding", cents), "vec_id",
+                      "embedding", books, keep=("cell",))
+    )
+    assert got == ref  # bitwise: floats compare equal only if identical
 
 
 def test_ann_arrow_engine_rejects_ragged_vectors(spark):
-    """The arrow path refuses ragged/null vectors LOUDLY (the JVM slice
-    would silently emit garbage there)."""
+    """Every ANN kernel refuses ragged and NULL vectors LOUDLY instead of
+    bucketing, assigning or encoding a made-up value."""
     import pytest as _pytest
 
-    from pgdedupe_spark.operators.similarity import pinned_pq_layout
-
-    books, _cents = pinned_pq_layout(64, 16, 32, 16)
-    bad = spark.createDataFrame(
-        [(1, [1.0] * 64), (2, [1.0] * 63)], "vec_id long, embedding array<double>"
+    from pgdedupe_spark.operators.similarity import (
+        _assign_cells,
+        _bucketize,
+        _table_planes,
+        pinned_pq_layout,
     )
-    with _pytest.raises(Exception, match="ragged|null"):
-        pq_encode(bad, "vec_id", "embedding", books, engine="arrow").collect()
+
+    books, cents = pinned_pq_layout(64, 16, 32, 16)
+    planes = _table_planes(64, 4, 2, 42)
+    schema = "vec_id long, embedding array<double>"
+    ragged = spark.createDataFrame([(1, [1.0] * 64), (2, [1.0] * 63)], schema)
+    null = spark.createDataFrame([(1, [1.0] * 64), (2, None)], schema)
+    for bad, match in ((ragged, "ragged"), (null, "null")):
+        with _pytest.raises(Exception, match=match):
+            pq_encode(bad, "vec_id", "embedding", books).collect()
+        with _pytest.raises(Exception, match=match):
+            _bucketize(bad, "vec_id", "embedding", planes).collect()
+        with _pytest.raises(Exception, match=match):
+            _assign_cells(bad, "embedding", cents).collect()

@@ -371,39 +371,33 @@ def test_portable_minhash_matches_kpass_formulation(spark):
 
 
 def test_portable_minhash_arrow_engine_bit_identical(spark):
-    """The Arrow signature engines (_minhash_sig_arrow /
-    _minhash_sig_arrow_xx, r12) must produce bit-identical signatures
-    AND bucket keys to the JVM folds for BOTH hash families — engine
-    choice can never change a declared query's rows. Covers unicode
-    (multi-byte UTF-8 hash input), single-shingle docs, and the full
-    64-hash width the driver rows use."""
-    import os
-
-    from pgdedupe_spark.operators.dedup import _minhash_shingles_and_buckets
+    """The Arrow signature kernel (_minhash_sig_arrow) must produce
+    bit-identical PORTABLE signatures to the JVM fold
+    (minhash_signature_array) on the same shingle frame, so the kernel
+    can never change a declared query's rows. Covers unicode (multi-byte
+    UTF-8 hash input), single-shingle docs, and the full 64-hash width
+    the registry rows use."""
+    from pgdedupe_spark.operators.dedup import (
+        _minhash_sig_arrow,
+        _shingle_frame,
+        minhash_signature_array,
+    )
 
     df = spark.createDataFrame(
         [(i, f"döc texte numéro {i} — shared shingle soup") for i in range(25)]
         + [(100, "tiny"), (101, "abcde")],
         "doc_id long, text string",
     )
-
-    def run(engine, portable):
-        os.environ["SPARK_GRAFT_MINHASH_ENGINE"] = engine
-        try:
-            sh, buckets = _minhash_shingles_and_buckets(
-                df, "doc_id", "text", n=5, num_hashes=64, bands=16,
-                portable=portable, persist=False,
-            )
-            # exact shingle ARRAYS (order included — array_distinct keeps
-            # first occurrence and the persisted sidecar stores them
-            # verbatim) plus the banded bucket rows
-            sh_rows = {(r["_id"], tuple(r["_sh"])) for r in sh.collect()}
-            return sh_rows, {tuple(r) for r in buckets.collect()}
-        finally:
-            os.environ.pop("SPARK_GRAFT_MINHASH_ENGINE", None)
-
-    for portable in (True, False):
-        assert run("arrow", portable) == run("jvm", portable), portable
+    sh = _shingle_frame(df, "doc_id", "text", 5)
+    arrow = {(r["_id"], tuple(r["_mhs"])) for r in _minhash_sig_arrow(sh, 64).collect()}
+    jvm = {
+        (r["_id"], tuple(r["_mhs"]))
+        for r in sh.select(
+            "_id", minhash_signature_array("_sh", 64, portable=True).alias("_mhs")
+        ).collect()
+    }
+    assert arrow == jvm
+    assert len(arrow) == 27
 
 
 def test_shingles_arrow_edge_cases_match_jvm(spark):

@@ -183,8 +183,9 @@ def test_each_rule_trips_on_a_planted_doc(spark):
 
 
 def test_zero_shuffle_plan(spark):
-    """The whole battery is projections over one scan: no Exchange, no
-    aggregate, no join, no Python UDF anywhere in the physical plan."""
+    """The whole battery stays one scan-local pipeline: projections plus
+    exactly one MapInArrow stage for the gram stats — no Exchange, no
+    join, no Python UDF anywhere in the physical plan."""
     df = spark.range(10).selectExpr(
         "id AS doc_id", "concat('w', id, ' w w w w w w') AS text"
     )
@@ -199,50 +200,22 @@ def test_zero_shuffle_plan(spark):
     assert "PythonUDF" not in plan, plan
 
 
-def test_arrow_engine_matches_jvm_engine(spark):
-    """r12: the default Arrow gram-stats stage must be bit-identical to
-    the JVM expression stages on every column — random docs plus the
-    planted edge cases (empty text, NULL, all-same tokens, disjoint
-    repeats, m < n)."""
-    docs = _random_docs()
-    df = spark.createDataFrame(docs, "doc_id int, text string")
-    a = {
-        r["doc_id"]: r.asDict()
-        for r in gopher_repetition(
-            df, "doc_id", "text", top_ns=TOP_NS, dup_ns=DUP_NS, engine="arrow"
-        ).collect()
-    }
-    b = {
-        r["doc_id"]: r.asDict()
-        for r in gopher_repetition(
-            df, "doc_id", "text", top_ns=TOP_NS, dup_ns=DUP_NS, engine="jvm"
-        ).collect()
-    }
-    assert a == b
-
-
 def test_arrow_plan_single_stage_no_shuffle(spark):
-    """The Arrow path stays one scan-local pipeline: exactly one
-    MapInArrow stage, no Exchange, no Join; the JVM path stays fully
-    Python-free."""
+    """The gram stats for every requested n run in exactly one MapInArrow
+    stage over the scan, whatever top_ns / dup_ns are asked for — no extra
+    Python stage per n, no Exchange, no Join."""
     df = spark.range(10).selectExpr(
         "id AS doc_id", "concat('w', id, ' w w w w w w') AS text"
     )
-    pa_plan = (
-        gopher_repetition(df, "doc_id", "text", engine="arrow")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert pa_plan.count("MapInArrow") == 1, pa_plan
-    assert "Exchange" not in pa_plan and "Join" not in pa_plan, pa_plan
-    jvm_plan = (
-        gopher_repetition(df, "doc_id", "text", engine="jvm")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInArrow" not in jvm_plan and "PythonUDF" not in jvm_plan, jvm_plan
+    for top_ns, dup_ns in [((2,), (5,)), (TOP_NS, DUP_NS), ((2, 3, 4), (5, 6, 7, 8, 9, 10))]:
+        plan = (
+            gopher_repetition(df, "doc_id", "text", top_ns=top_ns, dup_ns=dup_ns)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert plan.count("MapInArrow") == 1, (top_ns, dup_ns, plan)
+        assert "Exchange" not in plan and "Join" not in plan, plan
 
 
 def test_undefined_threshold_rejected(spark):
