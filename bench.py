@@ -11,16 +11,27 @@ per-query minimum is reported — steady-state plan time with single-run
 scheduler noise removed, which is what scales to a long-lived cluster
 session and what round-over-round comparisons should flag on.
 ``value``/``queries`` report min-warm; ``value_cold``/``queries_cold`` keep
-the cold numbers so deltas separate plan cost from JIT noise."""
+the cold numbers so deltas separate plan cost from JIT noise. Heavy probes
+run cold + one warm pass in a fresh subprocess (see _heavy_probe_reading).
+
+Every published number is a measurement. The fixed-work scan canary's raw
+seconds ride in the record (``canary``, ``probe_canary``) as machine
+context only; no published value is computed from them.
+
+Usage: ``python bench.py`` (full run, also writes BENCH_LOCAL.json) or
+``python bench.py --probe <name>`` (one heavy probe, one JSON line)."""
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
 import re
+import subprocess
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -220,14 +231,6 @@ HEAVY_PROBES = {
     "multimodal_scale_probe",
 }
 
-# Iterative shuffle-bound probes (VERDICT r11 #3): their cost is exchange +
-# JVM contention across ~20 shuffle rounds, which the SCAN canary provably
-# cannot see (three same-code cc readings scan-normalized to
-# 43.7/56.5/67.8 s across r11 sessions). These two get a fixed-work
-# SHUFFLE canary bracketed in their own subprocess JVM, and their
-# normalized reading uses the shuffle ratio.
-SHUFFLE_BOUND_PROBES = {"cc_scale_probe", "pagerank_scale_probe"}
-
 # FROZEN r1 headline set (24 queries): the headline list above grows round
 # over round, so the all-query total is not comparable across artifacts.
 # ``value_legacy24`` is the subtotal over exactly this set and is the
@@ -259,58 +262,82 @@ LEGACY24 = [
     "skew_salted_agg",
 ]
 
-
-# The fixed-work canary reference point. value_legacy24_normalized
-# = value_legacy24 × (ref / measured) when the canary shift exceeds the
-# noise band (see the guard note at the emit site).
-#
-# RE-ANCHORED in r11 (VERDICT r10 #5): the original anchor was the r8
-# committed run (git 9cf9933: jvm 0.273 / scan 0.502 alongside legacy24
-# 14.641), but by r10 the machine ran persistently 1.2-2.0× slower
-# (judge-measured jvm ratio 2.02 / scan 1.48 on one probe; r11 quiet
-# triplet 1.13/1.23), so both bands were permanently exceeded and every
-# artifact was normalized by a large factor — the comparison hinged
-# entirely on canary fidelity. New REF = the r11 quiet-triplet MEDIANS
-# (three fresh JVMs, min-of-3 per canary per process: jvm
-# 0.381/0.308/0.299, scan 0.665/0.617/0.593). The legacy24 expectation
-# restates as ~19.4 s raw at ratio 1.0 (≡ the r9-era ~15.8 s at the r8
-# anchor × 0.617/0.502); see BASELINE.md "Cross-round bench anchor".
-_REF_CANARY_JVM_SEC = 0.308
-_REF_CANARY_SCAN_SEC = 0.617
-# r12 (VERDICT r11 #3): fixed-work shuffle canary — hash-repartition 40M
-# (key, value) longs across 64 partitions, hash-aggregate 1M keys (two
-# real exchanges; no plan dependence). REF = median of a quiet fresh-JVM
-# triplet of min-of-3 readings on the anchor machine (1.591/1.545/1.471;
-# same-JVM spread ±2.6% — see BASELINE.md "Cross-round bench anchor").
-_REF_CANARY_SHUFFLE_SEC = 1.545
-# measured same-machine canary spread across 5 r9 runs: jvm 0.229-0.295
-# (±13% around the median), scan 0.469-0.583 (±11%) — the bands must sit
-# clear of that while still catching genuine cross-machine drift (r8's
-# jvm case was +47%)
-_CANARY_NOISE_BAND = 0.25
-_SCAN_CANARY_NOISE_BAND = 0.20
-# the shuffle canary's same-JVM spread measured ±2.6% (see above); the band
-# for calling a probe's session "polluted" is kept wide so only genuine
-# contention (not run-to-run jitter) triggers the substitution rule below
-_SHUFFLE_CANARY_NOISE_BAND = 0.25
+# a warm pass reuses the compiled plan and the page cache, so a warm
+# reading above its own cold run by more than this factor cannot come from
+# the plan: a GC/compaction stall or a noisy neighbour polluted it
+WARM_GT_COLD = 1.2
 
 
-def _normalized_legacy24(warm: dict, canary: dict, key: str, ref: float, band: float):
-    """Canary-normalized legacy24. r10 (VERDICT r9 #4/#6): the JVM canary
-    alone can miss or mis-sign scan-side machine drift — r9's committed
-    run had the JVM canary FASTER (0.229 vs ref 0.273) while the scan
-    canary drifted SLOWER (0.470→0.517), and legacy24 is scan-bound: the
-    r8→r9 "+7% legacy24 regression" (14.61→15.64) scan-normalizes to
-    15.60→15.19, i.e. machine drift, not plans. Both normalizations are
-    emitted; diff the scan-normalized one for this scan-bound set."""
-    c = canary.get(key)
-    raw = sum(warm[n] for n in LEGACY24 if n in warm)
-    if not c:
+def _scrub_caches(spark) -> None:
+    """Drop every cache a query left behind, so runs stay independent and
+    memory does not accumulate across queries. ``clearCache()`` is
+    CacheManager-only: localCheckpoint blocks (prefix sums, CC rounds)
+    survive it and accumulated ~GBs over a 58-query session — enough that
+    the CC probe OOM'd in-session while passing standalone — so every
+    persisted RDD is unpersisted too (SCALE.md rule 7)."""
+    spark.catalog.clearCache()
+    try:
+        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            jrdd.unpersist(False)
+    except Exception:  # noqa: BLE001 — best effort; the ContextCleaner frees them later
+        pass
+
+
+def _scan_canary_sec(spark, sf_dir: str) -> float | None:
+    """Fixed-work machine-speed reading: a lineitem parquet scan plus
+    aggregate, min of 3 after one discarded JIT warmup. Recorded as
+    context only — if it moves with the query times, the machine changed,
+    not the plans — and no published value reads it. None when it fails:
+    a broken canary must not cost the artifact."""
+
+    def once() -> float:
+        t0 = time.perf_counter()
+        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
+            "sum(l_extendedprice)", "count(distinct l_orderkey)"
+        ).collect()
+        return round(time.perf_counter() - t0, 3)
+
+    try:
+        once()
+        return min(once() for _ in range(3))
+    except Exception:  # noqa: BLE001
         return None
-    ratio = ref / c
-    if abs(ratio - 1.0) <= band:
-        return round(raw, 3)  # same-machine noise band: raw is the estimator
-    return round(raw * ratio, 3)
+
+
+def _run_probe_subprocess(name: str, sf_dir: str) -> dict:
+    """Run ONE heavy probe via ``--probe`` in a fresh Python + JVM and
+    return its JSON reading (``cold``, ``warm``, ``canary_scan_sec``)."""
+    res = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--probe", name],
+        capture_output=True,
+        text=True,
+        timeout=1800,
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
+    )
+    return json.loads(res.stdout.strip().splitlines()[-1])
+
+
+def _heavy_probe_reading(run: Callable[[], dict]) -> tuple[dict, dict | None]:
+    """The heavy-probe rule. ``run()`` measures the probe once in a fresh
+    process and returns ``{"cold", "warm", ...}``.
+
+    The measured warm is published as is. Only an impossible reading
+    (warm > cold × WARM_GT_COLD) triggers a retry: exactly one more
+    ``run()``, then the run with the smaller measured warm is published.
+    Returns ``(published_run, sanity)``; ``sanity`` is None for a clean
+    first run and otherwise keeps both raw readings (or the retry's
+    error, in which case the first run is published)."""
+    first = run()
+    if first["warm"] <= first["cold"] * WARM_GT_COLD:
+        return first, None
+    sanity = {"warm_gt_cold": first["warm"], "runs": [first]}
+    try:
+        second = run()
+    except Exception as exc:  # noqa: BLE001 — keep the first measurement
+        sanity["rerun_error"] = f"{type(exc).__name__}: {exc}"[:300]
+        return first, sanity
+    sanity["runs"].append(second)
+    return min(first, second, key=lambda d: d["warm"]), sanity
 
 
 def main() -> None:
@@ -322,43 +349,13 @@ def main() -> None:
     # warm the JVM/codegen path so per-query numbers measure the plan, not
     # session startup
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-
-    # machine-speed canaries (fixed work, no plan dependence): recorded so
-    # round-over-round drift can be attributed — if the canaries move with
-    # the query times, the machine changed, not the plans. Motivated by the
-    # r4→r5 legacy24 +26% that reproduced bit-stable in r6 while every plan
-    # pin stayed green (environment, not code).
-    def _canary_jvm() -> float:
-        t0 = time.perf_counter()
-        # pmod keeps each element < 1000 so the 200M-element sum stays far
-        # from long overflow under ANSI mode (a raw id*const sum overflowed
-        # and killed the whole bench before fault isolation — hence the
-        # try/except below too)
-        spark.range(200_000_000).selectExpr("sum(pmod(xxhash64(id), 1000))").collect()
-        return round(time.perf_counter() - t0, 3)
-
-    def _canary_scan() -> float:
-        t0 = time.perf_counter()
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
-            "sum(l_extendedprice)", "count(distinct l_orderkey)"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
-    try:
-        _canary_jvm()  # JIT warmup; throw away
-        canary = {
-            "jvm_codegen_sec": min(_canary_jvm() for _ in range(3)),
-            "parquet_scan_agg_sec": min(_canary_scan() for _ in range(3)),
-            "cpus": os.cpu_count(),
-        }
-    except Exception as exc:  # noqa: BLE001 — a broken canary must not cost the artifact
-        canary = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+    canary = {"parquet_scan_agg_sec": _scan_canary_sec(spark, sf_dir), "cpus": os.cpu_count()}
 
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
     errors: dict[str, str] = {}
     sanity: dict[str, dict] = {}
-    probe_canary: dict[str, dict] = {}
+    probe_canary: dict[str, float | None] = {}
     for name in HEADLINE:
         # the heavy probes run in a FRESH SUBPROCESS (own JVM): after ~180
         # in-session query executions the JVM ages in ways the per-query
@@ -372,95 +369,15 @@ def main() -> None:
         # (value_probes), so this costs no comparability; it makes the
         # probe numbers reproduce their standalone measurements.
         if name in HEAVY_PROBES:
-            import subprocess
-
-            def _run_probe(probe: str) -> dict:
-                res = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), "--probe", probe],
-                    capture_output=True,
-                    text=True,
-                    timeout=1800,
-                    env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-                )
-                return json.loads(res.stdout.strip().splitlines()[-1])
-
             try:
-                d = _run_probe(name)
+                d, flag = _heavy_probe_reading(
+                    functools.partial(_run_probe_subprocess, name, sf_dir)
+                )
                 cold[name] = d["cold"]
                 warm[name] = d["warm"]
-                # per-probe canary bracketing (VERDICT r10 #4): canaries
-                # measured in the probe's own JVM seconds before the
-                # probe ran — normalize each heavy reading on its own
-                # clock instead of the session canaries from ~30 min
-                # ago. Shuffle-bound probes additionally get the shuffle
-                # canary (VERDICT r11 #3) — the scan canary provably
-                # fails to track exchange/JVM contention.
-                pc = {}
-                if d.get("canary_scan_sec"):
-                    r = d["canary_scan_sec"] / _REF_CANARY_SCAN_SEC
-                    pc.update(
-                        scan_sec=d["canary_scan_sec"],
-                        ratio=round(r, 3),
-                        warm_scan_normalized=round(d["warm"] / r, 3),
-                    )
-                if d.get("canary_shuffle_sec"):
-                    rs = d["canary_shuffle_sec"] / _REF_CANARY_SHUFFLE_SEC
-                    pc.update(
-                        shuffle_sec=d["canary_shuffle_sec"],
-                        shuffle_ratio=round(rs, 3),
-                        warm_shuffle_normalized=round(d["warm"] / rs, 3),
-                    )
-                if pc:
-                    probe_canary[name] = pc
-                # warm > cold×1.2 is physically impossible for a real
-                # plan (warm reuses page cache + codegen) — machine noise
-                # polluted the single warm pass. r11 published
-                # dedup_scale_probe at 57.9 s where the true number was
-                # ~34 s BECAUSE the flagged raw reading still rode the
-                # headline sum. VERDICT r11 #2: substitute the probe's
-                # own canary-normalized reading (shuffle-normalized for
-                # the iterative probes, scan-normalized otherwise) into
-                # the headline, falling back to ONE fresh-subprocess
-                # re-run when the canary is broken; the raw flagged
-                # reading stays in-band either way.
-                # r13 (VERDICT r12 #8): warm>cold is not the only pollution
-                # signature — r12 published ann_pq_stress at 93.6 s (cold
-                # was equally slow, so the gate stayed silent) while the
-                # same code measured 26.9 s on a quiet box. The probe's
-                # self-bracketed canary is the witness: when the canary
-                # ratio exceeds its noise band in the SLOW direction, the
-                # raw reading reflects the session, not the plan, and the
-                # canary-normalized reading is the better estimator. The
-                # raw flagged value always stays in the sanity record.
-                if name in SHUFFLE_BOUND_PROBES:
-                    norm_key, ratio_key = "warm_shuffle_normalized", "shuffle_ratio"
-                    band = _SHUFFLE_CANARY_NOISE_BAND
-                else:
-                    norm_key, ratio_key = "warm_scan_normalized", "ratio"
-                    band = _SCAN_CANARY_NOISE_BAND
-                polluted_warm = d["warm"] > d["cold"] * 1.2
-                canary_slow = (pc.get(ratio_key) or 0.0) > 1.0 + band
-                if polluted_warm or canary_slow:
-                    sub = pc.get(norm_key)
-                    rerun_warm = None
-                    if sub is None:
-                        try:
-                            rerun_warm = _run_probe(name)["warm"]
-                            sub = rerun_warm
-                        except Exception:  # noqa: BLE001
-                            sub = None
-                    headline = min(
-                        x for x in (d["warm"], d["cold"], sub) if x is not None
-                    )
-                    warm[name] = headline
-                    sanity[name] = {
-                        "warm_gt_cold": d["warm"] if polluted_warm else None,
-                        "raw_warm": d["warm"],
-                        "canary_ratio": pc.get(ratio_key),
-                        "substituted_warm": round(headline, 3),
-                        "rerun_warm": rerun_warm,
-                        "resolved": headline < d["warm"],
-                    }
+                probe_canary[name] = d.get("canary_scan_sec")
+                if flag:
+                    sanity[name] = flag
             except Exception as exc:  # noqa: BLE001 — record and move on
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             continue
@@ -478,16 +395,13 @@ def main() -> None:
                     cold[name] = dt
                 else:
                     warm_runs.append(dt)
-            # warm ≤ cold × 1.2 sanity gate (VERDICT r9 #5a): a warm
-            # minimum above its own cold run is physically impossible for
-            # a real plan change (warm reuses the compiled plan + page
-            # cache) — it means a GC/compaction stall polluted BOTH warm
-            # runs (r9's q19 ghost: warm 2.17 s vs cold 0.65 s; committed
-            # re-run 0.354 s). One automatic re-measure of two more warm
-            # passes; the flag rides in the artifact either way so a
-            # persistent violation is visible, never silently published
-            # as a regression.
-            if min(warm_runs) > cold[name] * 1.2:
+            # warm ≤ cold × 1.2 sanity gate (VERDICT r9 #5a): r9's q19
+            # ghost read warm 2.17 s vs cold 0.65 s (committed re-run
+            # 0.354 s). One automatic re-measure of two more warm passes;
+            # the flag rides in the artifact either way so a persistent
+            # violation is visible, never silently published as a
+            # regression.
+            if min(warm_runs) > cold[name] * WARM_GT_COLD:
                 flagged = min(warm_runs)
                 for _ in range(2):
                     t0 = time.perf_counter()
@@ -496,27 +410,14 @@ def main() -> None:
                 sanity[name] = {
                     "warm_gt_cold": flagged,
                     "rerun_warm": min(warm_runs),
-                    "resolved": min(warm_runs) <= cold[name] * 1.2,
+                    "resolved": min(warm_runs) <= cold[name] * WARM_GT_COLD,
                 }
             warm[name] = min(warm_runs)
         except Exception as exc:  # noqa: BLE001 — record and move on
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             cold.pop(name, None)
             warm.pop(name, None)
-        # drop any caches the first run left behind so the two runs are
-        # independent and memory doesn't accumulate across queries.
-        # clearCache() is CacheManager-only: localCheckpoint blocks (prefix
-        # sums, CC rounds) survive it and accumulated ~GBs over a 58-query
-        # session — enough that the CC probe OOM'd in-session while passing
-        # standalone. Queries are independent here, so drop every persisted
-        # RDD between queries (same lesson as SCALE.md rule 7).
-        spark.catalog.clearCache()
-        try:
-            jsc = spark.sparkContext._jsc
-            for jrdd in jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
-        except Exception:
-            pass
+        _scrub_caches(spark)
 
     out = {
         "metric": "headline_queries_total_sec",
@@ -527,46 +428,12 @@ def main() -> None:
         "queries_cold": cold,
         "value_legacy24": round(sum(warm[n] for n in LEGACY24 if n in warm), 3),
         "value_legacy24_cold": round(sum(cold[n] for n in LEGACY24 if n in cold), 3),
-        # machine-drift-normalized headline (VERDICT r8 #5): scale by the
-        # fixed-work JVM canary so a slower/faster driver machine stops
-        # reading as a plan regression/win (r8's 16.13 vs 14.61 confusion
-        # was entirely canary drift: 0.402 vs 0.273 on identical code).
-        # REF = the r7/r8 builder-machine canary the cross-round numbers
-        # were earned on. Round-over-round comparisons diff THIS number.
-        # Guard (measured r9): the canary itself is ±9% noisy run-to-run
-        # on ONE machine while min-of-warm legacy24 is ±3% — normalizing
-        # by a small canary delta AMPLIFIES noise (three same-machine r9
-        # runs: raw 15.1/16.0/15.6 s but naively-normalized
-        # 15.8/14.8/17.1 s). So the correction applies only when the
-        # canary shift is big enough to be real machine drift (>25%;
-        # same-machine canary spread measured ±13%, the r8 cross-machine
-        # case was +47%); within the band the raw number IS the better
-        # estimator and is reported unchanged.
-        "value_legacy24_normalized": _normalized_legacy24(
-            warm, canary, "jvm_codegen_sec", _REF_CANARY_JVM_SEC, _CANARY_NOISE_BAND
-        ),
-        # r10 (VERDICT r9 #5b): the legacy24 set is SCAN-bound, so a
-        # scan-canary normalization is the one that tracks its drift;
-        # both ratios are emitted so a reader can see when the two
-        # canaries disagree in sign (as they did in r9).
-        "value_legacy24_scan_normalized": _normalized_legacy24(
-            warm, canary, "parquet_scan_agg_sec", _REF_CANARY_SCAN_SEC,
-            _SCAN_CANARY_NOISE_BAND,
-        ),
-        "canary_ratio_jvm": (
-            round(canary["jvm_codegen_sec"] / _REF_CANARY_JVM_SEC, 3)
-            if canary.get("jvm_codegen_sec") else None
-        ),
-        "canary_ratio_scan": (
-            round(canary["parquet_scan_agg_sec"] / _REF_CANARY_SCAN_SEC, 3)
-            if canary.get("parquet_scan_agg_sec") else None
-        ),
         # deliberately-heavy scale probes, subtotaled separately so the
         # headline totals stop absorbing probe growth round-over-round
         # (VERDICT r6): value - value_probes is the comparable remainder
         "value_probes": round(sum(warm[n] for n in HEAVY_PROBES if n in warm), 3),
         "value_probes_cold": round(sum(cold[n] for n in HEAVY_PROBES if n in cold), 3),
-        "timing": "warm = min of runs 2-3 (steady-state); cold = first run; HEAVY_PROBES: fresh subprocess, cold + one warm, self-bracketed scan canary (+shuffle canary for cc/pagerank); a probe tripping warm>cold*1.2 contributes its canary-normalized (or once-rerun) reading to the headline, raw flagged value kept in sanity",
+        "timing": "every number is a measurement: warm = min of runs 2-3 (steady-state); cold = first run; HEAVY_PROBES: fresh subprocess, cold + one warm, and a probe tripping warm>cold*1.2 runs once more in a fresh subprocess and publishes the smaller measured warm (both raw runs kept in sanity); canary seconds are machine context only and change no published value",
         "canary": canary,
         "probe_canary": probe_canary,
         "sf": float(sf),
@@ -639,10 +506,6 @@ def _compact_summary_line(out: dict, budget: int = 1900) -> str:
         "queries": q,
         "sf": out["sf"],
         "value_legacy24": out.get("value_legacy24"),
-        "value_legacy24_normalized": out.get("value_legacy24_normalized"),
-        "value_legacy24_scan_normalized": out.get("value_legacy24_scan_normalized"),
-        "canary_ratio_jvm": out.get("canary_ratio_jvm"),
-        "canary_ratio_scan": out.get("canary_ratio_scan"),
         "value_probes": out.get("value_probes"),
     }
     if out.get("sanity"):
@@ -650,9 +513,7 @@ def _compact_summary_line(out: dict, budget: int = 1900) -> str:
     line = json.dumps(slim, separators=(",", ":"))
     if len(line) <= budget:
         return line
-    for key in ("sanity_flags", "canary_ratio_jvm", "canary_ratio_scan",
-                "value_probes", "value_legacy24", "value_legacy24_normalized",
-                "value_legacy24_scan_normalized"):
+    for key in ("sanity_flags", "value_probes", "value_legacy24"):
         slim.pop(key, None)
         line = json.dumps(slim, separators=(",", ":"))
         if len(line) <= budget:
@@ -727,64 +588,14 @@ def _compact_summary_line(out: dict, budget: int = 1900) -> str:
 
 def probe_main(name: str) -> None:
     """--probe mode: run ONE heavy probe in this (fresh) process — cold
-    + one warm pass, same policy HEAVY_PROBES always had — and print a
-    single JSON line for the parent bench process to merge.
-
-    The probe BRACKETS itself with the scan canary (VERDICT r10 #4): the
-    parent session's canaries are measured up to ~30 minutes before a
-    late probe runs, and the machine drifts WITHIN a session — r10's
-    driver artifact published pagerank at 68.3 s where the same-code
-    standalone number was 18.1 s, and the uniform slowness was invisible
-    to the warm≤cold gate. A canary measured seconds before the probe,
-    in the probe's own JVM, makes each heavy reading normalizable on its
-    own clock."""
+    + one warm pass — and print a single JSON line for the parent bench
+    process to merge: the two measured times plus the raw seconds of a
+    scan canary taken in this JVM just before the probe (context only)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("pgdedupe-spark-bench-probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-
-    def _canary_scan() -> float:
-        t0 = time.perf_counter()
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
-            "sum(l_extendedprice)", "count(distinct l_orderkey)"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
-    try:
-        _canary_scan()  # JIT warmup; throw away
-        canary_scan = min(_canary_scan() for _ in range(3))
-    except Exception:  # noqa: BLE001 — a broken canary must not cost the probe
-        canary_scan = None
-
-    # fixed-work shuffle canary for the iterative exchange-bound probes
-    # (VERDICT r11 #3): hash-repartition 40M (key, value) longs across 64
-    # partitions then hash-aggregate 1M keys — two real exchanges, no
-    # plan dependence, measured in THIS JVM seconds before the probe so
-    # cc/pagerank readings normalize on the channel that actually
-    # dominates them. Shape chosen for repeatability: measured ±2.6%
-    # across 6 same-JVM runs vs ±17% for a bare repartition+sum (the
-    # per-task work is large enough that scheduler jitter stops
-    # dominating).
-    def _canary_shuffle() -> float:
-        t0 = time.perf_counter()
-        (
-            spark.range(40_000_000)
-            .selectExpr("pmod(id, 1000000) k", "id v")
-            .repartition(64, "k")
-            .groupBy("k")
-            .agg({"v": "sum"})
-            .selectExpr("count(*)")
-            .collect()
-        )
-        return round(time.perf_counter() - t0, 3)
-
-    canary_shuffle = None
-    if name in SHUFFLE_BOUND_PROBES:
-        try:
-            _canary_shuffle()  # JIT warmup; throw away
-            canary_shuffle = min(_canary_shuffle() for _ in range(3))
-        except Exception:  # noqa: BLE001
-            canary_shuffle = None
+    canary_scan = _scan_canary_sec(spark, sf_dir)
 
     fn = registry.QUERIES[name]
     times = []
@@ -792,13 +603,7 @@ def probe_main(name: str) -> None:
         t0 = time.perf_counter()
         fn(spark, sf_dir).count()
         times.append(round(time.perf_counter() - t0, 3))
-        spark.catalog.clearCache()
-        try:
-            jsc = spark.sparkContext._jsc
-            for jrdd in jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
-        except Exception:
-            pass
+        _scrub_caches(spark)
     print(
         json.dumps(
             {
@@ -806,7 +611,6 @@ def probe_main(name: str) -> None:
                 "cold": times[0],
                 "warm": times[1],
                 "canary_scan_sec": canary_scan,
-                "canary_shuffle_sec": canary_shuffle,
             }
         )
     )

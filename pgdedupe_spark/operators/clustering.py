@@ -20,13 +20,14 @@ agglomerative clustering (SURVEY.md §2.7 D9, §2.8 G1).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+# edge ceiling of connected_components' driver-side union-find fast path
+CC_SMALL_GRAPH_MAX_EDGES = 500_000
 
 
 def _free_local_checkpoint(df: DataFrame) -> bool:
@@ -82,8 +83,8 @@ def connected_components(
     rounds — measured ~8 s for a 133-edge graph). The symmetric edge
     frame must be fully materialized for the loop anyway, so the gate is
     free: persist ``sym``, count the cache, and when it holds at most
-    2×``small_graph_max_edges`` rows (default 200k edges, env
-    ``SPARK_GRAFT_CC_SMALL_EDGES``, 0 disables) collect it — BOUNDED by
+    2×``small_graph_max_edges`` rows (default ``CC_SMALL_GRAPH_MAX_EDGES``
+    edges, 0 disables) collect it — BOUNDED by
     the gate itself, the same bounded-collect discipline as the
     k-means/centroid sidecars — and label by min-id union-find,
     bit-identical to the fixpoint labels. Oversized graphs pay one cached
@@ -91,7 +92,7 @@ def connected_components(
     runs the distributed loop.
     """
     if small_graph_max_edges is None:
-        small_graph_max_edges = int(os.environ.get("SPARK_GRAFT_CC_SMALL_EDGES", "500000"))
+        small_graph_max_edges = CC_SMALL_GRAPH_MAX_EDGES
     sym = (
         edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
         .union(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
@@ -184,10 +185,9 @@ def connected_components(
         # O(d) on high-diameter (chain-like) graphs; two extra small joins
         # on the vertex-sized label frame per round buy it.
         # Join strategy is left to the planner + AQE: small label frames
-        # broadcast (the entity-map regime), big ones go shuffled-hash at
-        # runtime via adaptive.maxShuffledHashJoinLocalMapThreshold
-        # (session.py, r12) — an explicit SHUFFLE_HASH hint here would
-        # PREEMPT the automatic broadcast and regress the small case.
+        # broadcast (the entity-map regime), big ones shuffle — an
+        # explicit SHUFFLE_HASH hint here would PREEMPT the automatic
+        # broadcast and regress the small case.
         neigh = (
             sym.join(labels.withColumnRenamed("id", "dst"), "dst")
             .groupBy("src")

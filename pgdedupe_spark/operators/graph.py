@@ -30,7 +30,6 @@ set are computed once and persisted. Lineage is truncated with
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame
@@ -107,17 +106,8 @@ def pagerank(
     # (builder A/B measured the r12 persist flat-to-worse at probe scale,
     # 18.6 → 22.0 s). Any frame with real lineage — a file scan, a join,
     # an exchange — keeps the r12 treatment (the sf0.1 2.8× win).
-    # ``SPARK_GRAFT_PAGERANK_PERSIST=always|never`` overrides the gate
-    # (e.g. a huge synthetic graph whose vertex frames cannot broadcast).
     raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    mode = os.environ.get("SPARK_GRAFT_PAGERANK_PERSIST", "auto")
-    if mode == "always":
-        persist_edges = True
-    elif mode == "never":
-        persist_edges = False
-    else:
-        persist_edges = not _cheap_lineage(raw)
-    e = raw.repartition("src").persist() if persist_edges else raw
+    e = raw if _cheap_lineage(raw) else raw.repartition("src").persist()
     verts = (
         e.select(F.col("src").alias("v"))
         .unionByName(e.select(F.col("dst").alias("v")))
@@ -141,10 +131,9 @@ def pagerank(
     )
     prev_ckpt = ranks
     for _ in range(iterations):
-        # Join strategy stays with the planner + AQE (broadcast when small;
-        # SMJ→SHJ rewrite at runtime via session.py's
-        # adaptive.maxShuffledHashJoinLocalMapThreshold) — a forced
-        # SHUFFLE_HASH hint would preempt the broadcast path.
+        # Join strategy stays with the planner + AQE (broadcast when
+        # small) — a forced SHUFFLE_HASH hint would preempt the broadcast
+        # path.
         shares = ranks.join(
             deg, ranks["v"] == deg["src"], "inner"
         ).select(F.col("src"), F.expr("r div _deg").alias("_share"))

@@ -5,11 +5,11 @@
   The oracle-checked variant quantizes floats to ints (×10⁴) so every
   intermediate is an exact integer < 2^53 — double math is then
   order-independent and bit-identical across engines.
-* :func:`random_hyperplane_buckets` / :func:`lsh_cosine_topk` — the scale
-  path: sign-of-projection LSH buckets (seeded numpy hyperplanes shipped as
-  literal arrays), candidates from bucket join, exact re-rank inside
-  buckets. At 100 TB you'd persist the bucketed table (write-once,
-  query-many) — an IVF layout in parquet partitioning terms.
+* :func:`lsh_cosine_topk` — the scale path: sign-of-projection LSH
+  buckets (seeded numpy hyperplanes, projected in Arrow batches),
+  candidates from bucket join, exact re-rank inside buckets. At 100 TB
+  you'd persist the bucketed table (write-once, query-many) — an IVF
+  layout in parquet partitioning terms.
 """
 
 from __future__ import annotations
@@ -112,25 +112,6 @@ def cosine_topk(
 
 def hyperplanes(dim: int, planes: int, seed: int = 42) -> np.ndarray:
     return np.random.RandomState(seed).randn(planes, dim)
-
-
-def random_hyperplane_buckets(
-    embeddings: DataFrame, id_col: str, vec_col: str, planes: np.ndarray
-) -> DataFrame:
-    """Sign-pattern bucket id per vector: bit b = (v·plane_b) > 0."""
-    sign_bits = []
-    for b, p in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in p])
-        proj = F.aggregate(
-            F.zip_with(F.col(vec_col), lit, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sign_bits.append(F.when(proj > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    bucket = sign_bits[0]
-    for sb in sign_bits[1:]:
-        bucket = bucket + sb
-    return embeddings.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
 
 
 def lsh_cosine_topk(
@@ -461,9 +442,9 @@ def cosine_pairs(
     (bit-identical to the SQL oracle).
 
     This is the *verifier*; brute force is O(n²) in pairs. At scale, feed it
-    candidates from :func:`random_hyperplane_buckets` instead of the full
-    cross join — the plan below is the exact-answer baseline the approximate
-    path is measured against.
+    candidates from an LSH bucket join (as :func:`lsh_cosine_topk` builds)
+    instead of the full cross join — the plan below is the exact-answer
+    baseline the approximate path is measured against.
 
     Plan shape (the measured lesson from the n-gram verifier): the nested
     loop enumerates ONLY narrow id pairs — a post-join cosine filter would

@@ -40,19 +40,6 @@ def get_spark(app_name: str = "pgdedupe_spark", shuffle_partitions: int | None =
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # r12 set this to 64m (AQE SMJ→SHJ rewrite, guide §3.1); r13
-        # REVERTED the default to 0 (the upstream default) after the
-        # VERDICT-r12-#3 A/B isolated it as the round's global small-query
-        # overhead: 12 untouched sub-2s rows measured geomean 1.099×
-        # slower with the rewrite enabled (events_sessionize +30%,
-        # merge_scale_probe +27%, skew_salted_agg +26%, q3 +22%; fresh
-        # JVM per config, interleaved rounds, quiet machine), with no
-        # measured heavy-row win attributable to it. Clusters that profit
-        # from skipping SMJ sorts can still opt in via the env.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "0"),
-        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # kept for cluster mode, where executors DO honor it (client-mode
         # driver gets the same flag via SPARK_SUBMIT_OPTS above)

@@ -15,14 +15,8 @@ import re
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "pgdedupe_spark"
 
-ALLOWED = {
-    "CPUS",
-    "DRIVER_MEM",
-    "DRIVER_JAVA_OPTS",
-    "SHJ_LOCALMAP_THRESHOLD",
-    "CC_SMALL_EDGES",
-    "PAGERANK_PERSIST",
-}
+# deployment settings only: core count, driver heap, executor JVM flags
+ALLOWED = {"CPUS", "DRIVER_MEM", "DRIVER_JAVA_OPTS"}
 
 _NAME = re.compile(r"SPARK_GRAFT_([A-Z0-9_]+)")
 
