@@ -78,6 +78,12 @@ def fit_centroids(
     if cached:
         iv = iv.persist()
     try:
+        # vectors are fixed-dim by contract: a NULL or ragged vector would
+        # silently drop out of the d=0 divisor group below, so refuse it
+        # (one bounded probe; empty input has nothing to refuse)
+        bad = iv.filter(F.col("_iv").isNull() | (F.size("_iv") != dim))
+        if bad.limit(1).count():
+            raise ValueError(f"every vector must be non-NULL with exactly {dim} dims")
         if init is None:
             seed_rows = iv.orderBy("_id").limit(k).collect()
             if len(seed_rows) < k:
@@ -101,14 +107,11 @@ def fit_centroids(
             # of data volume (measured: wide-agg 0.81-1.93 s vs explode
             # 0.35-1.47 s per round at sf0.1, bit-identical sums — BIGINT
             # addition is order-free). Vectors are fixed-dim by the
-            # operator contract (``dim`` is a required fit parameter);
-            # positions past ``dim`` are filtered exactly like the wide
-            # aggregate ignored them, and ``_n`` (the divisor) comes from
-            # the d=0 group — the per-cluster row count for any input the
-            # wide form did not itself crash on.
+            # operator contract (``dim`` is a required fit parameter,
+            # enforced above), so ``_n`` (the divisor) comes from the d=0
+            # group — the per-cluster row count.
             stats = (
                 assigned.select("cluster", F.posexplode("_iv").alias("_d", "_x"))
-                .filter(F.col("_d") < dim)
                 .groupBy("cluster", "_d")
                 .agg(F.sum("_x").alias("_s"), F.count(F.lit(1)).alias("_n"))
                 .collect()

@@ -15,8 +15,32 @@ Stage map vs the reference (``pgdedupe/run.py`` / ``cli.py``):
      + exact-merge CC relabels                            (exact_matches.py)
 
 Every stage takes/returns DataFrames so each is independently testable
-against a DuckDB oracle. Sequential barriers are only train→block and
-score→cluster, as in the reference (SURVEY §3.1).
+against a DuckDB oracle.
+
+Materialization points. The reference writes each stage to a table, so
+each runs once. Here a stage output is materialized with an eager
+``localCheckpoint`` exactly when more than one downstream query reads it;
+every other hand-off stays lazy. The checkpoint also truncates the
+lineage, so later queries plan against a scan of the stored blocks
+instead of re-analysing the whole pipeline. The four points:
+
+  * ``entries_unique`` — read by blocking, both sides of the pair field
+    attach, the mapping universe, exact-merge pass 1 and the dedupe_id
+    writeback. Mirrors the reference's ``entries_unique`` table
+    (run.py:62-99).
+  * the scored pairs — read by connected components' edge frame and by
+    the HAC join in ``cluster_components``. Transient, like the scores
+    ``matchBlocks`` keeps in memory (run.py:362-379): its blocks are
+    released as soon as ``entity_map`` is materialized.
+  * ``entity_map`` — read by ``mapping`` and written by the CLI. Mirrors
+    the reference's ``entity_map`` table (run.py:383-425).
+  * ``unique_map`` after exact-merge pass 2 — read by ``deduped_source``
+    and written by the CLI. Mirrors the reference's ``unique_map`` table
+    (run.py:471-475, relabelled by pass 2 at run.py:477-483).
+
+``mapping`` (the reference's ``map`` table, run.py:429-446) is read once,
+by the dedupe_id writeback, and stays lazy over the two checkpoints it
+joins.
 """
 
 from __future__ import annotations
@@ -29,7 +53,10 @@ from pyspark.sql import functions as F
 from pgdedupe_spark.config import DedupeConfig
 from pgdedupe_spark.ml import training as T
 from pgdedupe_spark.operators.blocking import blocking_chain, make_block_key_expr
-from pgdedupe_spark.operators.clustering import cluster_components
+from pgdedupe_spark.operators.clustering import (
+    _free_local_checkpoint,
+    cluster_components,
+)
 from pgdedupe_spark.operators.collapse import collapse_exact_duplicates
 from pgdedupe_spark.operators.exact_merge import merge_exact
 from pgdedupe_spark.operators.features import assemble_features
@@ -55,6 +82,13 @@ def default_rules_for(fields: list[str]) -> list[tuple[str, str, tuple]]:
 
 @dataclass
 class PipelineResult:
+    """The pipeline's stage outputs. ``entries_unique``, ``entity_map`` and
+    ``unique_map`` are local checkpoints: each was computed once inside
+    ``run_pipeline`` and is never recomputed from source. ``mapping`` and
+    ``deduped_source`` are lazy joins over those checkpoints. The
+    checkpoint blocks live in executor storage and are released when the
+    result (and every frame derived from it) is dropped."""
+
     entries_unique: DataFrame
     entity_map: DataFrame
     mapping: DataFrame        # reference table: {schema}.map
@@ -62,9 +96,9 @@ class PipelineResult:
     deduped_source: DataFrame  # source table + dedupe_id column
     classifier: object = None  # the fitted classifier (D10 save_model input)
     # the candidate-pair block audit (no silent caps): a
-    # pyspark.sql.Observation whose .get — available after the first
-    # action on any downstream frame — reports entries_dropped /
-    # blocks_seen_max / entries_seen for the max_block_size guard.
+    # pyspark.sql.Observation whose .get reports entries_dropped /
+    # blocks_seen_max / entries_seen for the max_block_size guard; the
+    # scored-pairs checkpoint fills it before run_pipeline returns.
     # None when config.max_block_size is None.
     block_audit: object = None
 
@@ -86,8 +120,7 @@ def run_pipeline(
     # 1. preprocess (run.py:62-99)
     entries_unique = collapse_exact_duplicates(
         source, fields, config.key, config.filter_condition
-    )
-    entries_unique.persist()
+    ).localCheckpoint(eager=True)
 
     # 2. train (run.py:102-183) — driver-side on the labeled JSON, unless a
     # saved model supplies the fit (StaticDedupe, run.py:126-129)
@@ -117,12 +150,15 @@ def run_pipeline(
         smaller, entries_unique, fields, max_block_size=config.max_block_size
     )
     feat, _names = assemble_features(pairs, config.fields, config.interactions)
-    scored = score_pairs(feat, clf, threshold=config.threshold)
+    scored = score_pairs(feat, clf, threshold=config.threshold).localCheckpoint(
+        eager=True
+    )
     entity_map = cluster_components(
         scored,
         threshold=config.threshold,
         max_component_size=config.max_component_size,
-    )
+    ).localCheckpoint(eager=True)
+    _free_local_checkpoint(scored)
 
     # 5./6. write + apply results (run.py:383-491): right-join semantics —
     # every entries_unique row gets a canon_id (itself if unclustered) and a
@@ -166,7 +202,7 @@ def run_pipeline(
         source,
         config.key,
         other_merges,
-    ).withColumnRenamed("cluster", "dedupe_id")
+    ).withColumnRenamed("cluster", "dedupe_id").localCheckpoint(eager=True)
 
     deduped_source = source.join(unique_map2, config.key, "left")
 

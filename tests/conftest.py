@@ -52,8 +52,6 @@ _HEAVY_TIER = (
     "test_pipeline.py::test_quality_hard_cases",
     "test_pipeline.py::test_quality",
     "test_pipeline.py::test_metric_fidelity_parity",
-    "test_cli.py::test_cli_end_to_end",
-    "test_config_parity.py::test_pipeline_surfaces_block_audit",
     # oracle rows whose cost is the DuckDB side (unrolled md5/serve SQL),
     # 50-200 s each; the driver's own correctness gate re-runs these
     "test_oracle.py::test_oracle_match[dedup_minhash_portable]",

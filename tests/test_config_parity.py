@@ -105,7 +105,8 @@ def test_yaml_roundtrip_affine_gap_plus_custom_classifier(spark):
 
 def test_pipeline_surfaces_block_audit(spark):
     """No silent caps end-to-end: run_pipeline exposes the candidate-pair
-    Observation, readable after any downstream action."""
+    Observation, already filled when run_pipeline returns (the scored-pairs
+    checkpoint is the action that runs the candidate pairs)."""
     rows, _truth, _ = generate_population(40, seed=5)
     df = spark.createDataFrame(
         rows,

@@ -59,6 +59,12 @@ def test_kmeans_validation_and_empty_input(spark):
         kmeans_exact(df, "vec_id", "embedding", k=3, init=[[0] * 8])
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert kmeans_exact(empty, "vec_id", "embedding", k=2).count() == 0
+    # a NULL or ragged vector would drop out of the divisor group silently
+    schema = "vec_id long, embedding array<float>, truth int"
+    for bad in ((999, None, 0), (999, [1.0] * 7, 0)):
+        broken = df.unionByName(spark.createDataFrame([bad], schema))
+        with pytest.raises(ValueError, match="exactly 8 dims"):
+            kmeans_exact(broken, "vec_id", "embedding", k=3, dim=8)
 
 
 def test_kmeans_empty_input_keeps_id_type(spark):

@@ -318,3 +318,19 @@ def test_completeness_floor(spark, source):
     split = sum(r["n_identities"] for b, r in rows.items() if b <= 4) / n_total
     assert high >= 0.7, f"identities >=80% complete: {high:.3f} < 0.7"
     assert split <= 0.1, f"split identities (<50%): {split:.3f} > 0.1"
+
+
+def test_stage_outputs_are_checkpointed(spark):
+    """Every multiply-read stage output is computed once: the frames
+    run_pipeline returns plan against the stage checkpoints, so neither
+    the HAC (FlatMapGroupsInPandas) nor the candidate-pair self-join
+    (smaller_ids) is re-planned by a downstream read or write."""
+    rows, _truth, _ = generate_population(30, seed=3)
+    df = spark.createDataFrame(
+        rows, "entry_id long, first_name string, last_name string, ssn string, sex string, dob string"
+    )
+    res = run_pipeline(df, _config(), training_pairs())
+    for name in ("entity_map", "mapping", "unique_map", "deduped_source"):
+        plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan, name
+        assert "smaller_ids" not in plan, name
