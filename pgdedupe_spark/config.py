@@ -47,9 +47,6 @@ class DedupeConfig:
     # the load-bearing skew guard (SCALE.md r9: "AQE skew-join won't save a
     # quadratic block") — caps candidate-pair blocks before the self-join
     max_block_size: int | None = 10000
-    # the giant-component HAC guard (VERDICT r9 #1) — components past this
-    # fall back to CC-label-as-cluster instead of the O(m²) linkage matrix
-    max_component_size: int | None = 10000
 
     @property
     def field_names(self) -> list[str]:
@@ -91,5 +88,4 @@ class DedupeConfig:
             hyperparameters=d.get("hyperparameters", {}),
             seed=d.get("seed", 0),
             max_block_size=d.get("max_block_size", 10000),
-            max_component_size=d.get("max_component_size", 10000),
         )

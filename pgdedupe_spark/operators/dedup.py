@@ -373,10 +373,11 @@ def portable_hash60(*cols: Column) -> Column:
 # (Mersenne prime) keeps A_i * x + B_i < 2^62 — no 64-bit overflow in
 # either engine (Spark ANSI mode would hard-error on one; a modmul
 # workaround needs 128-bit arithmetic Spark lacks). The constants are a
-# fixed LCG sweep so the oracle SQL can carry them as literals.
+# fixed LCG sweep so the oracle SQL can carry them as literals; the tables
+# cover minhash_lsh_pairs' default num_hashes=128.
 MINHASH_P = (1 << 31) - 1
-_CW_A = [((1103515245 * (i + 1) + 12345) % MINHASH_P) or 1 for i in range(64)]
-_CW_B = [(1103515245 * (i + 1000) + 12345) % MINHASH_P for i in range(64)]
+_CW_A = [((1103515245 * (i + 1) + 12345) % MINHASH_P) or 1 for i in range(128)]
+_CW_B = [(1103515245 * (i + 1000) + 12345) % MINHASH_P for i in range(128)]
 
 
 def minhash_signature_cols(shingle_col: str, num_hashes: int) -> list[Column]:
@@ -559,6 +560,8 @@ def _minhash_sig_arrow(sh: DataFrame, num_hashes: int) -> DataFrame:
     import pyarrow as pa
     from pyspark.sql import types as T
 
+    if num_hashes > len(_CW_A):
+        raise ValueError(f"portable minhash supports <= {len(_CW_A)} hashes")
     A = np.asarray(_CW_A[:num_hashes], dtype=np.int64)
     B = np.asarray(_CW_B[:num_hashes], dtype=np.int64)
     out_schema = T.StructType(

@@ -153,11 +153,9 @@ def run_pipeline(
     scored = score_pairs(feat, clf, threshold=config.threshold).localCheckpoint(
         eager=True
     )
-    entity_map = cluster_components(
-        scored,
-        threshold=config.threshold,
-        max_component_size=config.max_component_size,
-    ).localCheckpoint(eager=True)
+    entity_map = cluster_components(scored, threshold=config.threshold).localCheckpoint(
+        eager=True
+    )
     _free_local_checkpoint(scored)
 
     # 5./6. write + apply results (run.py:383-491): right-join semantics —

@@ -1,14 +1,10 @@
-"""D9 giant-component HAC guard (VERDICT r9 #1).
+"""D9 HAC on a giant component (VERDICT r9 #1).
 
-``cluster_components`` must never build the O(m²) linkage matrix for a
-component larger than ``max_component_size`` — a chain of overlapping pairs
-can merge components far past any block cap, and a 50k-member component's
-dense matrix (2.5e9 doubles ≈ 20 GB) OOMs a single executor at 100 TB. The
-guard falls back to CC-label-as-cluster with mean-incident-pair-score
-confidence; these tests pin (a) that the fallback path completes at planted
-50k-chain scale (the matrix path provably cannot on this machine), (b) the
-exact fallback semantics on a hand-checkable component, and (c) that
-sub-cap components are bit-identical with the guard on or off.
+A chain of overlapping pairs can merge components far past any block cap.
+``cluster_components`` runs the same HAC on such a component as on every
+other: its state is sparse, so a 50k-member chain costs O(pairs) memory,
+where a dense linkage matrix (2.5e9 doubles ≈ 20 GB) would OOM an executor.
+This pins that the planted 50k chain completes and gets HAC's clusters.
 """
 
 from __future__ import annotations
@@ -19,71 +15,42 @@ from pyspark.sql import functions as F
 from pgdedupe_spark.operators.clustering import cluster_components
 
 
-def _rows(df):
-    return sorted(
-        (int(r._unique_id), int(r.canon_id), round(float(r.cluster_score), 9))
-        for r in df.collect()
-    )
-
-
 @pytest.mark.slow
 def test_giant_chain_component_falls_back_and_completes(spark):
-    """50,001-member chain = ONE component far past the cap. HAC's dense
-    matrix would need ~20 GB for this group; completing at all (in-memory,
-    seconds) is the bounded-footprint assertion. Semantics: one cluster,
-    canon = min id, score = mean of incident pair scores."""
+    """50,001-member chain = ONE component. The head pair (0, 1) scores 0.7
+    (distance 0.3) and every other link 0.9 (distance 0.1). All 0.1 links
+    tie, so HAC merges (1, 2), (3, 4), ... in id order; each merged pair
+    then sits at an average linkage of 0.55 or more from its neighbours,
+    past the 0.5 cutoff. Result: 25,000 two-member clusters scoring 0.9,
+    and member 0 left unclustered, so it is absent from the entity map."""
     n_edges = 50_000
     edges = spark.range(n_edges).select(
         F.col("id").alias("id1"),
         (F.col("id") + 1).alias("id2"),
-        # head pair gets a distinct score so per-record means are checkable
         F.when(F.col("id") == 0, F.lit(0.7)).otherwise(F.lit(0.9)).alias("score"),
     )
-    out = cluster_components(edges, threshold=0.5, max_component_size=10_000)
-    agg = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("canon_id").alias("n_clusters"),
-        F.min("canon_id").alias("canon"),
+    out = cluster_components(edges, threshold=0.5)
+    sizes = out.groupBy("canon_id").agg(
+        F.count(F.lit(1)).alias("size"),
+        F.min("_unique_id").alias("lo"),
+        F.max("_unique_id").alias("hi"),
+    )
+    agg = sizes.agg(
+        F.count(F.lit(1)).alias("n_clusters"),
+        F.min("size").alias("min_size"),
+        F.max("size").alias("max_size"),
+        F.sum((F.col("canon_id") % 2 == 1).cast("int")).alias("odd_canon"),
+        F.sum((F.col("hi") == F.col("lo") + 1).cast("int")).alias("adjacent"),
     ).collect()[0]
-    assert agg.n == n_edges + 1
-    assert agg.n_clusters == 1
-    assert agg.canon == 0
-    head = {
-        int(r._unique_id): float(r.cluster_score)
-        for r in out.filter(F.col("_unique_id") <= 2).collect()
-    }
-    assert head[0] == pytest.approx(0.7)  # one incident pair (0,1)@0.7
-    assert head[1] == pytest.approx(0.8)  # mean of 0.7 and 0.9
-    assert head[2] == pytest.approx(0.9)  # two incident 0.9 pairs
-
-
-def test_fallback_semantics_small_component(spark):
-    """cap=3 forces the fallback on a 4-member component: one cluster,
-    canon=min, score=mean incident — hand-computed."""
-    edges = spark.createDataFrame(
-        [(10, 11, 0.9), (11, 12, 0.7), (12, 13, 0.5)],
-        "id1 long, id2 long, score double",
-    )
-    out = _rows(cluster_components(edges, threshold=0.4, max_component_size=3))
-    assert out == [
-        (10, 10, 0.9),
-        (11, 10, round((0.9 + 0.7) / 2, 9)),
-        (12, 10, round((0.7 + 0.5) / 2, 9)),
-        (13, 10, 0.5),
-    ]
-
-
-def test_guard_transparent_below_cap(spark):
-    """Components at or below the cap take the HAC path untouched: output
-    with the default guard == output with the guard disabled."""
-    edges = spark.createDataFrame(
-        [
-            (1, 2, 0.95), (2, 3, 0.9), (1, 3, 0.2),   # triangle component
-            (20, 21, 0.8),                              # pair component
-            (30, 31, 0.9), (31, 32, 0.85), (32, 33, 0.6),  # chain of 4
-        ],
-        "id1 long, id2 long, score double",
-    )
-    guarded = _rows(cluster_components(edges, threshold=0.5, max_component_size=10_000))
-    unguarded = _rows(cluster_components(edges, threshold=0.5, max_component_size=None))
-    assert guarded == unguarded and len(guarded) > 0
+    assert agg.n_clusters == 25_000
+    assert agg.min_size == agg.max_size == 2
+    assert agg.odd_canon == 25_000 and agg.adjacent == 25_000
+    stats = out.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("_unique_id").alias("lo"),
+        F.min("cluster_score").alias("smin"),
+        F.max("cluster_score").alias("smax"),
+    ).collect()[0]
+    assert stats.n == n_edges
+    assert stats.lo == 1  # member 0 is unclustered
+    assert stats.smin == pytest.approx(0.9) and stats.smax == pytest.approx(0.9)

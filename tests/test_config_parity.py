@@ -37,26 +37,23 @@ def _yaml_style_dict():
         "classifier": "tests.plugin_classifier.CentroidGapClassifier",
         "hyperparameters": {"scale": 8.0},
         "max_block_size": 123,
-        "max_component_size": 456,
     }
 
 
 def test_from_dict_passes_every_knob():
     cfg = DedupeConfig.from_dict(_yaml_style_dict())
     assert cfg.max_block_size == 123
-    assert cfg.max_component_size == 456
     metrics = {f.field: f.metric for f in cfg.fields}
     assert metrics == {
         "first_name": "affine_gap",
         "last_name": "levenshtein",
         "ssn": "levenshtein",
     }
-    # defaults when the keys are absent
+    # default when the key is absent
     d = _yaml_style_dict()
-    for k in ("max_block_size", "max_component_size"):
-        d.pop(k)
+    d.pop("max_block_size")
     cfg2 = DedupeConfig.from_dict(d)
-    assert cfg2.max_block_size == 10000 and cfg2.max_component_size == 10000
+    assert cfg2.max_block_size == 10000
 
 
 def test_get_classifier_registry_and_dotted_path():

@@ -76,15 +76,13 @@ def test_connected_components_matches_union_find(spark, edges):
 @settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=edges_strategy)
 def test_cc_small_graph_path_matches_distributed(spark, edges):
-    """r12: the size-gated driver union-find (default under 200k edges)
-    must label exactly like the distributed fixpoint loop
-    (small_graph_max_edges=0 forces the distributed path)."""
+    """r12: the size-gated driver union-find (default up to
+    CC_SMALL_GRAPH_MAX_EDGES = 500k edges) must label exactly like the
+    distributed fixpoint loop (return_rounds=True always runs the loop)."""
     df = spark.createDataFrame(edges, "id1 long, id2 long")
     small = {(r.id, r.component) for r in connected_components(df).collect()}
-    dist = {
-        (r.id, r.component)
-        for r in connected_components(df, small_graph_max_edges=0).collect()
-    }
+    labels, _rounds = connected_components(df, return_rounds=True)
+    dist = {(r.id, r.component) for r in labels.collect()}
     assert small == dist
 
 
@@ -183,8 +181,8 @@ def test_ngram_jaccard_both_strategies_match_brute_force(spark, texts):
 
 
 def _ref_hac(ids, dist, cutoff):
-    """The O(n^3) rescan formulation (previous implementation) — kept as the
-    semantic reference for the heap-based merge loop."""
+    """The O(n^3) dense rescan formulation — kept as the semantic reference
+    for the sparse heap-based merge loop."""
     import numpy as np
 
     n = len(ids)
@@ -228,8 +226,12 @@ def _ref_hac(ids, dist, cutoff):
 
 
 hac_strategy = st.lists(
-    st.tuples(st.integers(0, 9), st.integers(0, 9), st.floats(0.0, 1.0))
-    .filter(lambda e: e[0] != e[1]),
+    st.tuples(
+        st.integers(0, 9),
+        st.integers(0, 9),
+        # the two ends get drawn often: 1.0 is the unscored-pair distance
+        st.one_of(st.sampled_from([0.0, 1.0]), st.floats(0.0, 1.0)),
+    ).filter(lambda e: e[0] != e[1]),
     min_size=1,
     max_size=20,
 )
@@ -238,6 +240,9 @@ hac_strategy = st.lists(
 @settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=hac_strategy)
 def test_hac_heap_matches_rescan_reference(edges):
+    """Exact equality (member order and float scores) with the dense
+    reference, including stored distances of exactly 0.0 and 1.0 and the
+    cutoff of 1.0 (threshold 0) at which unscored pairs merge too."""
     import numpy as np
 
     from pgdedupe_spark.operators.clustering import _hac_average_linkage
@@ -246,7 +251,7 @@ def test_hac_heap_matches_rescan_reference(edges):
     for a, b, v in edges:
         dist[(min(a, b), max(a, b))] = round(v, 3)
     ids = np.unique([x for p in dist for x in p])
-    for cutoff in (0.25, 0.5, 0.9):
+    for cutoff in (0.25, 0.5, 0.9, 1.0):
         got = _hac_average_linkage(ids, dist, cutoff)
         want = _ref_hac(ids, dist, cutoff)
         assert got == want, (cutoff, dist)

@@ -400,6 +400,25 @@ def test_portable_minhash_arrow_engine_bit_identical(spark):
     assert len(arrow) == 27
 
 
+def test_portable_minhash_lsh_pairs_at_default_num_hashes(spark):
+    """The public portable path runs at its default ``num_hashes`` (128):
+    the Carter-Wegman tables cover it, two identical documents pair up, and
+    a width past the tables fails on the driver instead of in a worker."""
+    from pgdedupe_spark.operators.dedup import _CW_A, minhash_lsh_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text", portable=True)
+    assert [(r.id1, r.id2, r.jaccard) for r in pairs.collect()] == [(1, 2, 1.0)]
+    with pytest.raises(ValueError, match="portable minhash supports"):
+        minhash_lsh_pairs(
+            docs, "doc_id", "text", num_hashes=len(_CW_A) + 32, portable=True
+        )
+
+
 def test_shingles_arrow_edge_cases_match_jvm(spark):
     """_shingles_arrow edge semantics == char_shingles + size>0 filter:
     NULL text SURVIVES as a one-element [NULL] shingle array (length(NULL)
