@@ -279,21 +279,31 @@ def blocking_map(entries: DataFrame, block_keys: Column, id_col: str = "_unique_
     )
 
 
-def plural_key(bmap: DataFrame, small_threshold: int = 5_000_000) -> DataFrame:
+# plural_key's id-assignment switch: at most this many plural keys take the
+# single-partition row_number path, more take the range-partitioned one
+PLURAL_KEY_SMALL_THRESHOLD = 5_000_000
+
+
+def plural_key(bmap: DataFrame) -> DataFrame:
     """Block keys covering ≥2 records, with a deterministic serial block_id
     [run.py:265-275; A2 + W1]. Ordering by block_key is a total order.
 
     Size-adaptive id assignment (the ngram auto-strategy pattern): the frame
-    is persisted and counted once, then a single-partition ``row_number``
-    when it is dim-sized, else the range-partitioned scale path — at 100 TB
-    the distinct plural keys of a loose predicate can be billions of rows,
-    where a single-partition window sort is the job-killer."""
+    is checkpointed and counted once, then a single-partition
+    ``row_number`` when it has at most :data:`PLURAL_KEY_SMALL_THRESHOLD`
+    rows, else the range-partitioned scale path — at 100 TB the distinct
+    plural keys of a loose predicate can be billions of rows, where a
+    single-partition window sort is the job-killer. A local checkpoint,
+    not ``persist()``: it registers nothing with the CacheManager, so
+    repeated calls in one session leave no cached frame behind."""
     plural = (
         bmap.groupBy("block_key").count().filter(F.col("count") > 1).drop("count")
-    ).persist()
-    if plural.count() <= small_threshold:
+    ).localCheckpoint(eager=True)
+    if plural.count() <= PLURAL_KEY_SMALL_THRESHOLD:
         return add_row_number_id(plural, ["block_key"], id_col="block_id")
-    return add_deterministic_id(plural, ["block_key"], id_col="block_id")
+    return add_deterministic_id(
+        plural, ["block_key"], id_col="block_id", materialize=False
+    )
 
 
 def plural_block(bmap: DataFrame, pkey: DataFrame) -> DataFrame:

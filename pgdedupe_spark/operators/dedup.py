@@ -11,9 +11,11 @@ Scale design:
   are quadratic — `max_posting` caps them (standard df-cut: a shingle shared
   by >p docs carries little signal). This is the *verifier*; at 100 TB you
   front it with MinHash-LSH candidates.
-* MinHash-LSH: k hash functions via xxhash64(seed_i, shingle) (JVM-side,
-  no Python), banded into b buckets → candidates = bucket-join → verified
-  with exact Jaccard. One shuffle per stage; hot buckets handled by AQE.
+* MinHash-LSH: k Carter–Wegman permutations of one md5 base hash per
+  shingle (numpy over Arrow batches; the DuckDB oracles replay the same
+  arithmetic), banded into b buckets → candidates = bucket-join →
+  verified with exact Jaccard. One shuffle per stage; hot buckets
+  handled by AQE.
 * SimHash: 64-bit signature computed JVM-side (xxhash64 per token +
   higher-order bit-majority), candidate pairs via the pigeonhole band join
   (hamming ≤ d ⇒ some ⌈64/(d+1)⌉-bit chunk equal).
@@ -358,17 +360,17 @@ def portable_hash60(*cols: Column) -> Column:
     BIGINT)`` — md5 is bit-identical everywhere, so the value is too.
     This is what makes the hash-bucketed dedup family DRIVER-ORACLE
     checkable (VERDICT r7 Missing #2): Spark's xxhash64 has no DuckDB
-    twin, so the xxhash64 variants could only ever be rows-only. 60
-    bits (not 64) keeps the value non-negative in a signed BIGINT on
-    both engines — no sign-extension disagreement. ~5 interpreted
-    expression nodes per evaluation vs xxhash64's 1: keep xxhash64 for
-    the perf path, this for the portable-correctness twin."""
+    twin. 60 bits (not 64) keeps the value non-negative in a signed
+    BIGINT on both engines — no sign-extension disagreement. MinHash
+    uses it for its band keys (its per-shingle base hash is the same
+    md5 prefix, computed in :func:`_minhash_sig_arrow`); SimHash's
+    ``portable=True`` twin and curation's md5 samplers use it too."""
     return F.conv(
         F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15), 16, 10
     ).cast("long")
 
 
-# Carter-Wegman constants for the PORTABLE minhash family: h_i(x) =
+# Carter-Wegman constants for the minhash family: h_i(x) =
 # (A_i * x + B_i) mod P over a P-reduced md5 base hash. P = 2^31 - 1
 # (Mersenne prime) keeps A_i * x + B_i < 2^62 — no 64-bit overflow in
 # either engine (Spark ANSI mode would hard-error on one; a modmul
@@ -378,94 +380,6 @@ def portable_hash60(*cols: Column) -> Column:
 MINHASH_P = (1 << 31) - 1
 _CW_A = [((1103515245 * (i + 1) + 12345) % MINHASH_P) or 1 for i in range(128)]
 _CW_B = [(1103515245 * (i + 1000) + 12345) % MINHASH_P for i in range(128)]
-
-
-def minhash_signature_cols(shingle_col: str, num_hashes: int) -> list[Column]:
-    """k min-hashes, each min over xxhash64(seed_i, shingle). Pure JVM.
-
-    Deliberately k separate string-hash passes: per-element work inside
-    higher-order functions is INTERPRETED, so what matters is expression
-    NODES per element, not abstract op cost. xxhash64(seed, s) is one
-    native node; the "cheaper" Carter-Wegman variant (one base hash + k
-    affine ``pmod(a*h+b, p)`` permutations over longs) is a 4-node tree
-    per element and measured 10x SLOWER (2 s -> 22 s at sf0.1), barrier or
-    not. Don't relearn this. (The portable md5 family is the one
-    exception — see :func:`minhash_signature_array`.)
-
-    NB: i is bound via a real closure, NOT ``lambda s, i=i:`` — pyspark
-    calls any two-parameter lambda as (element, index), defaults
-    included, so the defaulted form silently replaced the seed with the
-    element position, collapsing all k signature hashes into ONE hash
-    (r8 find; LSH recall degraded from the banded 1-(1-j^(k/b))^b curve
-    toward single-hash ~j)."""
-
-    def _minhash(i: int) -> Column:
-        return F.array_min(
-            F.transform(F.col(shingle_col), lambda s: F.xxhash64(F.lit(i), s))
-        ).alias(f"_mh{i}")
-
-    return [_minhash(i) for i in range(num_hashes)]
-
-
-def minhash_signature_array(
-    shingle_col: str, num_hashes: int, portable: bool = True
-) -> Column:
-    """All k min-hashes in ONE pass: array<long> of running minima folded
-    over the shingles — one array traversal instead of k.
-
-    Portable (default): the base hash (:func:`portable_hash60`, ~6 nodes
-    incl. an md5) is too expensive to pay k times — k separate md5
-    passes measured 174 s at sf0.1, and a projected base-hash column
-    does NOT help because Catalyst's projection collapse inlines it back
-    into every signature expression (no CSE inside higher-order
-    functions; re-measured 106 s). So one ``aggregate`` walks the
-    shingles once, binds the md5 hash ONCE per element via a 1-element
-    inner aggregate, fans it through k Carter-Wegman affine permutations
-    mod 2^31-1 (zip_with over literal constant arrays), and
-    zip_with/least folds the state — ~4.5 s at sf0.1, bit-identical to
-    the k-pass formulation (equality pinned in tests/test_recall.py).
-    DuckDB replicates the same arithmetic. The MinHash pipeline runs the
-    portable family through :func:`_minhash_sig_arrow`; this fold is its
-    bit-parity reference.
-
-    ``portable=False``: the same fold with xxhash64(seed, shingle) —
-    bit-identical values to :func:`minhash_signature_cols` (INT seed
-    literals; pinned) at ~60% of its wall time (2.1 s vs 3.3 s warm at
-    sf0.1, k=64): one traversal amortizes the interpreted HOF overhead
-    the 64 separate array_min passes each pay."""
-    if portable:
-        if num_hashes > len(_CW_A):
-            raise ValueError(f"portable minhash supports <= {len(_CW_A)} hashes")
-        a_arr = F.array(*[F.lit(a).cast("long") for a in _CW_A[:num_hashes]])
-        b_arr = F.array(*[F.lit(b).cast("long") for b in _CW_B[:num_hashes]])
-        init = F.array(*[F.lit(MINHASH_P).cast("long")] * num_hashes)
-
-        def step(acc: Column, s: Column) -> Column:
-            return F.aggregate(
-                F.array(portable_hash60(s) % F.lit(MINHASH_P)),
-                acc,
-                lambda acc2, h: F.zip_with(
-                    acc2,
-                    F.zip_with(
-                        a_arr, b_arr, lambda a, b: (a * h + b) % F.lit(MINHASH_P)
-                    ),
-                    lambda cur, new: F.least(cur, new),
-                ),
-            )
-
-        return F.aggregate(F.col(shingle_col), init, step)
-
-    seeds = F.array(*[F.lit(i) for i in range(num_hashes)])  # INT, like lit(i)
-    init = F.array(*[F.lit((1 << 63) - 1).cast("long")] * num_hashes)
-
-    def xstep(acc: Column, s: Column) -> Column:
-        return F.zip_with(
-            acc,
-            F.transform(seeds, lambda k: F.xxhash64(k, s)),
-            lambda cur, new: F.least(cur, new),
-        )
-
-    return F.aggregate(F.col(shingle_col), init, xstep)
 
 
 def _shingles_arrow(src: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -531,31 +445,27 @@ def _shingles_arrow(src: DataFrame, id_col: str, text_col: str, n: int) -> DataF
 
 
 def _minhash_sig_arrow(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """Arrow-batch twin of the PORTABLE ``minhash_signature_array`` fold
-    (guide §4.2): input ``(_id, _sh array<string>)``, output
-    ``(_id, _mhs array<long>)``. Bit-identical by construction — every
-    step is exact integer arithmetic with no operation-order freedom:
+    """The MinHash signature kernel (guide §4.2): input
+    ``(_id, _sh array<string>)``, output ``(_id, _mhs array<long>)``.
+    Bit-identical to the Spark-expression fold the DuckDB oracles replay
+    (``tests/minhash_reference.py``) by construction — every step is
+    exact integer arithmetic with no operation-order freedom:
 
     * base hash: md5 of the shingle's UTF-8 bytes, first 15 hex digits
       as an integer, mod 2^31−1 — ``hashlib.md5`` and the JVM's md5 are
       the same function of the same bytes;
     * k Carter–Wegman permutations ``(A_k·h + B_k) mod P``: A, h < P <
-      2^31 so the product is < 2^62 — exact in int64 on both engines
-      (the same no-overflow argument the JVM fold documents);
+      2^31 so the product is < 2^62 — exact in int64 on every engine;
     * signature = elementwise min over shingles — order-free, so the
-      vectorized min equals the JVM's sequential ``least`` fold.
+      vectorized min equals the reference's sequential ``least`` fold.
 
-    Why: the JVM fold is interpreted per element — one md5 plus a
-    64-wide zip_with/least per shingle (the docstring above measured it
-    as the single most expensive expression in the dedup family).  Here
-    md5 runs in C (hashlib) and the permutations/minima vectorize in
-    numpy over all shingles of a doc at once.  Parity is pinned in
-    tests/test_recall.py (against the JVM fold on the same frame) and by
-    the dedup_minhash_portable / er_gazetteer_fuzzy full-hash oracles.
-
-    Only the md5 family has this twin: the xxhash64 variant has no
-    bit-identical Python implementation in this environment, so
-    ``portable=False`` always stays on the JVM fold."""
+    Why: a Spark higher-order fold is interpreted per element — one md5
+    plus a k-wide zip_with/least per shingle, the single most expensive
+    expression in the dedup family. Here md5 runs in C (hashlib) and the
+    permutations/minima vectorize in numpy over all shingles of a doc at
+    once. Parity is pinned in tests/test_recall.py (against the
+    reference fold on the same frame) and by the dedup_minhash_portable
+    / er_gazetteer_fuzzy full-hash oracles."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -595,7 +505,7 @@ def _minhash_sig_arrow(sh: DataFrame, num_hashes: int) -> DataFrame:
                     count=len(shingles),
                 )
                 if hs.size == 0:
-                    out[r] = P  # the JVM fold's init array (callers filter
+                    out[r] = P  # the reference fold's init array (callers filter
                     continue  # empty shingle rows out before this stage)
                 sig = np.full(num_hashes, P, dtype=np.int64)
                 # chunk the (shingles × k) candidate matrix so one huge doc
@@ -620,7 +530,6 @@ def _minhash_shingles_and_buckets(
     n: int,
     num_hashes: int,
     bands: int,
-    portable: bool,
     persist: bool = True,
     persist_sh: bool | None = None,
 ):
@@ -630,7 +539,7 @@ def _minhash_shingles_and_buckets(
     persisted index (:func:`write_minhash_index` /
     :func:`minhash_index_append`). One definition site is what makes
     append ≡ rebuild structural: the hash functions are stateless
-    (seeded xxhash64 / Carter-Wegman md5 folds — nothing trained), so
+    (Carter-Wegman permutations of an md5 base hash — nothing trained), so
     the same expressions over the same rows give the same buckets
     whether a row arrives in the initial build or an append.
 
@@ -641,34 +550,18 @@ def _minhash_shingles_and_buckets(
     caller that never re-reads ``sh`` — the scale census, which consumes
     only ``buckets`` — skips caching the heavy shingle arrays while
     keeping the signature/bucket barriers (r12; the sig barrier is still
-    what stops projection collapse re-running the minhash fold per
-    band)."""
+    what runs the signature kernel once)."""
     rows_per_band = num_hashes // bands
     if persist_sh is None:
         persist_sh = persist
-    # One signature kernel per hash family: the PORTABLE md5 family folds
-    # in Arrow (_minhash_sig_arrow); portable=False keeps the JVM
-    # xxhash64 fold — a vectorized-NumPy XXH64 (bit-parity verified)
-    # measured SLOWER end-to-end, since the native xxhash64 node is
-    # already cheap and the Arrow boundary cost exceeded the kernel win
-    # (numbers in OPTIMIZATION_r12.md).
     sh = _shingle_frame(df, id_col, text_col, n)
     if persist_sh:
         sh = _persist(sh)
     # persist the signature frame (tiny: id + k longs) BEFORE deriving
-    # band keys: projection collapse would otherwise inline the whole
-    # one-pass aggregate into every element_at reference below — 2 refs ×
-    # 8 bands re-ran the (md5) fold 16× (120 s at sf0.1; with the barrier
-    # the fold runs once). Both hash families use the same fold shape,
-    # and a MapInArrow node, while opaque to projection collapse, would
-    # still be evaluated once per bucket self-join branch without it.
-    if portable:
-        sig = _minhash_sig_arrow(sh, num_hashes)
-    else:
-        sig = sh.select(
-            "_id",
-            minhash_signature_array("_sh", num_hashes, portable=False).alias("_mhs"),
-        )
+    # band keys: the MapInArrow node is opaque to projection collapse, but
+    # without the barrier it is still evaluated once per bucket self-join
+    # branch.
+    sig = _minhash_sig_arrow(sh, num_hashes)
     # Re-establish the id hash-partitioning of _fan_out: the shingle
     # frame's MapInArrow node reports UNKNOWN output partitioning (even
     # though it moves no rows), so without this the downstream
@@ -687,14 +580,9 @@ def _minhash_shingles_and_buckets(
         [F.element_at("_mhs", b * rows_per_band + r + 1) for r in range(rows_per_band)]
         for b in range(bands)
     ]
-    if portable:
-        band_keys = F.array(
-            *[portable_hash60(F.lit(str(b)), *mh[b]) for b in range(bands)]
-        )
-    else:
-        band_keys = F.array(
-            *[F.xxhash64(F.lit(b), *mh[b]) for b in range(bands)]
-        )
+    band_keys = F.array(
+        *[portable_hash60(F.lit(str(b)), *mh[b]) for b in range(bands)]
+    )
     # persist: the self-join reads `buckets` once per branch, and without
     # a materialization barrier each branch would re-evaluate the k
     # minhash passes — the single most expensive expression in the plan
@@ -714,19 +602,19 @@ def minhash_lsh_pairs(
     bands: int = 32,
     threshold: float = 0.6,
     verify: bool = True,
-    portable: bool = False,
 ) -> DataFrame:
     """Candidate pairs from banded MinHash buckets; optionally verified with
     exact Jaccard (verification joins shingle arrays only for candidates —
     tiny vs the corpus). Probability a true pair at Jaccard j collides:
     1-(1-j^(k/b))^b; defaults catch j≥0.6 with ~99.9%.
 
-    ``portable=True`` routes every hash (per-shingle minhash AND band
-    key) through :func:`portable_hash60` so a DuckDB oracle reproduces
-    the exact candidate set — the driver-checkable twin; xxhash64
-    stays the default perf path."""
+    Every hash derives from md5 — the per-shingle base hash of
+    :func:`_minhash_sig_arrow` and the :func:`portable_hash60` band keys
+    — so a DuckDB oracle reproduces the exact candidate set
+    (the dedup_minhash_portable row). ``num_hashes`` may not exceed the
+    Carter-Wegman tables (``len(_CW_A)``)."""
     sh, buckets = _minhash_shingles_and_buckets(
-        df, id_col, text_col, n, num_hashes, bands, portable
+        df, id_col, text_col, n, num_hashes, bands
     )
     a = buckets.alias("a")
     b_ = buckets.alias("b")
@@ -1059,7 +947,7 @@ def incremental_exact_flags(
 # Persisted MinHash-LSH index: the near-dup tier of write-once/append-many
 # index maintenance (VERDICT r8 #10 — the similarity.index_append story
 # extended to the shingle/minhash family). MinHash's hash functions are
-# stateless (seeded xxhash64 / Carter-Wegman md5 folds — nothing trained),
+# stateless (Carter-Wegman permutations of an md5 base hash — nothing trained),
 # so unlike IVF/PQ appends there is no drift trade-off: an appended batch
 # lands in EXACTLY the buckets a full rebuild would give it, bit-for-bit
 # (pinned in tests/test_lsh_index.py). Standing signatures are NEVER
@@ -1075,7 +963,6 @@ def write_minhash_index(
     n: int = 5,
     num_hashes: int = 128,
     bands: int = 32,
-    portable: bool = False,
 ) -> None:
     """Materialize the banded-bucket layout:
 
@@ -1088,9 +975,12 @@ def write_minhash_index(
                   candidates), so serving never re-shingles the corpus.
     ``/meta``     the writer's (id_col, text_col, n, num_hashes, bands,
                   portable): self-describing, appends recompute NOTHING
-                  from data, only re-derive the stateless hash exprs."""
+                  from data, only re-derive the stateless hash exprs.
+                  ``portable`` is always true: it marks the md5 hash
+                  family, and :func:`_minhash_index_meta` refuses an
+                  index written by the retired xxhash64 family."""
     sh, buckets = _minhash_shingles_and_buckets(
-        docs, id_col, text_col, n, num_hashes, bands, portable, persist=False
+        docs, id_col, text_col, n, num_hashes, bands, persist=False
     )
     # r12 (guide §2.4): the buckets write and the shingles write BOTH
     # consume the shingle frame — unpersisted, the corpus was shingled
@@ -1114,9 +1004,23 @@ def write_minhash_index(
         sh.unpersist()
     local_sidecar_df(
         docs.sparkSession,
-        [(id_col, text_col, int(n), int(num_hashes), int(bands), bool(portable))],
+        [(id_col, text_col, int(n), int(num_hashes), int(bands), True)],
         "id_col string, text_col string, n int, num_hashes int, bands int, portable boolean",
     ).write.mode("overwrite").parquet(path + "/meta")
+
+
+def _minhash_index_meta(spark, path: str):
+    """The ``/meta`` row of a :func:`write_minhash_index` layout. Raises
+    ``ValueError`` when ``portable`` is false: such an index was written
+    by the retired xxhash64 family, so rows hashed now would land in
+    different buckets than the standing ones — rebuild it."""
+    meta = spark.read.parquet(path + "/meta").collect()[0]
+    if not meta.portable:
+        raise ValueError(
+            f"MinHash index at {path} uses the retired xxhash64 hash family "
+            "(meta portable = false); rebuild it with write_minhash_index"
+        )
+    return meta
 
 
 def minhash_index_append(spark, path: str, new_docs: DataFrame) -> None:
@@ -1126,7 +1030,7 @@ def minhash_index_append(spark, path: str, new_docs: DataFrame) -> None:
     partition directories. Ids must be new (caller's contract, same as
     similarity.index_append). append ≡ rebuild bit-for-bit — stateless
     hashes, pinned in tests/test_lsh_index.py."""
-    meta = spark.read.parquet(path + "/meta").collect()[0]
+    meta = _minhash_index_meta(spark, path)
     sh, buckets = _minhash_shingles_and_buckets(
         new_docs,
         str(meta.id_col),
@@ -1134,7 +1038,6 @@ def minhash_index_append(spark, path: str, new_docs: DataFrame) -> None:
         int(meta.n),
         int(meta.num_hashes),
         int(meta.bands),
-        bool(meta.portable),
         persist=False,
     )
     # same two-consumer cache as write_minhash_index (r12): one shingling

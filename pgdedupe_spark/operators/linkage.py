@@ -312,15 +312,17 @@ def gazetteer_fuzzy_match(
     against the persisted shingle sidecar; top-``k`` per batch record
     by (jaccard DESC, gaz_id ASC). Output (batch_id, gaz_id, jaccard,
     rank). Canonical growth reuses :func:`dedup.minhash_index_append`;
-    with ``portable=True`` layouts every value is DuckDB-replicable
-    (the dedup_minhash_portable device), which is what backs the
-    er_gazetteer_fuzzy hash oracle."""
+    every value is DuckDB-replicable (the md5 hash family of the
+    dedup_minhash_portable device), which is what backs the
+    er_gazetteer_fuzzy hash oracle. An index written by the retired
+    xxhash64 family raises ``ValueError``."""
     from pgdedupe_spark.operators.dedup import (
         _explicit_parallelism,
+        _minhash_index_meta,
         _minhash_shingles_and_buckets,
     )
 
-    meta = spark.read.parquet(index_path + "/meta").collect()[0]
+    meta = _minhash_index_meta(spark, index_path)
     id_col = str(meta.id_col)
     bsh, bbk = _minhash_shingles_and_buckets(
         batch.select(F.col(batch_id).alias(id_col), F.col(str(meta.text_col))),
@@ -329,7 +331,6 @@ def gazetteer_fuzzy_match(
         int(meta.n),
         int(meta.num_hashes),
         int(meta.bands),
-        bool(meta.portable),
         persist=False,
     )
     idx_bk = spark.read.parquet(index_path + "/buckets").select(

@@ -1230,8 +1230,13 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
 
 
-@query("dedup_minhash_lsh")  # approximate candidates → exact verify; rows-only
+@query("dedup_minhash_lsh")  # approximate candidates → exact verify
 def dedup_minhash_lsh(spark, sf_dir):
+    """MinHash-LSH near-dup pairs at the 64-hash × 16-band operating
+    point. MinHash has one hash family (md5 base hash, Carter–Wegman
+    permutations), so this row computes exactly the rows of
+    dedup_minhash_portable, which carries the DuckDB oracle; the row
+    keeps its recall and planted-pair pytest coverage."""
     from pgdedupe_spark.operators.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
@@ -1293,26 +1298,23 @@ def dedup_simhash(spark, sf_dir):
 )
 def dedup_minhash_portable(spark, sf_dir):
     """MinHash-LSH near-dup pairs under the PORTABLE 60-bit md5 hash
-    (dedup.portable_hash60, new r8 — VERDICT r7 #4): the exact same
-    shingle → k-minhash → banded-bucket-join → exact-Jaccard-verify
-    pipeline as dedup_minhash_lsh, but every hash is DuckDB-replicable
-    bit-for-bit — converting the dedup family's core from rows-only
-    "trust my pins" into the driver's HARD signal. Hash design: md5
-    runs ONCE per shingle (60-bit value of its first 15 hex digits,
-    reduced mod 2^31-1); the 64 signature hashes are Carter-Wegman
-    affine permutations (A_i·h+B_i mod 2^31-1 — constants are literals
-    in the oracle) folded in ONE aggregate pass so the expensive node
-    isn't paid k times (k md5 passes measured 174 s at sf0.1; this
-    shape ~17 s cold). Band keys md5 the '|'-joined minhash runs —
-    16 bands of 4, the perf twin's exact operating point (2-row bands
-    measured 3.7M false candidates vs 240k; the verify stage, not the
-    hashing, is where a permissive curve bleeds). First driver row
-    scheduled r8."""
+    (dedup.portable_hash60, new r8 — VERDICT r7 #4): the same call as
+    dedup_minhash_lsh, checked by a DuckDB oracle that replays every
+    hash bit-for-bit — the driver's HARD signal for the dedup family's
+    core. Hash design: md5 runs ONCE per shingle (60-bit value of its
+    first 15 hex digits, reduced mod 2^31-1); the 64 signature hashes
+    are Carter-Wegman affine permutations (A_i·h+B_i mod 2^31-1 —
+    constants are literals in the oracle) applied to that one base hash,
+    so the expensive node isn't paid k times (k md5 passes measured
+    174 s at sf0.1). Band keys md5 the '|'-joined minhash runs — 16
+    bands of 4 (2-row bands measured 3.7M false candidates vs 240k; the
+    verify stage, not the hashing, is where a permissive curve bleeds).
+    First driver row scheduled r8."""
     from pgdedupe_spark.operators.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), "doc_id", "text", n=5,
-        num_hashes=64, bands=16, threshold=0.6, portable=True,
+        num_hashes=64, bands=16, threshold=0.6,
     )
 
 
@@ -5192,14 +5194,16 @@ PYTEST_ONLY = frozenset(
         "text_fingerprint",
         "multimodal_binary_stats",
         # demoted in r10 (VERDICT r9 #4): the engine-hash (xxhash64)
-        # minhash/simhash tiers are rows-only BY CONSTRUCTION (signature
-        # space isn't DuckDB-replicable); their portable-hash twins
-        # dedup_minhash_portable / dedup_simhash_portable carry the SAME
-        # algorithms under FULL hash oracles and stay in the rotation —
-        # one per window, so the algorithm family is hash-checked every
-        # round. These two keep planted-pair + twin-equivalence pytest
-        # coverage (tests/test_dedup.py); they are the only PYTEST_ONLY
-        # rows without DuckDB oracles (PYTEST_ONLY_NO_ORACLE below).
+        # simhash tier is rows-only BY CONSTRUCTION (signature space
+        # isn't DuckDB-replicable); dedup_minhash_lsh now computes the
+        # same rows as its twin (MinHash has only the md5 family). The
+        # twins dedup_minhash_portable / dedup_simhash_portable carry
+        # the algorithms under FULL hash oracles and stay in the
+        # rotation — one per window, so the algorithm family is
+        # hash-checked every round. These two keep planted-pair +
+        # twin-equivalence pytest coverage (tests/test_dedup.py); they
+        # are the only PYTEST_ONLY rows without DuckDB oracles
+        # (PYTEST_ONLY_NO_ORACLE below).
         "dedup_minhash_lsh",
         "dedup_simhash",
         # demoted in r8 to make window room for the portable-hash dedup
@@ -5319,8 +5323,9 @@ PYTEST_ONLY = frozenset(
 )
 
 # The documented exceptions to "every PYTEST_ONLY row keeps a DuckDB
-# oracle" (pinned in tests/test_entry_contract.py): engine-hash signature
-# tiers whose outputs aren't SQL-replicable by construction. Each maps to
+# oracle" (pinned in tests/test_entry_contract.py): the engine-hash
+# SimHash tier, whose outputs aren't SQL-replicable by construction, and
+# dedup_minhash_lsh, whose rows are its twin's. Each maps to
 # its portable-hash twin — the SAME algorithm under a FULL hash oracle,
 # which must stay driver-eligible so the family is hash-checked every
 # round; the exception rows themselves keep planted-pair and
@@ -5716,7 +5721,7 @@ def dedup_scale_probe(spark, sf_dir):
         # re-reads (one wasted materialization per tier).
         _, buckets = _minhash_shingles_and_buckets(
             _t(spark, d, "documents"), "doc_id", "text",
-            n=5, num_hashes=64, bands=16, portable=False, persist_sh=False,
+            n=5, num_hashes=64, bands=16, persist_sh=False,
         )
         sizes = (
             buckets.groupBy("_band", "_bkey")
@@ -8556,7 +8561,7 @@ def er_gazetteer_fuzzy(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     path = _serve_index_path(sf_dir, "fgaz")
     write_minhash_index(
-        docs, "doc_id", "text", path, n=5, num_hashes=64, bands=16, portable=True
+        docs, "doc_id", "text", path, n=5, num_hashes=64, bands=16
     )
     batch = docs.filter(F.col("source").isin("src0", "src1")).select(
         (F.col("doc_id") + F.lit(1_000_000)).alias("new_id"),

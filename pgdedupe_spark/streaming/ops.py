@@ -515,8 +515,7 @@ def near_dup_stream(
         spark = batch_df.sparkSession
         id_type = batch_df.schema[id_col].dataType.simpleString()
         sh, buckets = _minhash_shingles_and_buckets(
-            batch_df, id_col, text_col, n, num_hashes, bands,
-            portable=False, persist=False,
+            batch_df, id_col, text_col, n, num_hashes, bands, persist=False,
         )
         # freeze: the streaming source frame is only valid in-batch, and
         # one signature computation feeds the probe join AND two writes

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pgdedupe_spark.operators import blocking
 from pgdedupe_spark.operators.blocking import plural_key
 
 
@@ -22,10 +23,11 @@ def _ids(df):
     return sorted((r.block_key, r.block_id) for r in df.collect())
 
 
-def test_switch_changes_plan_not_answer(spark):
+def test_switch_changes_plan_not_answer(spark, monkeypatch):
     bmap = _bmap(spark)
     small = plural_key(bmap)  # default threshold: row_number path
-    big = plural_key(bmap, small_threshold=3)  # force the scale path
+    monkeypatch.setattr(blocking, "PLURAL_KEY_SMALL_THRESHOLD", 3)
+    big = plural_key(bmap)  # force the scale path
 
     assert _ids(small) == _ids(big)
 
@@ -51,11 +53,12 @@ def test_switch_changes_plan_not_answer(spark):
     assert "rangepartitioning" not in plan_small.lower()
 
 
-def test_scale_path_ids_are_global_rank(spark):
+def test_scale_path_ids_are_global_rank(spark, monkeypatch):
     # ids must equal the global rank by block_key regardless of which
     # physical partition a key landed in
     bmap = _bmap(spark, n_keys=97, rows_per_key=2)
-    out = plural_key(bmap, small_threshold=3)
+    monkeypatch.setattr(blocking, "PLURAL_KEY_SMALL_THRESHOLD", 3)
+    out = plural_key(bmap)
     got = {r.block_key: r.block_id for r in out.collect()}
     want = {k: i + 1 for i, k in enumerate(sorted(got))}
     assert got == want

@@ -265,7 +265,7 @@ def test_gazetteer_fuzzy_match_one_way_and_append(spark, tmp_path):
     )
     path = str(tmp_path / "fgaz")
     write_minhash_index(
-        canon, "ent_id", "text", path, n=5, num_hashes=64, bands=16, portable=True
+        canon, "ent_id", "text", path, n=5, num_hashes=64, bands=16
     )
 
     batch = spark.createDataFrame(

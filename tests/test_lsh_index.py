@@ -203,6 +203,31 @@ def test_minhash_index_band_scan_is_partition_pruned(spark, tmp_path):
     assert scans and any("PartitionFilters: [" in ln and "_band" in ln for ln in scans), plan[:1500]
 
 
+def test_minhash_index_rejects_retired_hash_family(spark, tmp_path):
+    """An index whose /meta says portable = false was bucketed by the
+    retired xxhash64 family: appending to it or matching against it would
+    hash new rows into different buckets, so both readers refuse it."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from pgdedupe_spark.operators.dedup import minhash_index_append, write_minhash_index
+    from pgdedupe_spark.operators.linkage import gazetteer_fuzzy_match
+
+    docs = _mh_docs(spark, range(10))
+    path = str(tmp_path / "mh_retired")
+    write_minhash_index(docs, "doc_id", "body", path, num_hashes=32, bands=8)
+    meta = spark.read.parquet(path + "/meta")
+    assert meta.first().portable is True
+    old = meta.withColumn("portable", F.lit(False)).collect()
+    spark.createDataFrame(old, meta.schema).write.mode("overwrite").parquet(path + "/meta")
+
+    batch = _mh_docs(spark, [100, 101])
+    with pytest.raises(ValueError, match="xxhash64"):
+        minhash_index_append(spark, path, batch)
+    with pytest.raises(ValueError, match="xxhash64"):
+        gazetteer_fuzzy_match(spark, path, batch, "doc_id", threshold=0.6)
+
+
 def test_bucketize_arrow_engine_bit_identical(spark):
     """_bucketize (numpy over Arrow batches) must reproduce the generated-
     SQL sign-pattern fold bit-for-bit — integer-scaled planes over

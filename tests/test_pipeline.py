@@ -324,12 +324,17 @@ def test_stage_outputs_are_checkpointed(spark):
     """Every multiply-read stage output is computed once: the frames
     run_pipeline returns plan against the stage checkpoints, so neither
     the HAC (FlatMapGroupsInPandas) nor the candidate-pair self-join
-    (smaller_ids) is re-planned by a downstream read or write."""
+    (smaller_ids) is re-planned by a downstream read or write. The stages
+    checkpoint rather than persist, so a run leaves no frame registered
+    in the CacheManager (a leaked persist grows it by one per call)."""
     rows, _truth, _ = generate_population(30, seed=3)
     df = spark.createDataFrame(
         rows, "entry_id long, first_name string, last_name string, ssn string, sex string, dob string"
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.cachedData().size()
     res = run_pipeline(df, _config(), training_pairs())
+    assert cache.cachedData().size() == cached_before
     for name in ("entity_map", "mapping", "unique_map", "deduped_source"):
         plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan, name

@@ -307,27 +307,23 @@ def test_ivf_cell_skew_bounded_on_clustered_mixture(spark, tmp_path):
 
 
 def test_minhash_signatures_are_distinct_per_seed(spark):
-    """r8 regression pin for the defaulted-lambda seed bug: pyspark calls
-    any two-parameter lambda as (element, index) — defaults included —
-    so `lambda s, i=i: xxhash64(lit(i), s)` silently hashed with the
-    ELEMENT POSITION as seed, making all k signature columns one
-    identical hash and collapsing the banded LSH curve toward single-hash
-    recall. The k columns must be genuinely distinct hash functions."""
-    from pgdedupe_spark.operators.dedup import char_shingles, minhash_signature_cols
-    from pyspark.sql import functions as F
+    """r8 regression pin for the collapsed-seed bug: a signature whose k
+    hash functions are one and the same hash (the r8 defaulted-lambda
+    seed bug did exactly that) collapses the banded LSH curve toward
+    single-hash recall. The k signature values of a document must come
+    from genuinely distinct hash functions."""
+    from pgdedupe_spark.operators.dedup import _minhash_sig_arrow, _shingle_frame
 
     df = spark.createDataFrame(
         [(i, f"some text body number {i} with shared tokens") for i in range(20)],
         "doc_id long, text string",
     )
-    sh = df.select(
-        F.col("doc_id"), char_shingles(F.col("text"), 5).alias("_sh")
-    )
-    sig = sh.select("doc_id", *minhash_signature_cols("_sh", 8)).collect()
-    # across 20 docs and 8 seeds, at least one doc must have differing
-    # signature values between seeds (all-equal == the bug)
-    distinct_per_doc = [len({r[f"_mh{i}"] for i in range(8)}) for r in sig]
-    assert max(distinct_per_doc) > 1, "all minhash seeds produced one hash — seed bug is back"
+    sig = _minhash_sig_arrow(_shingle_frame(df, "doc_id", "text", 5), 8).collect()
+    assert len(sig) == 20
+    # every doc has many shingles, so k independent permutations give k
+    # (almost surely) different minima; one repeated hash gives one value
+    distinct_per_doc = [len(set(r["_mhs"])) for r in sig]
+    assert min(distinct_per_doc) > 1, "all minhash seeds produced one hash — seed bug is back"
 
 
 def test_portable_minhash_matches_kpass_formulation(spark):
@@ -335,10 +331,10 @@ def test_portable_minhash_matches_kpass_formulation(spark):
     bit-identical to the naive k-pass Carter-Wegman formulation — the
     fold is an optimization, not a semantics change."""
     from pgdedupe_spark.operators.dedup import (
-        MINHASH_P, _CW_A, _CW_B, char_shingles,
-        minhash_signature_array, portable_hash60,
+        MINHASH_P, _CW_A, _CW_B, char_shingles, portable_hash60,
     )
     from pyspark.sql import functions as F
+    from tests.minhash_reference import minhash_signature_array
 
     df = spark.createDataFrame(
         [(i, f"text number {i} sharing quite a few character shingles") for i in range(30)],
@@ -372,16 +368,13 @@ def test_portable_minhash_matches_kpass_formulation(spark):
 
 def test_portable_minhash_arrow_engine_bit_identical(spark):
     """The Arrow signature kernel (_minhash_sig_arrow) must produce
-    bit-identical PORTABLE signatures to the JVM fold
-    (minhash_signature_array) on the same shingle frame, so the kernel
+    bit-identical signatures to the JVM reference fold
+    (tests/minhash_reference.py) on the same shingle frame, so the kernel
     can never change a declared query's rows. Covers unicode (multi-byte
     UTF-8 hash input), single-shingle docs, and the full 64-hash width
     the registry rows use."""
-    from pgdedupe_spark.operators.dedup import (
-        _minhash_sig_arrow,
-        _shingle_frame,
-        minhash_signature_array,
-    )
+    from pgdedupe_spark.operators.dedup import _minhash_sig_arrow, _shingle_frame
+    from tests.minhash_reference import minhash_signature_array
 
     df = spark.createDataFrame(
         [(i, f"döc texte numéro {i} — shared shingle soup") for i in range(25)]
@@ -393,7 +386,7 @@ def test_portable_minhash_arrow_engine_bit_identical(spark):
     jvm = {
         (r["_id"], tuple(r["_mhs"]))
         for r in sh.select(
-            "_id", minhash_signature_array("_sh", 64, portable=True).alias("_mhs")
+            "_id", minhash_signature_array("_sh", 64).alias("_mhs")
         ).collect()
     }
     assert arrow == jvm
@@ -401,7 +394,7 @@ def test_portable_minhash_arrow_engine_bit_identical(spark):
 
 
 def test_portable_minhash_lsh_pairs_at_default_num_hashes(spark):
-    """The public portable path runs at its default ``num_hashes`` (128):
+    """minhash_lsh_pairs runs at its default ``num_hashes`` (128):
     the Carter-Wegman tables cover it, two identical documents pair up, and
     a width past the tables fails on the driver instead of in a worker."""
     from pgdedupe_spark.operators.dedup import _CW_A, minhash_lsh_pairs
@@ -411,12 +404,10 @@ def test_portable_minhash_lsh_pairs_at_default_num_hashes(spark):
          (2, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    pairs = minhash_lsh_pairs(docs, "doc_id", "text", portable=True)
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text")
     assert [(r.id1, r.id2, r.jaccard) for r in pairs.collect()] == [(1, 2, 1.0)]
     with pytest.raises(ValueError, match="portable minhash supports"):
-        minhash_lsh_pairs(
-            docs, "doc_id", "text", num_hashes=len(_CW_A) + 32, portable=True
-        )
+        minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=len(_CW_A) + 32)
 
 
 def test_shingles_arrow_edge_cases_match_jvm(spark):
@@ -462,7 +453,7 @@ def test_shingles_arrow_edge_cases_match_jvm(spark):
 
 def test_portable_minhash_pair_recall(spark):
     """The portable (md5/Carter-Wegman) twin runs the same 64×16 banding
-    curve as the xxhash64 path, so it owes the same recall contract
+    curve as dedup_minhash_lsh, so it owes the same recall contract
     against exact n-gram Jaccard."""
     exact = _pairs(registry.QUERIES["dedup_ngram_jaccard"](spark, SF_DIR), "id1", "id2")
     approx = _pairs(
