@@ -141,13 +141,7 @@ def main(argv: list[str] | None = None) -> int:
             block_rules = learn_blocking_rules(
                 spark, training, config.field_names, recall=config.recall
             )
-        result = run_pipeline(
-            source,
-            config,
-            training,
-            block_rules=block_rules,
-            learn_rules=args.learn_rules and block_rules is None,
-        )
+        result = run_pipeline(source, config, training, block_rules=block_rules)
         if args.save_model:
             # reference run.py:180-181 — write the settings file after train
             from pgdedupe_spark.ml.persistence import save_model

@@ -14,8 +14,12 @@ Scale design:
 * MinHash-LSH: k Carter–Wegman permutations of one md5 base hash per
   shingle (numpy over Arrow batches; the DuckDB oracles replay the same
   arithmetic), banded into b buckets → candidates = bucket-join →
-  verified with exact Jaccard. One shuffle per stage; hot buckets
-  handled by AQE.
+  verified with exact Jaccard. One candidate join (`_lsh_candidates`)
+  and one verify (`_jaccard_verify`) serve every consumer: in-memory
+  pairs, the persisted index (serve and probe), the near-dup stream
+  (streaming/ops.py), and — verify only — the fuzzy gazetteer
+  (linkage.py) and exact incremental dedup. One shuffle per stage; hot
+  buckets handled by AQE.
 * SimHash: 64-bit signature computed JVM-side (xxhash64 per token +
   higher-order bit-majority), candidate pairs via the pigeonhole band join
   (hamming ≤ d ⇒ some ⌈64/(d+1)⌉-bit chunk equal).
@@ -332,7 +336,7 @@ def _ngram_docs_and_candidates(
                >= alpha_join),
         )
         .select(F.col("a._id").alias("id1"), F.col("b._id").alias("id2"))
-        # r12 (guide §2.5, the minhash_pairs_from_index pattern): an
+        # r12 (guide §2.5, the _lsh_candidates pattern): an
         # explicit-count repartition + dropDuplicates instead of
         # `.distinct()` — AQE coalesced the tiny pair shuffle to 1-2
         # partitions, under-parallelizing the verify stage downstream.
@@ -531,31 +535,26 @@ def _minhash_shingles_and_buckets(
     num_hashes: int,
     bands: int,
     persist: bool = True,
-    persist_sh: bool | None = None,
 ):
     """(sh, buckets): the per-doc shingle frame and the exploded
     (_id, _band, _bkey) banded-bucket frame — the shared computation
-    behind the in-memory pair join (:func:`minhash_lsh_pairs`) AND the
+    behind the in-memory pair join (:func:`minhash_lsh_pairs`), the
     persisted index (:func:`write_minhash_index` /
-    :func:`minhash_index_append`). One definition site is what makes
-    append ≡ rebuild structural: the hash functions are stateless
-    (Carter-Wegman permutations of an md5 base hash — nothing trained), so
-    the same expressions over the same rows give the same buckets
-    whether a row arrives in the initial build or an append.
+    :func:`minhash_index_append`), the near-dup stream and the fuzzy
+    gazetteer. One definition site is what makes append ≡ rebuild
+    structural: the hash functions are stateless (Carter-Wegman
+    permutations of an md5 base hash — nothing trained), so the same
+    expressions over the same rows give the same buckets whether a row
+    arrives in the initial build or an append.
 
-    ``persist=True`` installs the two materialization barriers the
-    in-memory join needs (see the inline notes); index writers pass
-    False — the parquet write IS their barrier. ``persist_sh`` overrides
-    the shingle-frame persist alone (default: follow ``persist``): a
-    caller that never re-reads ``sh`` — the scale census, which consumes
-    only ``buckets`` — skips caching the heavy shingle arrays while
-    keeping the signature/bucket barriers (r12; the sig barrier is still
-    what runs the signature kernel once)."""
+    ``persist=True`` installs the three materialization barriers the
+    in-memory join needs (see the inline notes). Every other caller
+    passes False and installs its own barrier: the index writers' parquet
+    writes, the stream's local checkpoints, the scale census's persist of
+    the one bucket frame it reads."""
     rows_per_band = num_hashes // bands
-    if persist_sh is None:
-        persist_sh = persist
     sh = _shingle_frame(df, id_col, text_col, n)
-    if persist_sh:
+    if persist:
         sh = _persist(sh)
     # persist the signature frame (tiny: id + k longs) BEFORE deriving
     # band keys: the MapInArrow node is opaque to projection collapse, but
@@ -593,6 +592,84 @@ def _minhash_shingles_and_buckets(
     return sh, buckets
 
 
+def _lsh_candidates(buckets: DataFrame, probe: DataFrame | None = None) -> DataFrame:
+    """Distinct (id1 < id2) candidate pairs of an (_id, _band, _bkey)
+    bucket frame: the banded-bucket equi-join every MinHash consumer
+    shares (in-memory pairs, index serve and probe, the near-dup stream,
+    the scale census).
+
+    ``probe=None``: the bucket self-join, each pair once via ``a < b``.
+    ``probe=<frame with an _id column>``: only pairs with at least one
+    side in ``probe`` — the probe's bucket rows (a semi-join, so the
+    probe carries ids only) joined against every bucket row with ``!=``
+    and normalized by least/greatest, so a pair with both sides in the
+    probe still emits once.
+
+    The pair dedup is an explicit-count repartition on BOTH pair columns
+    plus dropDuplicates, not ``.distinct()``: the distinct's
+    ENSURE_REQUIREMENTS exchange is tiny (two longs a row), so AQE
+    coalesced it to 1-2 partitions and the Jaccard verify downstream ran
+    nearly single-threaded (r12). The explicit count is not
+    AQE-coalescible, and the full pair key spreads evenly."""
+    a = buckets.alias("a")
+    if probe is None:
+        b = buckets.alias("b")
+        same_pair = F.col("a._id") < F.col("b._id")
+        ids = [F.col("a._id").alias("id1"), F.col("b._id").alias("id2")]
+    else:
+        b = buckets.join(probe.select("_id").distinct(), "_id", "semi").alias("b")
+        same_pair = F.col("a._id") != F.col("b._id")
+        ids = [
+            F.least("a._id", "b._id").alias("id1"),
+            F.greatest("a._id", "b._id").alias("id2"),
+        ]
+    return (
+        a.join(
+            b,
+            (F.col("a._band") == F.col("b._band"))
+            & (F.col("a._bkey") == F.col("b._bkey"))
+            & same_pair,
+        )
+        .select(*ids)
+        .repartition(
+            _explicit_parallelism(buckets.sparkSession), F.col("id1"), F.col("id2")
+        )
+        .dropDuplicates(["id1", "id2"])
+    )
+
+
+def _jaccard_verify(
+    cands: DataFrame, left_sh: DataFrame, right_sh: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs against materialized shingle
+    arrays: ``cands`` holds two id columns (k1, k2), ``left_sh`` and
+    ``right_sh`` are (_id, _sh) frames for the k1 and k2 sides (the same
+    frame for a self-join). Returns (k1, k2, jaccard) for pairs at
+    ``jaccard >= threshold``.
+
+    Verifying against the shingle arrays a caller already holds (a
+    persisted frame, an index layer) computes each doc's array once: a
+    candidate set of C pairs would otherwise re-shingle 2C texts (the
+    earlier join-raw-text formulation paid ~29 µs/pair shingling at
+    sf0.1: the 240k-candidate verify was ~8 s of shingle RECOMPUTES and
+    fell to ~2 s with the reuse)."""
+    k1, k2 = cands.columns
+    t1 = left_sh.select(F.col("_id").alias(k1), F.col("_sh").alias("_sh1"))
+    t2 = right_sh.select(F.col("_id").alias(k2), F.col("_sh").alias("_sh2"))
+    return (
+        cands.join(t1, k1)
+        .join(t2, k2)
+        .withColumn("_common", F.size(F.array_intersect("_sh1", "_sh2")))
+        .withColumn(
+            "jaccard",
+            F.col("_common")
+            / (F.size("_sh1") + F.size("_sh2") - F.col("_common")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(k1, k2, "jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -601,12 +678,13 @@ def minhash_lsh_pairs(
     num_hashes: int = 128,
     bands: int = 32,
     threshold: float = 0.6,
-    verify: bool = True,
 ) -> DataFrame:
-    """Candidate pairs from banded MinHash buckets; optionally verified with
-    exact Jaccard (verification joins shingle arrays only for candidates —
-    tiny vs the corpus). Probability a true pair at Jaccard j collides:
-    1-(1-j^(k/b))^b; defaults catch j≥0.6 with ~99.9%.
+    """Near-dup pairs (id1 < id2, jaccard >= threshold): candidates from
+    banded MinHash buckets (:func:`_lsh_candidates`), verified with exact
+    Jaccard against the persisted per-doc shingle arrays
+    (:func:`_jaccard_verify` — the verify joins shingle arrays only for
+    candidates, tiny vs the corpus). Probability a true pair at Jaccard
+    j collides: 1-(1-j^(k/b))^b; defaults catch j≥0.6 with ~99.9%.
 
     Every hash derives from md5 — the per-shingle base hash of
     :func:`_minhash_sig_arrow` and the :func:`portable_hash60` band keys
@@ -616,48 +694,7 @@ def minhash_lsh_pairs(
     sh, buckets = _minhash_shingles_and_buckets(
         df, id_col, text_col, n, num_hashes, bands
     )
-    a = buckets.alias("a")
-    b_ = buckets.alias("b")
-    cands = (
-        a.join(
-            b_,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._bkey") == F.col("b._bkey"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id1"), F.col("b._id").alias("id2"))
-        # r13 (ADVICE r12): the same AQE tiny-shuffle-coalesce hazard the
-        # r12 fixes addressed at four sibling sites — an explicit-count
-        # repartition on BOTH pair columns + dropDuplicates keeps the
-        # array_intersect verify stage below at full parallelism.
-        .repartition(
-            _explicit_parallelism(df.sparkSession), F.col("id1"), F.col("id2")
-        )
-        .dropDuplicates(["id1", "id2"])
-    )
-    if not verify:
-        return cands
-    # Verify against the MATERIALIZED per-doc shingle arrays: `sh` is
-    # persisted, so each doc's array is computed once — a candidate set
-    # of C pairs would otherwise re-shingle 2C texts (the earlier
-    # join-raw-text formulation paid ~29 µs/pair shingling at sf0.1:
-    # the 240k-candidate verify was ~8 s of shingle RECOMPUTES and fell
-    # to ~2 s with the reuse). Memory: one shingle array per doc — the
-    # same linear state the candidate stage already materialized.
-    t1 = sh.select(F.col("_id").alias("id1"), F.col("_sh").alias("_sh1"))
-    t2 = sh.select(F.col("_id").alias("id2"), F.col("_sh").alias("_sh2"))
-    return (
-        cands.join(t1, "id1")
-        .join(t2, "id2")
-        .withColumn("_common", F.size(F.array_intersect("_sh1", "_sh2")))
-        .withColumn(
-            "jaccard",
-            F.col("_common")
-            / (F.size("_sh1") + F.size("_sh2") - F.col("_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    return _jaccard_verify(_lsh_candidates(buckets), sh, sh, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -834,8 +871,8 @@ def incremental_jaccard_pairs(
     Plan: shingle both sides (corpus side reusable via `corpus_shingles`),
     explode to inverted postings, equi-join new postings against corpus
     postings with the Jaccard length filter (t*|A| <= |B| <= |A|/t) inside
-    the join condition, pair-distinct, then verify with array_intersect
-    only on candidates. New-within-new duplicates are the batch operator's
+    the join condition, pair-distinct, then verify only the candidates
+    (:func:`_jaccard_verify`). New-within-new duplicates are the batch operator's
     job (`ngram_jaccard_pairs`); this op is deliberately cross-set only.
     """
     t = float(threshold)
@@ -870,18 +907,7 @@ def incremental_jaccard_pairs(
         )
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    v_new = n_sh.select(F.col("_id").alias("new_id"), F.col("_sh").alias("_sh1"),
-                        F.col("_sz").alias("_sz1"))
-    v_cor = c_sh.select(F.col("_id").alias("corpus_id"), F.col("_sh").alias("_sh2"),
-                        F.col("_sz").alias("_sz2"))
-    return (
-        cands.join(v_new, "new_id")
-        .join(v_cor, "corpus_id")
-        .withColumn("_common", F.size(F.array_intersect("_sh1", "_sh2")))
-        .withColumn("jaccard", F.col("_common") / (F.col("_sz1") + F.col("_sz2") - F.col("_common")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
-    )
+    return _jaccard_verify(cands, n_sh, c_sh, threshold)
 
 
 def incremental_exact_flags(
@@ -955,6 +981,45 @@ def incremental_exact_flags(
 # ---------------------------------------------------------------------------
 
 
+def _write_minhash_layers(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    path: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    mode: str,
+) -> None:
+    """Write ``docs``' ``/buckets`` and ``/shingles`` layers under
+    ``path`` with save mode ``mode`` ("overwrite" builds, "append"
+    appends) — the one layer writer behind :func:`write_minhash_index`
+    and :func:`minhash_index_append`."""
+    sh, buckets = _minhash_shingles_and_buckets(
+        docs, id_col, text_col, n, num_hashes, bands, persist=False
+    )
+    # r12 (guide §2.4): the buckets write and the shingles write BOTH
+    # consume the shingle frame — unpersisted, the batch was shingled
+    # twice per write. One cache scoped to the two writes (the writes are
+    # the actions; unpersist after both is safe) halves the shingling
+    # work; the parquet writes stay the materialization barriers the
+    # index layout relies on.
+    sh = sh.persist()
+    try:
+        (
+            buckets.withColumnRenamed("_id", id_col)
+            .repartition("_band")
+            .write.partitionBy("_band")
+            .mode(mode)
+            .parquet(path + "/buckets")
+        )
+        sh.withColumnRenamed("_id", id_col).write.mode(mode).parquet(
+            path + "/shingles"
+        )
+    finally:
+        sh.unpersist()
+
+
 def write_minhash_index(
     docs: DataFrame,
     id_col: str,
@@ -979,29 +1044,9 @@ def write_minhash_index(
                   ``portable`` is always true: it marks the md5 hash
                   family, and :func:`_minhash_index_meta` refuses an
                   index written by the retired xxhash64 family."""
-    sh, buckets = _minhash_shingles_and_buckets(
-        docs, id_col, text_col, n, num_hashes, bands, persist=False
+    _write_minhash_layers(
+        docs, id_col, text_col, path, n, num_hashes, bands, "overwrite"
     )
-    # r12 (guide §2.4): the buckets write and the shingles write BOTH
-    # consume the shingle frame — unpersisted, the corpus was shingled
-    # twice per index write. One cache scoped to the two writes (the
-    # writes are the actions; unpersist after both is safe) halves the
-    # shingling work; the parquet writes stay the materialization
-    # barriers the index layout relies on.
-    sh = sh.persist()
-    try:
-        (
-            buckets.withColumnRenamed("_id", id_col)
-            .repartition("_band")
-            .write.partitionBy("_band")
-            .mode("overwrite")
-            .parquet(path + "/buckets")
-        )
-        sh.withColumnRenamed("_id", id_col).write.mode("overwrite").parquet(
-            path + "/shingles"
-        )
-    finally:
-        sh.unpersist()
     local_sidecar_df(
         docs.sparkSession,
         [(id_col, text_col, int(n), int(num_hashes), int(bands), True)],
@@ -1027,48 +1072,35 @@ def minhash_index_append(spark, path: str, new_docs: DataFrame) -> None:
     """Append a batch to a :func:`write_minhash_index` layout WITHOUT
     recomputing standing signatures: one scan of the batch through the
     writer's recorded parameters, ``mode("append")`` into the same
-    partition directories. Ids must be new (caller's contract, same as
-    similarity.index_append). append ≡ rebuild bit-for-bit — stateless
-    hashes, pinned in tests/test_lsh_index.py."""
+    partition directories (the same layer writer as the build). Ids must
+    be new (caller's contract, same as similarity.index_append). append ≡
+    rebuild bit-for-bit — stateless hashes, pinned in
+    tests/test_lsh_index.py."""
     meta = _minhash_index_meta(spark, path)
-    sh, buckets = _minhash_shingles_and_buckets(
+    _write_minhash_layers(
         new_docs,
         str(meta.id_col),
         str(meta.text_col),
+        path,
         int(meta.n),
         int(meta.num_hashes),
         int(meta.bands),
-        persist=False,
+        "append",
     )
-    # same two-consumer cache as write_minhash_index (r12): one shingling
-    # pass per appended batch, not two
-    sh = sh.persist()
-    try:
-        (
-            buckets.withColumnRenamed("_id", str(meta.id_col))
-            .repartition("_band")
-            .write.partitionBy("_band")
-            .mode("append")
-            .parquet(path + "/buckets")
-        )
-        sh.withColumnRenamed("_id", str(meta.id_col)).write.mode("append").parquet(
-            path + "/shingles"
-        )
-    finally:
-        sh.unpersist()
 
 
 def minhash_pairs_from_index(
     spark,
     path: str,
     threshold: float = 0.6,
-    verify: bool = True,
     probe: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate/verified near-dup pairs served from the persisted layout
-    — zero signature computation at query time (the buckets ARE the
-    signatures' banded projection; verify reads the persisted shingle
-    arrays).
+    """Verified near-dup pairs (id1 < id2, jaccard >= threshold) served
+    from the persisted layout — zero signature computation at query time
+    (the buckets ARE the signatures' banded projection; verify reads the
+    persisted shingle arrays). Same candidate join
+    (:func:`_lsh_candidates`) and verify (:func:`_jaccard_verify`) as
+    :func:`minhash_lsh_pairs`.
 
     ``probe=None``: all pairs — the bucket self-join, identical output
     to :func:`minhash_lsh_pairs` over the same corpus (pinned).
@@ -1079,62 +1111,8 @@ def minhash_pairs_from_index(
     batch-internal pairs emit once."""
     meta = spark.read.parquet(path + "/meta").collect()[0]
     id_col = str(meta.id_col)
-    buckets = spark.read.parquet(path + "/buckets")
-    a = buckets.withColumnRenamed(id_col, "_ida").alias("a")
-
-    # r12 (guide §2.5): dedup the pair set via an EXPLICIT-count
-    # repartition on id1 + dropDuplicates instead of `.distinct()` — the
-    # distinct's ENSURE_REQUIREMENTS exchange is tiny (two longs/row), so
-    # AQE coalesced it to 1-2 partitions and the Jaccard-verify stage
-    # below (the expensive per-row work) ran nearly single-threaded.
-    # id1-hash-partitioning satisfies the pair dedup's clustering
-    # requirement, and the explicit count (defaultParallelism, the
-    # _fan_out discipline) is not AQE-coalescible.
-    def _dedup_pairs(pairs: DataFrame) -> DataFrame:
-        return pairs.repartition(
-            _explicit_parallelism(spark), F.col("id1")
-        ).dropDuplicates(["id1", "id2"])
-
-    if probe is None:
-        b = buckets.withColumnRenamed(id_col, "_idb").alias("b")
-        cands = _dedup_pairs(
-            a.join(
-                b,
-                (F.col("a._band") == F.col("b._band"))
-                & (F.col("a._bkey") == F.col("b._bkey"))
-                & (F.col("_ida") < F.col("_idb")),
-            )
-            .select(F.col("_ida").alias("id1"), F.col("_idb").alias("id2"))
-        )
-    else:
-        pb = buckets.join(
-            probe.select(F.col(id_col)).distinct(), id_col, "semi"
-        ).withColumnRenamed(id_col, "_idb").alias("b")
-        cands = _dedup_pairs(
-            a.join(
-                pb,
-                (F.col("a._band") == F.col("b._band"))
-                & (F.col("a._bkey") == F.col("b._bkey"))
-                & (F.col("_ida") != F.col("_idb")),
-            )
-            .select(
-                F.least("_ida", "_idb").alias("id1"),
-                F.greatest("_ida", "_idb").alias("id2"),
-            )
-        )
-    if not verify:
-        return cands
-    sh = spark.read.parquet(path + "/shingles")
-    t1 = sh.select(F.col(id_col).alias("id1"), F.col("_sh").alias("_sh1"))
-    t2 = sh.select(F.col(id_col).alias("id2"), F.col("_sh").alias("_sh2"))
-    return (
-        cands.join(t1, "id1")
-        .join(t2, "id2")
-        .withColumn("_common", F.size(F.array_intersect("_sh1", "_sh2")))
-        .withColumn(
-            "jaccard",
-            F.col("_common") / (F.size("_sh1") + F.size("_sh2") - F.col("_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    buckets = spark.read.parquet(path + "/buckets").withColumnRenamed(id_col, "_id")
+    if probe is not None:
+        probe = probe.select(F.col(id_col).alias("_id"))
+    sh = spark.read.parquet(path + "/shingles").withColumnRenamed(id_col, "_id")
+    return _jaccard_verify(_lsh_candidates(buckets, probe), sh, sh, threshold)

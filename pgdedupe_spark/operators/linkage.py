@@ -308,8 +308,11 @@ def gazetteer_fuzzy_match(
     RECORDED parameters (stateless hashes — the same expressions the
     writer used), so batch ids live in their own space and the index
     never re-computes. Candidates = batch buckets ⋈ index buckets on
-    (band, bucket-key) — never all-pairs; verify = exact Jaccard
-    against the persisted shingle sidecar; top-``k`` per batch record
+    (band, bucket-key) — never all-pairs; this one-way join stays its own
+    (not ``dedup._lsh_candidates``) because batch and index ids are two
+    id spaces and its batch-id exchange also serves the rank window.
+    Verify = ``dedup._jaccard_verify`` against the persisted shingle
+    sidecar, the dedup family's one exact Jaccard; top-``k`` per batch record
     by (jaccard DESC, gaz_id ASC). Output (batch_id, gaz_id, jaccard,
     rank). Canonical growth reuses :func:`dedup.minhash_index_append`;
     every value is DuckDB-replicable (the md5 hash family of the
@@ -318,6 +321,7 @@ def gazetteer_fuzzy_match(
     xxhash64 family raises ``ValueError``."""
     from pgdedupe_spark.operators.dedup import (
         _explicit_parallelism,
+        _jaccard_verify,
         _minhash_index_meta,
         _minhash_shingles_and_buckets,
     )
@@ -353,19 +357,10 @@ def gazetteer_fuzzy_match(
         .repartition(_explicit_parallelism(spark), F.col(batch_id))
         .dropDuplicates([batch_id, "gaz_id"])
     )
-    idx_sh = spark.read.parquet(index_path + "/shingles").select(
-        F.col(id_col).alias("gaz_id"), F.col("_sh").alias("_sh2")
+    idx_sh = spark.read.parquet(index_path + "/shingles").withColumnRenamed(
+        id_col, "_id"
     )
-    scored = (
-        cands.join(bsh.withColumnRenamed("_id", batch_id), batch_id)
-        .join(idx_sh, "gaz_id")
-        .withColumn("_common", F.size(F.array_intersect("_sh", "_sh2")))
-        .withColumn(
-            "jaccard",
-            F.col("_common") / (F.size("_sh") + F.size("_sh2") - F.col("_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    scored = _jaccard_verify(cands, bsh, idx_sh, threshold)
     w = Window.partitionBy(batch_id).orderBy(F.col("jaccard").desc(), F.col("gaz_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

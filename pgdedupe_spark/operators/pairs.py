@@ -38,7 +38,10 @@ def candidate_pairs(
     skew detection does NOT split quadratic-OUTPUT blocks, so this cap is
     the load-bearing defense against a degenerate block going O(n²)
     (SCALE.md "AQE skew-join won't save a quadratic block"). Pass ``None``
-    for the uncapped cross-product (probes/certification only).
+    for the uncapped cross-product (probes/certification only). A pair
+    whose smallest shared block is over the cap is kept in its smallest
+    shared block that is under it: the cap removes over-cap block ids
+    from ``smaller_ids`` as well as the blocks' own rows.
 
     No silent caps: when the cap is active, the returned frame carries a
     ``_block_audit`` attribute — a ``pyspark.sql.Observation`` whose
@@ -68,7 +71,21 @@ def candidate_pairs(
             F.max("_bsz").alias("blocks_seen_max"),
             F.count(F.lit(1)).alias("entries_seen"),
         )
-        cov = cov.filter(F.col("_bsz") <= max_block_size).drop("_bsz")
+        # drop the over-cap blocks from the surviving rows' smaller_ids
+        # too, so a pair whose smallest shared block is over the cap is
+        # kept in its smallest under-cap one. try_cast types the ids like
+        # the smaller_ids elements (a no-op when they already agree).
+        elem = cov.schema["smaller_ids"].dataType.elementType
+        over = F.collect_set(
+            F.when(
+                F.col("_bsz") > max_block_size, F.col("block_id").try_cast(elem)
+            )
+        ).over(Window.partitionBy("_unique_id"))
+        cov = (
+            cov.withColumn("smaller_ids", F.array_except("smaller_ids", over))
+            .filter(F.col("_bsz") <= max_block_size)
+            .drop("_bsz")
+        )
 
     a = cov.alias("a")
     b = cov.alias("b")

@@ -64,14 +64,6 @@ from pgdedupe_spark.operators.pairs import candidate_pairs
 from pgdedupe_spark.operators.scoring import score_pairs
 
 
-DEFAULT_BLOCK_RULES = [
-    # a practical fixed rule set (D5 rule *learning* is planned; rules are
-    # record→key functions either way): per-field cheap predicates.
-    ("first_chars", None, (3,)),
-    ("whole_field", None, ()),
-]
-
-
 def default_rules_for(fields: list[str]) -> list[tuple[str, str, tuple]]:
     rules = []
     for f in fields:
@@ -108,13 +100,17 @@ def run_pipeline(
     config: DedupeConfig,
     training_pairs: dict | None,
     block_rules: list[tuple[str, str, tuple]] | None = None,
-    learn_rules: bool = False,
     classifier=None,
 ) -> PipelineResult:
     """``classifier`` (a fitted object exposing weights/bias) skips stage 2
     entirely — the reference's ``use_saved_model`` / ``StaticDedupe`` path
-    (run.py:126-129); pair it with saved ``block_rules`` to skip the D5 fit
-    too. ``training_pairs`` may then be None."""
+    (run.py:126-129); ``training_pairs`` may then be None.
+
+    ``block_rules`` are the blocking rules; None blocks with
+    :func:`default_rules_for` the config's fields. Learned rules (the
+    reference's D5 path, run.py:175-178) come from
+    ``ml.learning.learn_blocking_rules`` and are passed in here, as the
+    CLI does so that it can save them."""
     fields = config.field_names
 
     # 1. preprocess (run.py:62-99)
@@ -131,16 +127,7 @@ def run_pipeline(
             raise ValueError("training_pairs required when no classifier is given")
         clf = T.fit_classifier(config, training_pairs)
 
-    # 3. blocking (run.py:187-321); learn_rules = the reference's D5 path
-    # (deduper.train learns predicates by greedy cover, run.py:175-178)
-    if learn_rules and block_rules is None:
-        from pgdedupe_spark.ml.learning import learn_blocking_rules
-
-        if training_pairs is None:
-            raise ValueError("training_pairs required to learn blocking rules")
-        block_rules = learn_blocking_rules(
-            source.sparkSession, training_pairs, fields, recall=config.recall
-        )
+    # 3. blocking (run.py:187-321)
     rules = block_rules or default_rules_for(fields)
     block_keys = make_block_key_expr(rules)
     _, _, _, _, smaller = blocking_chain(entries_unique, block_keys)

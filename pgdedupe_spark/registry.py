@@ -5705,7 +5705,9 @@ def dedup_scale_probe(spark, sf_dir):
     import time as _time
 
     from pgdedupe_spark.operators.dedup import (
+        _lsh_candidates,
         _minhash_shingles_and_buckets,
+        _persist,
         release_caches,
     )
 
@@ -5716,13 +5718,14 @@ def dedup_scale_probe(spark, sf_dir):
 
     def census(d):
         """(bucket-size frame, n_docs_with_signature, distinct pairs)."""
-        # persist_sh=False (r12): the census consumes only `buckets`; the
-        # default path also cached the heavy shingle-array frame it never
-        # re-reads (one wasted materialization per tier).
+        # persist only the bucket frame (r12): the census reads it three
+        # times (sizes, row count, pairs) and never re-reads the heavy
+        # shingle arrays, so caching those would be wasted work per tier.
         _, buckets = _minhash_shingles_and_buckets(
             _t(spark, d, "documents"), "doc_id", "text",
-            n=5, num_hashes=64, bands=16, persist_sh=False,
+            n=5, num_hashes=64, bands=16, persist=False,
         )
+        buckets = _persist(buckets)
         sizes = (
             buckets.groupBy("_band", "_bkey")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -5734,18 +5737,7 @@ def dedup_scale_probe(spark, sf_dir):
         n_buckets_rows = buckets.count()
         assert n_buckets_rows % 16 == 0, n_buckets_rows
         n_sig = n_buckets_rows // 16
-        a, b = buckets.alias("a"), buckets.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a._band") == F.col("b._band"))
-                & (F.col("a._bkey") == F.col("b._bkey"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .select(F.col("a._id").alias("id1"), F.col("b._id").alias("id2"))
-            .distinct()
-            .count()
-        )
+        pairs = _lsh_candidates(buckets).count()
         return sizes, n_sig, pairs
 
     t0 = _time.perf_counter()

@@ -302,6 +302,24 @@ def purchase_attribution_outer_stream(
     )
 
 
+def _read_epoch_layer(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """An epoch-partitioned state layer read with an explicit ``schema``
+    — empty when ``path`` does not exist yet (the first epoch, or a
+    layer no epoch has written). Only a MISSING path reads as empty: any
+    other failure (corrupt footer, permissions, transient FS) raises and
+    aborts the batch, because an empty fallback would, say, flag every
+    previously-seen doc as novel and permanently corrupt the state.
+    Existence goes through the Hadoop FS API, not a try/except read: a
+    thrown AnalysisException also reaches Spark's ExecutionListenerBus
+    and logs an ERROR line per batch (the similarity._read_index_layer
+    rule)."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    if not p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
+
+
 def incremental_dedup_stream(
     docs: DataFrame,
     store_dir: str,
@@ -349,28 +367,15 @@ def incremental_dedup_stream(
             F.col(id_col), normalize_text(F.col(text_col)).alias("_norm")
         ).localCheckpoint()  # freeze: the source frame is only valid in-batch
 
-        def read_layer(name: str, schema: str):
-            # only a MISSING layer (first epoch) may read as empty: any
-            # other failure (corrupt footer, permissions, transient FS)
-            # must abort the batch — an empty fallback would flag every
-            # previously-seen doc as novel and permanently corrupt the
-            # one-introducer-per-norm invariant
-            from pyspark.errors import AnalysisException
-
-            try:
-                return spark.read.schema(schema).parquet(f"{store_dir}/{name}")
-            except AnalysisException as exc:
-                if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                    return spark.createDataFrame([], schema)
-                raise
-
         # replay guard: a retried epoch must not see its own failed writes
         prior = F.col("epoch") < F.lit(epoch_id)
-        keys = read_layer("keys", "norm string, first_id long, epoch long").filter(
-            prior
-        )
+        keys = _read_epoch_layer(
+            spark, f"{store_dir}/keys", "norm string, first_id long, epoch long"
+        ).filter(prior)
         bloom = (
-            read_layer("bloom", "word_idx long, bits long, epoch long")
+            _read_epoch_layer(
+                spark, f"{store_dir}/bloom", "word_idx long, bits long, epoch long"
+            )
             .filter(prior)
             .groupBy("word_idx")
             .agg(F.bit_or("bits").alias("bits"))
@@ -505,11 +510,19 @@ def near_dup_stream(
     bit-for-bit (pinned in tests/test_streaming.py). MinHash's hashes
     are stateless, so the standing buckets never need recomputation or
     retraining — the same append ≡ rebuild property the persisted index
-    pins. At 100 TB: per batch one scan of the batch (signatures), one
-    bucket equi-join against standing state keyed by (_band, _bkey), and
-    a candidates-only verify join — never a corpus rescan."""
+    pins. The candidate join and the verify are the batch operator's own
+    (``dedup._lsh_candidates`` with the batch's ids as the probe over
+    standing ∪ batch buckets, then ``dedup._jaccard_verify``), the
+    standing-state-reuse case of the index probe. At 100 TB: per batch
+    one scan of the batch (signatures), one bucket equi-join against
+    standing state keyed by (_band, _bkey), and a candidates-only verify
+    join — never a corpus rescan."""
     from pgdedupe_spark.operators.clustering import _free_local_checkpoint
-    from pgdedupe_spark.operators.dedup import _minhash_shingles_and_buckets
+    from pgdedupe_spark.operators.dedup import (
+        _jaccard_verify,
+        _lsh_candidates,
+        _minhash_shingles_and_buckets,
+    )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -522,53 +535,27 @@ def near_dup_stream(
         sh = sh.localCheckpoint()
         buckets = buckets.localCheckpoint()
 
-        def read_layer(name: str, schema: str):
-            from pyspark.errors import AnalysisException
-
-            try:
-                return spark.read.schema(schema).parquet(f"{store_dir}/{name}")
-            except AnalysisException as exc:
-                if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                    return spark.createDataFrame([], schema)
-                raise
-
         prior = F.col("epoch") < F.lit(epoch_id)  # replay guard
-        standing_b = read_layer(
-            "buckets", f"{id_col} {id_type}, _band int, _bkey long, epoch long"
+        standing_b = _read_epoch_layer(
+            spark,
+            f"{store_dir}/buckets",
+            f"{id_col} {id_type}, _band int, _bkey long, epoch long",
         ).filter(prior)
-        standing_sh = read_layer(
-            "shingles", f"{id_col} {id_type}, _sh array<string>, epoch long"
+        standing_sh = _read_epoch_layer(
+            spark,
+            f"{store_dir}/shingles",
+            f"{id_col} {id_type}, _sh array<string>, epoch long",
         ).filter(prior)
-
-        all_b = standing_b.select(F.col(id_col).alias("_idb"), "_band", "_bkey").unionByName(
-            buckets.select(F.col("_id").alias("_idb"), "_band", "_bkey")
-        )
-        cands = (
-            buckets.select(F.col("_id").alias("_ida"), "_band", "_bkey")
-            .join(all_b, ["_band", "_bkey"])
-            .filter(F.col("_ida") != F.col("_idb"))
-            .select(
-                F.least("_ida", "_idb").alias("id1"),
-                F.greatest("_ida", "_idb").alias("id2"),
-            )
-            .distinct()
-        )
+        # the batch probes {standing ∪ itself}: the probe side is the
+        # batch's ids, so batch-internal pairs are found too
+        all_b = standing_b.select(
+            F.col(id_col).alias("_id"), "_band", "_bkey"
+        ).unionByName(buckets)
         all_sh = standing_sh.select(F.col(id_col).alias("_id"), "_sh").unionByName(
             sh.select("_id", "_sh")
         )
-        t1 = all_sh.select(F.col("_id").alias("id1"), F.col("_sh").alias("_sh1"))
-        t2 = all_sh.select(F.col("_id").alias("id2"), F.col("_sh").alias("_sh2"))
-        pairs = (
-            cands.join(t1, "id1")
-            .join(t2, "id2")
-            .withColumn("_common", F.size(F.array_intersect("_sh1", "_sh2")))
-            .withColumn(
-                "jaccard",
-                F.col("_common")
-                / (F.size("_sh1") + F.size("_sh2") - F.col("_common")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id1", "id2", "jaccard")
+        pairs = _jaccard_verify(
+            _lsh_candidates(all_b, probe=sh), all_sh, all_sh, threshold
         )
         pairs.withColumn("epoch", F.lit(epoch_id)).write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
@@ -657,8 +644,6 @@ def curation_prep_stream(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
         g = gopher_quality(batch_df, id_col, text_col)
         gated = batch_df.join(
@@ -669,13 +654,7 @@ def curation_prep_stream(
         # empty (or absent on the first epoch) and schema inference fails
         id_t = batch_df.schema[id_col].dataType.simpleString()
         flags_schema = f"{id_col} {id_t}, is_dup boolean, corpus_id {id_t}, epoch long"
-        try:
-            flags = spark.read.schema(flags_schema).parquet(f"{store_dir}/flags")
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                flags = spark.createDataFrame([], flags_schema)
-            else:
-                raise
+        flags = _read_epoch_layer(spark, f"{store_dir}/flags", flags_schema)
         novel = flags.filter((F.col("epoch") == epoch_id) & ~F.col("is_dup")).select(
             id_col
         )
@@ -728,8 +707,6 @@ def gazetteer_stream(
     from pgdedupe_spark.operators.linkage import _gaz_bucket, gazetteer_match
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
         meta = spark.read.parquet(gaz_path + "/meta").collect()[0]
         id_col = str(meta.id_col)
@@ -740,15 +717,7 @@ def gazetteer_stream(
         overlay_schema = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in base.schema.fields
         ) + ", epoch long"
-        try:
-            overlay = spark.read.schema(overlay_schema).parquet(
-                f"{gaz_path}/records_stream"
-            )
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                overlay = spark.createDataFrame([], overlay_schema)
-            else:
-                raise
+        overlay = _read_epoch_layer(spark, f"{gaz_path}/records_stream", overlay_schema)
         # replay guard: a retried epoch must not match its own failed
         # growth writes
         records = base.unionByName(

@@ -175,8 +175,13 @@ def test_determinism(spark, source):
 def test_pipeline_with_learned_rules(spark, source):
     """D5 end-to-end: blocking rules learned from the labeled pairs (greedy
     set cover at config.recall) drive the full pipeline and still merge."""
+    from pgdedupe_spark.ml.learning import learn_blocking_rules
+
     df, _ = source
-    res = run_pipeline(df, _config(), training_pairs(), learn_rules=True)
+    cfg = _config()
+    tp = training_pairs()
+    rules = learn_blocking_rules(spark, tp, cfg.field_names, recall=cfg.recall)
+    res = run_pipeline(df, cfg, tp, block_rules=rules)
     n_rows = df.count()
     n_clusters = res.unique_map.select("dedupe_id").distinct().count()
     assert n_clusters < n_rows, "learned-rule blocking produced no merges"

@@ -159,3 +159,28 @@ def test_candidate_pairs_cap_audit_no_silent_drops(spark):
     uncapped = candidate_pairs(cov, max_block_size=None)
     assert uncapped._block_audit is None
     assert uncapped.count() == 12 * 11 // 2 + 2 * 6
+
+
+def test_candidate_pairs_cap_keeps_pair_of_under_cap_block(spark):
+    """A pair whose smallest shared block is over the cap still comes out
+    of the smallest shared block under the cap. Four records share key
+    ``f``; records 1 and 2 also share ``g``. Capped at 3 the ``f`` block
+    drops, and (1, 2) must come out of ``g`` exactly once — the dropped
+    ``f`` id may not stay in their ``smaller_ids`` and filter it out."""
+    from pgdedupe_spark.operators.blocking import blocking_chain
+    from pgdedupe_spark.operators.pairs import candidate_pairs
+
+    entries = spark.createDataFrame(
+        [(1, ["f", "g"]), (2, ["f", "g"]), (3, ["f"]), (4, ["f"])],
+        "_unique_id long, keys array<string>",
+    )
+    smaller = blocking_chain(entries, F.col("keys"))[4]
+    assert candidate_pairs(smaller, max_block_size=None).count() == 6
+
+    pairs = candidate_pairs(smaller, max_block_size=3)
+    assert [(r.id1, r.id2) for r in pairs.collect()] == [(1, 2)]
+    assert pairs._block_audit.get == {
+        "entries_dropped": 4,
+        "blocks_seen_max": 4,
+        "entries_seen": 6,
+    }

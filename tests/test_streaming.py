@@ -550,6 +550,28 @@ def test_incremental_dedup_stream_replay_is_idempotent(spark, tmp_path):
     assert flags[20] == (True, 11)
 
 
+def test_epoch_layer_unreadable_file_raises_not_empty_state(spark, tmp_path):
+    """Only a MISSING state layer reads as empty. A layer that exists but
+    cannot be read (here a non-parquet ``part-*.parquet`` file in the
+    standing Bloom layer) must make the batch raise: reading it as empty
+    state would flag every previously-seen doc as novel."""
+    import os
+
+    import pytest
+
+    from pgdedupe_spark.streaming.ops import incremental_dedup_stream
+
+    store = str(tmp_path / "store")
+    fn = incremental_dedup_stream(None, store, "doc_id", "text", 1 << 14, 4)
+    fn(spark.createDataFrame([(0, "aa"), (1, "bb")], "doc_id long, text string"), 0)
+    junk = os.path.join(store, "bloom", "epoch=0", "part-99999-junk.parquet")
+    with open(junk, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="part-99999-junk.parquet"):
+        fn(spark.createDataFrame([(10, "aa")], "doc_id long, text string"), 1)
+    assert not os.path.exists(os.path.join(store, "flags", "epoch=1"))
+
+
 def test_incremental_dedup_stream_through_real_stream(spark, tmp_path):
     """End-to-end through a real Structured Streaming query (file source,
     availableNow, checkpointed foreachBatch): every doc flagged exactly
