@@ -7,7 +7,8 @@ draws random record pairs for labeling (`run.py:139-150`).
 
 Spark-first shape:
 * Rule *evaluation* (does predicate p cover labeled pair (a,b)?) runs as one
-  DataFrame pass over the labeled pairs — every candidate rule becomes a
+  DataFrame pass over ``ml/training.labeled_pair_frame`` (the frame the
+  classifier fit reads) — every candidate rule becomes a
   boolean column (shared non-empty key intersection), so the coverage
   matrix for R rules × P pairs is a single JVM-side select + collect.
   Labeled samples are small by construction (hundreds of pairs), so the
@@ -22,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pgdedupe_spark.ml.training import labeled_pair_frame
 from pgdedupe_spark.operators.blocking import PREDICATES
 from pgdedupe_spark.operators.ids import add_deterministic_id
 
@@ -67,29 +69,12 @@ def _coverage_matrix(
     rules: list[tuple[str, str, tuple]],
 ) -> list[list[bool]]:
     """One row per labeled pair, one boolean column per candidate rule:
-    True iff the rule emits a shared block key for the pair.
-
-    CONTRACT: the collect() is bounded by the *labeled* pair count — the
-    human-labeled training set (hundreds of pairs, same driver-side scale
-    as the reference's dedupe.train at run.py:175-178), never the corpus.
-    The guard below makes the bound explicit rather than an OOM."""
-    if len(pairs) > 100_000:
-        raise ValueError(
-            f"{len(pairs)} labeled pairs exceeds the driver-side coverage-"
-            "matrix bound (100k); labeled sets are human-scale by contract"
-        )
-    rows = [
-        tuple(a.get(f) for f in fields) + tuple(b.get(f) for f in fields)
-        for a, b in pairs
-    ]
-    schema = ", ".join(
-        [f"a_{f} string" for f in fields] + [f"b_{f} string" for f in fields]
-    )
-    df = spark.createDataFrame(rows, schema)
+    True iff the rule emits a shared block key for the pair."""
+    df = labeled_pair_frame(spark, pairs, fields)
     cols = []
     for i, (pred, field, args) in enumerate(rules):
-        ka = PREDICATES[pred](F.col(f"a_{field}"), *args)
-        kb = PREDICATES[pred](F.col(f"b_{field}"), *args)
+        ka = PREDICATES[pred](F.col(f"{field}_1"), *args)
+        kb = PREDICATES[pred](F.col(f"{field}_2"), *args)
         cols.append((F.size(F.array_intersect(ka, kb)) > 0).alias(f"r{i}"))
     collected = df.select(*cols).collect()
     return [[bool(row[f"r{i}"]) for i in range(len(rules))] for row in collected]
@@ -100,14 +85,12 @@ def learn_blocking_rules(
     training_pairs: dict[str, list[tuple[dict, dict]]],
     fields: list[str],
     recall: float = 0.9,
-    rules: list[tuple[str, str, tuple]] | None = None,
-    distinct_penalty: float = 1.0,
 ) -> list[tuple[str, str, tuple]]:
-    """Greedy weighted set-cover: pick rules until ≥ `recall` of labeled
-    matches are covered. A rule's score = newly-covered matches −
-    `distinct_penalty` × distinct-pairs it covers (the proxy for block
+    """Greedy weighted set-cover over :func:`candidate_rules`: pick rules
+    until ≥ `recall` of labeled matches are covered. A rule's score =
+    newly-covered matches − distinct pairs it covers (the proxy for block
     size / comparison cost, standing in for dedupe's index-cost model)."""
-    rules = rules or candidate_rules(fields)
+    rules = candidate_rules(fields)
     matches = training_pairs.get("match", [])
     distincts = training_pairs.get("distinct", [])
     if not matches:
@@ -125,17 +108,17 @@ def learn_blocking_rules(
     uncovered = set(range(len(matches)))
     chosen: list[int] = []
     while len(matches) - len(uncovered) < target:
-        best, best_score, best_gain = None, float("-inf"), 0
+        best, best_score = None, float("-inf")
         for i in range(len(rules)):
             if i in chosen:
                 continue
             gain = sum(1 for p in uncovered if m_cov[p][i])
             if gain == 0:
                 continue
-            score = gain - distinct_penalty * d_count[i]
+            score = gain - d_count[i]
             # deterministic tie-break on rule index
             if score > best_score or (score == best_score and best is None):
-                best, best_score, best_gain = i, score, gain
+                best, best_score = i, score
         if best is None:
             break  # no rule covers anything new — recall target unreachable
         chosen.append(best)

@@ -5,7 +5,7 @@ and reruns with ``use_saved_model: true`` via a ``StaticDedupe``
 (``pgdedupe/run.py:33,39,126-129,180-181``). This module is that workflow
 for the Spark pipeline. Every supported classifier — the numpy gradient fit
 AND the MLlib adapter — reduces to ``(weights, bias)`` because scoring is
-the unrolled JVM sigmoid expression either way (``operators/scoring.py``),
+the JVM sigmoid expression either way (``operators/scoring.py``),
 so the saved artifact is canonical JSON rather than a pickle:
 engine-portable, human-diffable, and bit-exact on round-trip (float64
 serialized via ``float.hex``; an MLlib ``model.save`` directory would pin
@@ -23,23 +23,20 @@ import numpy as np
 
 from pgdedupe_spark.config import DedupeConfig
 from pgdedupe_spark.operators.features import FieldDef
+from pgdedupe_spark.operators.scoring import CLASSIFIERS, LinearClassifier
 
 FORMAT = "pgdedupe_spark.model/v1"
 
 
-class StaticClassifier:
+class StaticClassifier(LinearClassifier):
     """A loaded classifier: scoring-only, mirroring the reference's
-    ``StaticDedupe`` role (no ``fit``). Exposes the same
-    ``(weights, bias, predict_proba)`` surface as the trainable classes in
+    ``StaticDedupe`` role (no ``fit``). Shares the
+    ``(weights, bias, predict_proba)`` surface of the trainable classes in
     ``operators/scoring.py``, so ``score_pairs`` accepts it unchanged."""
 
     def __init__(self, weights: np.ndarray, bias: float):
         self.weights = np.asarray(weights, dtype=np.float64)
         self.bias = float(bias)
-
-    def predict_proba(self, X: np.ndarray) -> np.ndarray:
-        z = np.asarray(X) @ self.weights + self.bias
-        return 1.0 / (1.0 + np.exp(-z))
 
 
 @dataclass
@@ -73,7 +70,7 @@ def save_model(
     doc = {
         "format": FORMAT,
         "classifier": next(
-            (n for n, c in _classifier_registry().items() if isinstance(clf, c)),
+            (n for n, c in CLASSIFIERS.items() if isinstance(clf, c)),
             type(clf).__name__,
         ),
         "hyperparameters": _jsonable_hyperparams(clf),
@@ -141,12 +138,6 @@ def load_model(path: str) -> SavedModel:
         threshold=float(doc.get("threshold", 0.5)),
         model_hash=doc.get("model_hash"),
     )
-
-
-def _classifier_registry() -> dict:
-    from pgdedupe_spark.operators.scoring import CLASSIFIERS
-
-    return CLASSIFIERS
 
 
 def _jsonable_hyperparams(clf) -> dict:

@@ -1,9 +1,13 @@
-"""Training-pair persistence + model hash (SURVEY.md §2.7 D11, D12).
+"""Training pairs: persistence, the classifier fit, model hash
+(SURVEY.md §2.7 D4, D11, D12).
 
 * Training JSON format is the reference's exactly
   (``tests/dedup_postgres_training.json``, read at ``pgdedupe/run.py:156-159``):
   ``{"distinct": [...], "match": [...]}`` where each element is
   ``{"__class__": "tuple", "__value__": [record, record]}``.
+* The classifier is fit on the scoring plan's own feature expressions, as
+  the reference's deduper fits on the distances it scores
+  (``pgdedupe/run.py:133-136,178``).
 * Model-definition hash reproduces ``pgdedupe/utils.py:20-44``: MD5 of the
   canonical JSON of the model-determining inputs.
 """
@@ -14,9 +18,13 @@ import hashlib
 import json
 
 import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from pgdedupe_spark.config import DedupeConfig
-from pgdedupe_spark.operators.features import FieldDef
+from pgdedupe_spark.operators.features import feature_columns
 from pgdedupe_spark.operators.scoring import get_classifier
 
 
@@ -42,74 +50,43 @@ def write_training(path: str, pairs: dict[str, list[tuple[dict, dict]]]) -> None
         json.dump(enc, f, sort_keys=True)
 
 
-def _py_features(rec1: dict, rec2: dict, fields: list[FieldDef],
-                 interactions: list[tuple[str, str]]) -> list[float]:
-    """Driver-side mirror of operators/features.py feature_columns — same
-    layout, numpy/python implementation, used only to fit the classifier on
-    the (tiny) labeled set."""
-
-    def lev(a: str, b: str) -> int:
-        if a == b:
-            return 0
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-            prev = cur
-        return prev[-1]
-
-    feats: list[float] = []
-    primary: dict[str, float] = {}
-    for fd in fields:
-        a, b = rec1.get(fd.field), rec2.get(fd.field)
-        missing = a is None or b is None
-        if fd.type == "Categorical" and fd.categories:
-            same = 0.5 if missing else float(a == b)
-            primary[fd.field] = same
-            feats.append(same)
-            for cat in fd.categories:
-                feats.append(float((not missing) and a == cat and b == cat))
-        elif fd.type == "Exact":
-            sim = 0.5 if missing else float(a == b)
-            primary[fd.field] = sim
-            feats.append(sim)
-        elif fd.metric == "affine_gap":
-            # same Gotoh DP the scoring plan's Arrow UDF runs — training
-            # and scoring must see the same feature space (D1 fidelity)
-            from pgdedupe_spark.operators.features import affine_gap_sim_scalar
-
-            sim = affine_gap_sim_scalar(a, b)
-            primary[fd.field] = sim
-            feats.append(sim)
-        else:
-            if missing:
-                sim = 0.5
-            else:
-                m = max(len(a), len(b))
-                sim = 1.0 if m == 0 else 1.0 - lev(a, b) / m
-            primary[fd.field] = sim
-            feats.append(sim)
-        if fd.has_missing:
-            feats.append(float(missing))
-    for x, y in interactions:
-        feats.append(primary[x] * primary[y])
-    return feats
+def labeled_pair_frame(spark: SparkSession, pairs: list[tuple[dict, dict]],
+                       fields: list[str]) -> DataFrame:
+    """Labeled pairs shaped like candidate pairs: one row per pair, in
+    order, string columns ``{f}_1``/``{f}_2``. Built from pandas, so Arrow
+    ships it with no Python worker. Its readers collect one row per pair,
+    so the guard bounds it at human scale (the reference's dedupe.train,
+    run.py:175-178) rather than an OOM."""
+    if len(pairs) > 100_000:
+        raise ValueError(
+            f"{len(pairs)} labeled pairs exceeds the driver-side bound "
+            "(100k); labeled sets are human-scale by contract"
+        )
+    cols = {}
+    for f in fields:
+        cols[f"{f}_1"] = [a.get(f) for a, _ in pairs]
+        cols[f"{f}_2"] = [b.get(f) for _, b in pairs]
+    schema = StructType([StructField(c, StringType()) for c in cols])
+    return spark.createDataFrame(pd.DataFrame(cols, dtype=object), schema)
 
 
 def fit_classifier(config: DedupeConfig, training: dict[str, list[tuple[dict, dict]]]):
-    """Fit the configured classifier on the labeled pairs (driver-side —
-    the labeled set is ~10²; see operators/scoring.py for why)."""
-    X, y = [], []
-    for a, b in training.get("match", []):
-        X.append(_py_features(a, b, config.fields, config.interactions))
-        y.append(1.0)
-    for a, b in training.get("distinct", []):
-        X.append(_py_features(a, b, config.fields, config.interactions))
-        y.append(0.0)
+    """Fit the configured classifier on the labeled pairs: X is
+    ``feature_columns`` (the scoring plan's features) over
+    :func:`labeled_pair_frame`, collected with ``toArrow``; the fit itself
+    is driver-side (see operators/scoring.py). Needs an active session."""
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError("fit_classifier needs an active SparkSession")
+    matches, distincts = training.get("match", []), training.get("distinct", [])
+    _, cols = feature_columns(config.fields, config.interactions)
+    frame = labeled_pair_frame(spark, matches + distincts, config.field_names)
+    x = frame.select(F.array(*cols).alias("x")).toArrow().column("x")
+    X = np.array(x.to_pylist(), dtype=np.float64)
+    y = np.array([1.0] * len(matches) + [0.0] * len(distincts))
     # registry name or reference-style dotted import path (run.py:133-136)
     clf = get_classifier(config.classifier)(**config.hyperparameters)
-    return clf.fit(np.array(X), np.array(y))
+    return clf.fit(X, y)
 
 
 def create_model_definition(config: DedupeConfig, training: dict) -> dict:

@@ -11,17 +11,21 @@ The reference delegates per-field distances to the ``dedupe`` library
 Spark-first: every feature is a JVM column expression (whole-stage codegen;
 no Python in the hot path). String distance = normalized Levenshtein
 similarity via the built-in ``F.levenshtein`` — same monotone family as
-affine-gap; the classifier is retrained on it so semantics (threshold on a
-learned pair score) are preserved. This default is a DELIBERATE contract,
-not an approximation left to chance: ``tests/test_pipeline.py::
-test_metric_fidelity_parity`` pins that the two metrics' cluster decisions
-agree (same-cluster pair-set Jaccard ≥ 0.85, measured 0.93) with purity
-held on the quality corpus. Exact affine-gap fidelity stays available
-per-field via ``metric='affine_gap'`` (Arrow-batched Gotoh DP below).
+affine-gap. :func:`feature_columns` is the ONLY definition of a pair
+feature: scoring runs it over candidate pairs and
+``ml/training.fit_classifier`` over the labeled pairs. This default is a
+DELIBERATE contract, not an approximation left to chance:
+``tests/test_pipeline.py::test_metric_fidelity_parity`` pins that the two
+metrics' cluster decisions agree (same-cluster pair-set Jaccard ≥ 0.75,
+measured 0.81) with purity held on the quality corpus. Exact affine-gap
+fidelity stays available per-field via ``metric='affine_gap'``
+(Arrow-batched Gotoh DP below).
 
 Feature layout per field (mirrors dedupe's design):
-  - String f: sim(f) in [0,1] (0 when either side NULL) [+ missing indicator]
-  - Categorical f with categories c1..ck: dummy(f1==f2==ci)… + same(f1,f2)
+  - String / Exact f: sim(f) in [0,1] (0.5 when either side NULL)
+  - Categorical f with categories c1..ck: same(f1,f2), then
+    dummy(f1==f2==ci)… (0.0 when either side NULL)
+  - has-missing f: + missing indicator (either side NULL)
   - Interaction (a, b): feature(a) * feature(b)
 """
 
@@ -38,10 +42,18 @@ from pyspark.sql import functions as F
 @dataclass
 class FieldDef:
     field: str
-    type: str = "String"  # String | Categorical | Exact | Price
+    type: str = "String"  # String | Categorical | Exact
     categories: list[str] = field(default_factory=list)
     has_missing: bool = False
     metric: str = "levenshtein"  # levenshtein (JVM) | affine_gap (Arrow UDF)
+
+    def __post_init__(self):
+        if self.type not in ("String", "Categorical", "Exact"):
+            raise ValueError(f"field {self.field!r}: unknown type {self.type!r}")
+        if self.metric not in ("levenshtein", "affine_gap"):
+            raise ValueError(f"field {self.field!r}: unknown metric {self.metric!r}")
+        if self.type == "Categorical" and not self.categories:
+            raise ValueError(f"field {self.field!r}: Categorical needs categories")
 
 
 _MISMATCH, _OPEN, _EXTEND = 1.0, 1.0, 0.5
@@ -49,9 +61,7 @@ _MISMATCH, _OPEN, _EXTEND = 1.0, 1.0, 0.5
 
 def affine_gap_distance(s: str, t: str) -> float:
     """Gotoh affine-gap edit distance — scalar rolling-row DP (person-record
-    fields are short strings). Module-level so the driver-side training
-    replica (``ml/training._py_features``) computes the SAME metric the
-    scoring plan does when a field opts into ``metric='affine_gap'``."""
+    fields are short strings), run per row by :func:`affine_gap_similarity`."""
     la, lb = len(s), len(t)
     if la == 0 and lb == 0:
         return 0.0
@@ -130,16 +140,15 @@ def feature_columns(fields: list[FieldDef], interactions: list[tuple[str, str]] 
 
     for fd in fields:
         a, b = F.col(f"{fd.field}_1"), F.col(f"{fd.field}_2")
-        if fd.type == "Categorical" and fd.categories:
+        if fd.type == "Categorical":
             same = exact_similarity(a, b)
             primary[fd.field] = same
             names.append(f"{fd.field}_same")
             cols.append(same)
             for cat in fd.categories:
                 names.append(f"{fd.field}_is_{cat}")
-                cols.append(
-                    ((a == cat) & (b == cat)).cast("double")
-                )
+                # null-safe: a missing side is 0.0, not a NULL feature
+                cols.append((a.eqNullSafe(cat) & b.eqNullSafe(cat)).cast("double"))
         elif fd.type == "Exact":
             sim = exact_similarity(a, b)
             primary[fd.field] = sim

@@ -5,11 +5,13 @@ regression) on ~90 labeled pairs (``pgdedupe/run.py:133-136,178``) and scores
 millions of candidate pairs with it. That asymmetry drives the design:
 
 * **training** is driver-side numpy (the labeled set is tiny — a distributed
-  fit would be all overhead);
-* **scoring** is a pure JVM column expression — sigmoid(w·x + b) unrolled
-  over the feature array, so the hot path stays inside whole-stage codegen
-  with zero Python/Arrow transfer. This is the 100 TB path; an MLlib
-  ``LogisticRegression`` adapter would work too but pays vector-UDT costs.
+  fit would be all overhead) on X from the scoring plan's own feature
+  expressions (``ml/training.fit_classifier``);
+* **scoring** is a pure JVM column expression — sigmoid(w·x + b) as an
+  ``aggregate``/``zip_with`` fold over the feature array, so candidate
+  pairs never cross into Python/Arrow (both functions are
+  ``CodegenFallback``: interpreted, not whole-stage codegen). An MLlib
+  ``LogisticRegression`` model would work too but pays vector-UDT costs.
 
 The classifier registry keeps the reference's pluggability
 (``classifier`` dotted path + ``hyperparameters``, ``run.py:36-37``).
@@ -22,7 +24,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-class LogisticRegressionClassifier:
+class LinearClassifier:
+    """The fitted ``(weights, bias)`` surface ``score_pairs`` consumes, plus
+    ``predict_proba``: the same sigmoid in driver-side numpy, which tests
+    use as the reference for ``score_expr``."""
+
+    weights: np.ndarray | None = None
+    bias: float = 0.0
+
+    def predict_proba(self, X: np.ndarray) -> np.ndarray:
+        z = np.asarray(X) @ self.weights + self.bias
+        return 1.0 / (1.0 + np.exp(-z))
+
+
+class LogisticRegressionClassifier(LinearClassifier):
     """L2-regularized logistic regression, full-batch gradient descent.
     Mirrors rlr.RegularizedLogisticRegression's role (run.py:36)."""
 
@@ -47,17 +62,13 @@ class LogisticRegressionClassifier:
         self.weights, self.bias = w, b
         return self
 
-    def predict_proba(self, X: np.ndarray) -> np.ndarray:
-        z = np.asarray(X) @ self.weights + self.bias
-        return 1.0 / (1.0 + np.exp(-z))
 
-
-class MLlibLogisticRegressionClassifier:
+class MLlibLogisticRegressionClassifier(LinearClassifier):
     """Adapter over ``pyspark.ml.classification.LogisticRegression`` —
     the same pluggable-classifier slot (D4), fitted through MLlib instead
     of the driver-side numpy loop. After ``fit`` it exposes the identical
-    ``(weights, bias)`` surface, so SCORING still runs as the unrolled JVM
-    sigmoid expression (``score_expr``): MLlib's vector-UDT row path never
+    ``(weights, bias)`` surface, so SCORING still runs as the JVM sigmoid
+    expression (``score_expr``): MLlib's vector-UDT row path never
     touches the hot candidate-pair scan, only the tiny labeled set.
 
     Requires an active SparkSession at ``fit`` time (always true inside the
@@ -95,10 +106,6 @@ class MLlibLogisticRegressionClassifier:
         self.weights = np.asarray(model.coefficients.toArray(), dtype=np.float64)
         self.bias = float(model.intercept)
         return self
-
-    def predict_proba(self, X: np.ndarray) -> np.ndarray:
-        z = np.asarray(X) @ self.weights + self.bias
-        return 1.0 / (1.0 + np.exp(-z))
 
 
 CLASSIFIERS = {
@@ -138,7 +145,9 @@ def get_classifier(name: str) -> type:
 
 
 def score_expr(weights: np.ndarray, bias: float, features_col: str = "features") -> Column:
-    """sigmoid(w·features + b) as a single JVM expression (codegen-friendly)."""
+    """sigmoid(w·features + b) as a single JVM expression. The dot product
+    is an ``aggregate``/``zip_with`` fold; both are ``CodegenFallback``, so
+    it is evaluated interpreted inside the stage, with no Python."""
     w = F.array(*[F.lit(float(x)) for x in weights])
     dot = F.aggregate(
         F.zip_with(F.col(features_col), w, lambda x, y: x * y),

@@ -90,11 +90,18 @@ def test_loop_learns_and_never_repeats(spark, corpus):
     # score truth-same pairs above truth-different pairs on average
     import numpy as np
 
-    from pgdedupe_spark.ml.training import _py_features
+    from pgdedupe_spark.ml.training import labeled_pair_frame
+    from pgdedupe_spark.operators.features import feature_columns
+
+    _, cols = feature_columns(cfg.fields, cfg.interactions)
+
+    def features(pairs):
+        frame = labeled_pair_frame(spark, pairs, cfg.field_names)
+        return np.array([r[0] for r in frame.select(F.array(*cols)).collect()])
 
     probe = training_pairs(rng_seed=11, n=20)
-    Xm = np.array([_py_features(a, b, cfg.fields, cfg.interactions) for a, b in probe["match"]])
-    Xd = np.array([_py_features(a, b, cfg.fields, cfg.interactions) for a, b in probe["distinct"]])
+    Xm = features(probe["match"])
+    Xd = features(probe["distinct"])
     pm = res.classifier.predict_proba(Xm).mean()
     pd_ = res.classifier.predict_proba(Xd).mean()
     assert pm > pd_ + 0.2, (pm, pd_)

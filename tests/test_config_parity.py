@@ -56,6 +56,23 @@ def test_from_dict_passes_every_knob():
     assert cfg2.max_block_size == 10000
 
 
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"type": "Price"},  # unknown type
+        {"type": "String", "metric": "jaro"},  # unknown metric
+        {"type": "Categorical"},  # no categories to one-hot
+    ],
+)
+def test_from_dict_rejects_malformed_field(bad):
+    """A field the feature expressions cannot honour fails loudly instead
+    of silently becoming a Levenshtein String field."""
+    d = _yaml_style_dict()
+    d["fields"] = d["fields"] + [{"field": "sex", **bad}]
+    with pytest.raises(ValueError, match="sex"):
+        DedupeConfig.from_dict(d)
+
+
 def test_get_classifier_registry_and_dotted_path():
     assert get_classifier("logistic_regression") is LogisticRegressionClassifier
     cls = get_classifier("tests.plugin_classifier.CentroidGapClassifier")

@@ -2,15 +2,18 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pgdedupe_spark.ml.persistence import StaticClassifier
 from pgdedupe_spark.operators.features import (
     FieldDef,
     affine_gap_similarity,
     assemble_features,
     string_similarity,
 )
+from pgdedupe_spark.operators.scoring import score_pairs
 
 
 def _sims(spark, pairs, col):
@@ -75,3 +78,20 @@ def test_levenshtein_metric_stays_jvm(spark):
     feat, _ = assemble_features(pairs, [FieldDef("f")])
     plan = explain_str(feat)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_categorical_missing_side_is_scored_not_dropped(spark):
+    """One side NULL, the other equal to a declared category: the dummy is
+    0.0 (the labeled-pair fit and the d4_pair_scores oracle agree), not a
+    NULL feature whose NULL score makes score_pairs drop the pair."""
+    fields = [FieldDef("sex", type="Categorical", categories=["M", "F"], has_missing=True)]
+    pairs = spark.createDataFrame(
+        [(1, 2, None, "M")], "id1 long, id2 long, sex_1 string, sex_2 string"
+    )
+    feat, names = assemble_features(pairs, fields)
+    assert names == ["sex_same", "sex_is_M", "sex_is_F", "sex_missing"]
+    assert feat.select("features").collect()[0][0] == [0.5, 0.0, 0.0, 1.0]
+
+    clf = StaticClassifier(np.ones(len(names)), 0.0)
+    got = [(r.id1, r.id2) for r in score_pairs(feat, clf, threshold=0.0).collect()]
+    assert got == [(1, 2)]

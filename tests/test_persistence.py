@@ -36,7 +36,7 @@ def _fitted_config():
     return config, training, clf
 
 
-def test_save_load_roundtrip_is_bitexact(tmp_path):
+def test_save_load_roundtrip_is_bitexact(spark, tmp_path):
     config, training, clf = _fitted_config()
     path = str(tmp_path / "model.json")
     save_model(path, clf, config,
@@ -80,7 +80,7 @@ def test_loaded_model_scores_pairs_bitexact(spark, tmp_path):
     assert got_fit == got_saved  # exact float equality
 
 
-def test_block_rules_round_trip(tmp_path):
+def test_block_rules_round_trip(spark, tmp_path):
     config, _training, clf = _fitted_config()
     rules = [("whole_field", "ssn", ()), ("first_chars", "last_name", (4,))]
     path = str(tmp_path / "model.json")
@@ -92,7 +92,7 @@ def test_block_rules_round_trip(tmp_path):
     assert load_model(path).block_rules is None
 
 
-def test_save_requires_fit_and_load_rejects_foreign_json(tmp_path):
+def test_save_requires_fit_and_load_rejects_foreign_json(spark, tmp_path):
     config, _training, _clf = _fitted_config()
     with pytest.raises(ValueError, match="not fitted"):
         save_model(str(tmp_path / "m.json"), LogisticRegressionClassifier(), config)

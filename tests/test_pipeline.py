@@ -120,9 +120,11 @@ def test_metric_fidelity_parity(spark, source):
     TRAINED on levenshtein features while SCORING affine ones, which
     inflated cross-metric agreement to 0.93 — an artifact of the
     train/score mismatch, not a truer equivalence. With each classifier
-    now fit on its own metric's features (ml/training._py_features honors
-    FieldDef.metric), the honest agreement is 0.81 with purity IMPROVED
-    on the affine side."""
+    now fit on its own metric's features, the honest agreement is 0.81
+    with purity IMPROVED on the affine side. The fit evaluates the scoring
+    plan's own feature expressions (ml/training.fit_classifier over
+    operators/features.feature_columns), so the two can no longer
+    diverge."""
     df, truth = source
 
     def config(metric):
