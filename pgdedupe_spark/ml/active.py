@@ -107,10 +107,12 @@ def active_learning_loop(
         from pgdedupe_spark.pipeline import default_rules_for
 
         block_rules = default_rules_for(fields)
-    _, _, _, _, smaller = blocking_chain(entries_unique, make_block_key_expr(block_rules))
-    pairs = candidate_pairs(
-        smaller, entries_unique, fields, max_block_size=config.max_block_size
-    )
+    smaller = blocking_chain(
+        entries_unique,
+        make_block_key_expr(block_rules),
+        max_block_size=config.max_block_size,
+    )[4]
+    pairs = candidate_pairs(smaller, entries_unique, fields)
     feat, _names = assemble_features(pairs, config.fields, config.interactions)
     feat.persist()  # scored fresh each round with new weights; base is shared
 

@@ -18,8 +18,11 @@ Spark-first notes:
   column built from pure column expressions (JVM-side, no Python UDFs for
   the built-in predicate library).
 * ``plural_key`` is tiny relative to the input (distinct block keys with ≥2
-  members) → broadcast-join it back onto blocking_map (J1). AQE skew-join
-  handles hot keys on the later self-join.
+  members) → broadcast-join it back onto blocking_map (J1). It is also the
+  one block guard: the ``max_block_size`` cap (default 10000 through
+  :func:`blocking_chain`) drops oversized blocks where their sizes are
+  counted, and reports what it dropped in an Observation, so the pair
+  self-join (``operators/pairs.py``) only ever sees surviving blocks.
 * the ordered array agg (A3) is ``sort_array(collect_list(...))``.
 * ``smaller_ids`` uses ``filter(sorted_ids, x -> x < block_id)`` — clearer
   and NULL-safe vs the reference's slice-by-position (``run.py:314-319``,
@@ -30,7 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pgdedupe_spark.operators.ids import add_deterministic_id, add_row_number_id
@@ -284,9 +287,22 @@ def blocking_map(entries: DataFrame, block_keys: Column, id_col: str = "_unique_
 PLURAL_KEY_SMALL_THRESHOLD = 5_000_000
 
 
-def plural_key(bmap: DataFrame) -> DataFrame:
+def plural_key(bmap: DataFrame, max_block_size: int | None = None):
     """Block keys covering ≥2 records, with a deterministic serial block_id
     [run.py:265-275; A2 + W1]. Ordering by block_key is a total order.
+    Returns ``(plural_key, audit)``.
+
+    ``max_block_size`` is the guard against quadratic blowup in a
+    degenerate block (dedupe's cap; SCALE.md "AQE skew-join won't save a
+    quadratic block"): blocks with more members are dropped here, where
+    the block sizes are already counted, so every later stage — the
+    ``smaller_ids`` of the redundancy test included — sees only the
+    surviving blocks. Drops are never silent: with a cap, ``audit`` is a
+    ``pyspark.sql.Observation`` whose ``.get`` reports ``entries_dropped``
+    (coverage rows in over-cap blocks), ``blocks_seen_max`` (the largest
+    plural block) and ``entries_seen`` (coverage rows before the cap). The
+    eager checkpoint below fills it, so it costs no extra job. ``None``
+    means uncapped, and ``audit`` is ``None``.
 
     Size-adaptive id assignment (the ngram auto-strategy pattern): the frame
     is checkpointed and counted once, then a single-partition
@@ -296,14 +312,27 @@ def plural_key(bmap: DataFrame) -> DataFrame:
     single-partition window sort is the job-killer. A local checkpoint,
     not ``persist()``: it registers nothing with the CacheManager, so
     repeated calls in one session leave no cached frame behind."""
-    plural = (
-        bmap.groupBy("block_key").count().filter(F.col("count") > 1).drop("count")
-    ).localCheckpoint(eager=True)
+    sized = bmap.groupBy("block_key").count().filter(F.col("count") > 1)
+    audit = None
+    if max_block_size is not None:
+        audit = Observation("block_audit")
+        size = F.col("count")
+        sized = sized.observe(
+            audit,
+            F.sum(F.when(size > max_block_size, size).otherwise(0)).alias(
+                "entries_dropped"
+            ),
+            F.max(size).alias("blocks_seen_max"),
+            F.coalesce(F.sum(size), F.lit(0)).alias("entries_seen"),
+        ).filter(size <= max_block_size)
+    plural = sized.drop("count").localCheckpoint(eager=True)
     if plural.count() <= PLURAL_KEY_SMALL_THRESHOLD:
-        return add_row_number_id(plural, ["block_key"], id_col="block_id")
-    return add_deterministic_id(
-        plural, ["block_key"], id_col="block_id", materialize=False
-    )
+        pkey = add_row_number_id(plural, ["block_key"], id_col="block_id")
+    else:
+        pkey = add_deterministic_id(
+            plural, ["block_key"], id_col="block_id", materialize=False
+        )
+    return pkey, audit
 
 
 def plural_block(bmap: DataFrame, pkey: DataFrame) -> DataFrame:
@@ -333,15 +362,25 @@ def smaller_coverage(pblock: DataFrame, covered: DataFrame) -> DataFrame:
     )
 
 
-def blocking_chain(entries: DataFrame, block_keys: Column, id_col: str = "_unique_id"):
+def blocking_chain(
+    entries: DataFrame,
+    block_keys: Column,
+    id_col: str = "_unique_id",
+    max_block_size: int | None = 10000,
+):
     """Run the whole chain; returns (blocking_map, plural_key, plural_block,
-    covered_blocks, smaller_coverage)."""
+    covered_blocks, smaller_coverage, block_audit).
+
+    Capped by default at the pipeline's guard value (10000, the default
+    ``DedupeConfig.max_block_size`` carries), never silently: see
+    :func:`plural_key` for the cap and its audit. ``None`` is the uncapped
+    chain (probes and certification only), with ``block_audit`` None."""
     bmap = blocking_map(entries, block_keys, id_col)
-    pkey = plural_key(bmap)
+    pkey, audit = plural_key(bmap, max_block_size)
     pblock = plural_block(bmap, pkey)
     covered = covered_blocks(pblock)
     smaller = smaller_coverage(pblock, covered)
-    return bmap, pkey, pblock, covered, smaller
+    return bmap, pkey, pblock, covered, smaller, audit
 
 
 # ---------------------------------------------------------------------------

@@ -91,6 +91,9 @@ def connected_components(
     count (~0.1 s); ``return_rounds=True`` (the probe observable) always
     runs the distributed loop.
     """
+    # an edge with a NULL endpoint links nothing: SQL `=` never matches
+    # NULL, the same semantics exact_merge relies on (J5)
+    edges = edges.filter(F.col("id1").isNotNull() & F.col("id2").isNotNull())
     sym = (
         edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
         .union(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
@@ -151,8 +154,6 @@ def connected_components(
             )
             ids = list(parent)
             comps = [find(v) for v in ids]
-            if any(v is None for v in ids):
-                return spark.createDataFrame(list(zip(ids, comps)), schema)
             import pandas as pd
 
             pdf = pd.DataFrame({"id": ids, "component": comps})

@@ -147,7 +147,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 5,
     threshold: float = 0.6,
-    strategy: str = "auto",
 ) -> DataFrame:
     """All pairs with Jaccard(shingles) >= threshold -- exact, via
     **prefix filtering** (AllPairs / PPJoin family) + dictionary-encoded
@@ -165,7 +164,7 @@ def ngram_jaccard_pairs(
     3. Candidates: self-equi-join of pos-exploded prefixes on ``_vid`` with
        the length filter ``t*|B| <= |A| <= |B|/t`` and the PPJoin positional
        filter (inline comment below), then pair-distinct.
-    4. Verify exactly, switched on vocabulary size (``strategy='auto'``):
+    4. Verify exactly, switched on the observed vocabulary size:
        * **bitmap** (vocab <= ``_BITMAP_MAX_VOCAB``): each doc is a fixed
          ``V/64``-long bitmask; overlap = zip_with/aggregate popcount fold.
          (Unrolling the fold into V/64 element_at+bit_count terms measured
@@ -185,7 +184,7 @@ def ngram_jaccard_pairs(
     cartesian / coarse-band join condition evaluate it per ordered COMBO,
     interpreted: 13-23 s for the same answer.
     """
-    docs, cands, use_bitmap = _ngram_docs_and_candidates(df, id_col, text_col, n, threshold, strategy)
+    docs, cands, use_bitmap = _ngram_docs_and_candidates(df, id_col, text_col, n, threshold)
 
     if use_bitmap:
         v1 = docs.select(F.col("_id").alias("id1"), F.col("_sz").alias("_sz1"), F.col("_bm").alias("_bm1"))
@@ -223,7 +222,6 @@ def _ngram_docs_and_candidates(
     text_col: str,
     n: int,
     threshold: float,
-    strategy: str,
 ):
     """Stages 1-3 of ``ngram_jaccard_pairs`` (docstring above): per-doc
     sorted-int shingle representation + prefix/length/positional-filtered
@@ -242,10 +240,7 @@ def _ngram_docs_and_candidates(
         .agg(F.count(F.lit(1)).alias("_df"))
     )  # consumed twice: strategy-choice count + vocab id assignment
     vocab_size = dfreq.count()
-    if strategy == "auto":
-        use_bitmap = vocab_size <= _BITMAP_MAX_VOCAB
-    else:
-        use_bitmap = strategy == "bitmap"
+    use_bitmap = vocab_size <= _BITMAP_MAX_VOCAB
 
     # dense id, rarest shingle first => sorted _vid array = AllPairs order.
     if use_bitmap:

@@ -9,7 +9,8 @@ runs/partitionings, so we assign ``row_number`` by a total order instead.
 Two physical strategies:
 
 * ``row_number().over(Window.orderBy(...))`` — single-partition sort for the
-  window; fine for small/medium frames (plural_key, entity_map).
+  window; fine for small/medium frames (``plural_key`` up to its size
+  threshold, the ngram bitmap vocabulary).
 * :func:`add_deterministic_id` — the 100 TB path: range-partition on the
   ordering key, sort within partitions, then offset per-partition sequences
   by the cumulative counts of earlier partitions. Two narrow passes, no

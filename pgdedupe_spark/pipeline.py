@@ -8,6 +8,7 @@ Stage map vs the reference (``pgdedupe/run.py`` / ``cli.py``):
                         ml/active.py — uncertainty top-k + pluggable
                         labeler; the pipeline consumes its output JSON)
   3. create_blocking → blocking_chain                     (run.py:187-321)
+                        (drops blocks over max_block_size, audited)
   4. cluster         → candidate_pairs → features → score → CC + HAC
                                                            (run.py:362-379)
   5. write_results   → entity_map                         (run.py:383-425)
@@ -87,11 +88,11 @@ class PipelineResult:
     unique_map: DataFrame     # dedupe_id per source key
     deduped_source: DataFrame  # source table + dedupe_id column
     classifier: object = None  # the fitted classifier (D10 save_model input)
-    # the candidate-pair block audit (no silent caps): a
-    # pyspark.sql.Observation whose .get reports entries_dropped /
-    # blocks_seen_max / entries_seen for the max_block_size guard; the
-    # scored-pairs checkpoint fills it before run_pipeline returns.
-    # None when config.max_block_size is None.
+    # the block audit (no silent caps): a pyspark.sql.Observation whose
+    # .get reports entries_dropped / blocks_seen_max / entries_seen for
+    # the max_block_size guard; the blocking checkpoint in plural_key
+    # fills it before run_pipeline returns. None when
+    # config.max_block_size is None.
     block_audit: object = None
 
 
@@ -130,12 +131,12 @@ def run_pipeline(
     # 3. blocking (run.py:187-321)
     rules = block_rules or default_rules_for(fields)
     block_keys = make_block_key_expr(rules)
-    _, _, _, _, smaller = blocking_chain(entries_unique, block_keys)
+    _, _, _, _, smaller, block_audit = blocking_chain(
+        entries_unique, block_keys, max_block_size=config.max_block_size
+    )
 
     # 4. cluster (run.py:362-379)
-    pairs = candidate_pairs(
-        smaller, entries_unique, fields, max_block_size=config.max_block_size
-    )
+    pairs = candidate_pairs(smaller, entries_unique, fields)
     feat, _names = assemble_features(pairs, config.fields, config.interactions)
     scored = score_pairs(feat, clf, threshold=config.threshold).localCheckpoint(
         eager=True
@@ -198,5 +199,5 @@ def run_pipeline(
         unique_map=unique_map2,
         deduped_source=deduped_source,
         classifier=clf,
-        block_audit=pairs._block_audit,
+        block_audit=block_audit,
     )

@@ -139,7 +139,7 @@ def j1_plural_block(spark, sf_dir):
         F.col("o_custkey").cast("string").alias("block_key"),
         F.col("o_orderkey").alias("_unique_id"),
     )
-    pk = plural_key(bmap)
+    pk, _ = plural_key(bmap)
     return plural_block(bmap, pk)
 
 
@@ -188,7 +188,7 @@ def _customer_block_chain(spark, sf_dir):
     """,
 )
 def j2_smaller_coverage(spark, sf_dir):
-    _, _, _, _, smaller = _customer_block_chain(spark, sf_dir)
+    smaller = _customer_block_chain(spark, sf_dir)[4]
     # Stringified at the query boundary (driver canonicalizer: no list cells).
     return smaller.withColumn(
         "smaller_ids", F.array_join(F.col("smaller_ids").cast("array<string>"), ",")
@@ -237,8 +237,7 @@ def j7_candidate_pairs(spark, sf_dir):
         F.concat(F.lit("n:"), F.col("s_nationkey").cast("string")),
         F.concat(F.lit("p:"), F.substring(F.col("s_name"), 1, 9)),
     )
-    _, _, _, _, smaller = blocking_chain(supp, keys)
-    return candidate_pairs(smaller)
+    return candidate_pairs(blocking_chain(supp, keys)[4])
 
 
 # ---------------------------------------------------------------------------
@@ -2780,7 +2779,7 @@ def dedup_ngram_zipf(spark, sf_dir):
     corpus = zipf_corpus(
         spark, n_docs=n_docs, doc_len=110, vocab=400 * n_docs, dup_every=10, mutate_pct=5
     )
-    return ngram_jaccard_pairs(corpus, "doc_id", "text", n=5, threshold=0.8, strategy="array")
+    return ngram_jaccard_pairs(corpus, "doc_id", "text", n=5, threshold=0.8)
 
 
 # ===========================================================================
@@ -3354,8 +3353,7 @@ def pipeline_entity_map(spark, sf_dir):
             F.lit(":"), F.col("c_mktsegment"),
         ),
     )
-    _, _, _, _, smaller = blocking_chain(entries, keys)
-    smaller = smaller.localCheckpoint(eager=True)
+    smaller = blocking_chain(entries, keys)[4].localCheckpoint(eager=True)
 
     pairs = candidate_pairs(smaller, entries, ["c_name", "c_mktsegment"])
     feats, _names = assemble_features(
@@ -4816,8 +4814,7 @@ def pairs_skew_probe(spark, sf_dir):
     """Adversarial hot-block probe for J7 candidate pairs (VERDICT r8 #4;
     reference hazard run.py:293-319, SURVEY §4.1): one pathological block
     (a shared-surname token, 6k members at sf0.1 → 18M raw pairs) plus a
-    2k-block tail, pushed through candidate_pairs THREE ways, self-checked
-    in-band:
+    2k-block tail, counted THREE ways, self-checked in-band:
 
     * uncapped + AQE skew split — broadcast disabled (the 100 TB regime:
       entries don't broadcast) forces the SMJ on block_id; skew-join
@@ -4829,13 +4826,15 @@ def pairs_skew_probe(spark, sf_dir):
       default threshold, yet 5·10^9 output pairs; AQE alone does NOT
       save an uncapped quadratic block at defaults. max_block_size is
       the load-bearing guard; skew split only spreads what survives it.
-    * capped (max_block_size=100) — the reference's guard drops the
-      pathological block entirely; expected count = tail pairs only.
+    * capped (``blocking_chain(max_block_size=100)`` over the same block
+      memberships, then candidate_pairs) — the reference's guard drops
+      the pathological block entirely; expected count = tail pairs only.
     * exact counts — both pair counts must equal the closed forms
       (H·(H−1)/2 + T·45 and T·45).
 
     Conf changes are saved/restored; the probe runs as a HEAVY_PROBE
     fresh subprocess in bench.py so nothing leaks into other queries."""
+    from pgdedupe_spark.operators.blocking import blocking_chain
     from pgdedupe_spark.operators.pairs import candidate_pairs
 
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
@@ -4870,13 +4869,13 @@ def pairs_skew_probe(spark, sf_dir):
             saved[k] = None
         spark.conf.set(k, v)
     try:
-        cnt = candidate_pairs(cov, max_block_size=None).agg(
-            F.count(F.lit(1)).alias("n")
-        )
+        cnt = candidate_pairs(cov).agg(F.count(F.lit(1)).alias("n"))
         n_uncapped = cnt.collect()[0]["n"]
         plan = cnt._jdf.queryExecution().executedPlan().toString()
         skew_engaged = "skew=true" in plan or "AQEShuffleRead skewed" in plan
-        n_capped = candidate_pairs(cov, max_block_size=100).count()
+        keyed = cov.select("_unique_id", F.array("block_id").alias("keys"))
+        capped = blocking_chain(keyed, F.col("keys"), max_block_size=100)[4]
+        n_capped = candidate_pairs(capped).count()
     finally:
         for k, v in saved.items():
             if v is None:

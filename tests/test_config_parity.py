@@ -118,9 +118,9 @@ def test_yaml_roundtrip_affine_gap_plus_custom_classifier(spark):
 
 
 def test_pipeline_surfaces_block_audit(spark):
-    """No silent caps end-to-end: run_pipeline exposes the candidate-pair
-    Observation, already filled when run_pipeline returns (the scored-pairs
-    checkpoint is the action that runs the candidate pairs)."""
+    """No silent caps end-to-end: run_pipeline exposes the block-size
+    Observation, already filled when run_pipeline returns (the blocking
+    checkpoint in plural_key is the action that counts the blocks)."""
     rows, _truth, _ = generate_population(40, seed=5)
     df = spark.createDataFrame(
         rows,

@@ -27,9 +27,10 @@ def test_collapse_blocking_pairs_on_empty(spark):
     )
     assert entries.count() == 0
     keys = F.array(F.concat(F.lit("n:"), F.col("c_nationkey").cast("string")))
-    _, _, _, _, smaller = blocking_chain(entries, keys)
+    _, _, _, _, smaller, audit = blocking_chain(entries, keys)
     pairs = candidate_pairs(smaller, entries, ["c_name"])
     assert pairs.count() == 0
+    assert audit.get["entries_seen"] == 0
 
 
 def test_connected_components_on_empty(spark):

@@ -25,9 +25,9 @@ def _ids(df):
 
 def test_switch_changes_plan_not_answer(spark, monkeypatch):
     bmap = _bmap(spark)
-    small = plural_key(bmap)  # default threshold: row_number path
+    small, _ = plural_key(bmap)  # default threshold: row_number path
     monkeypatch.setattr(blocking, "PLURAL_KEY_SMALL_THRESHOLD", 3)
-    big = plural_key(bmap)  # force the scale path
+    big, _ = plural_key(bmap)  # force the scale path
 
     assert _ids(small) == _ids(big)
 
@@ -58,7 +58,7 @@ def test_scale_path_ids_are_global_rank(spark, monkeypatch):
     # physical partition a key landed in
     bmap = _bmap(spark, n_keys=97, rows_per_key=2)
     monkeypatch.setattr(blocking, "PLURAL_KEY_SMALL_THRESHOLD", 3)
-    out = plural_key(bmap)
+    out, _ = plural_key(bmap)
     got = {r.block_key: r.block_id for r in out.collect()}
     want = {k: i + 1 for i, k in enumerate(sorted(got))}
     assert got == want

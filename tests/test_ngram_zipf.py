@@ -2,8 +2,8 @@
 Zipfian-vocabulary corpus — VERDICT r1 watch item (a).
 
 Pins three things the degenerate driver corpus never exercised:
-1. strategy='auto' actually selects the sorted-int-array verify (vocab
-   above the bitmap cutover);
+1. the vocabulary-size switch actually selects the sorted-int-array
+   verify (vocab above the bitmap cutover);
 2. the AllPairs prefix + length + PPJoin positional filters PRUNE in
    their design regime (high threshold): candidates are a ≤2% fraction
    of the n(n-1)/2 pair space at t=0.8 (measured 0.36% at n=500);
@@ -75,7 +75,7 @@ def brute_force(corpus):
 
 def test_auto_selects_array_strategy_and_prefix_filter_prunes(corpus):
     docs, cands, use_bitmap = _ngram_docs_and_candidates(
-        corpus, "doc_id", "text", N, 0.8, "auto"
+        corpus, "doc_id", "text", N, 0.8
     )
     assert not use_bitmap, (
         f"Zipfian corpus must exceed the bitmap cutover ({_BITMAP_MAX_VOCAB})"
@@ -94,7 +94,7 @@ def test_array_path_matches_brute_force(corpus, brute_force, threshold):
     got = {
         (r.id1, r.id2): r.jaccard
         for r in ngram_jaccard_pairs(
-            corpus, "doc_id", "text", n=N, threshold=threshold, strategy="array"
+            corpus, "doc_id", "text", n=N, threshold=threshold
         ).collect()
     }
     expected = {p: j for p, j in brute_force.items() if j >= threshold}

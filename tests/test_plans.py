@@ -310,3 +310,27 @@ def test_runtime_bloom_filter_injects_on_shuffle_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_candidate_pairs_is_plain_block_id_self_join(spark):
+    """J7 after blocking has dropped the over-cap blocks: over a
+    materialized coverage frame, candidate_pairs is the Kolb self-join
+    alone — no Window, and the only hash partitioning is the self-join's
+    on block_id (broadcast disabled, the 100 TB regime)."""
+    import re
+
+    from pgdedupe_spark.operators.pairs import candidate_pairs
+    from pgdedupe_spark.plans.inspect import explain_str
+
+    chain = registry._customer_block_chain(spark, SF_DIR)
+    smaller = chain[4].localCheckpoint(eager=True)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = explain_str(candidate_pairs(smaller))
+    finally:
+        spark.conf.set(key, saved)
+    assert not re.search(r"\bWindow\b", plan), plan
+    parts = re.findall(r"hashpartitioning\((\w+)#", plan)
+    assert parts and set(parts) == {"block_id"}, plan

@@ -86,6 +86,19 @@ def test_cc_small_graph_path_matches_distributed(spark, edges):
     assert small == dist
 
 
+def test_cc_null_endpoint_edges_link_nothing(spark):
+    """An edge with a NULL endpoint links nothing (SQL `=` never matches
+    NULL): both the driver union-find and the distributed loop drop it,
+    instead of the union-find comparing NULL with an id and the loop
+    labelling a NULL vertex."""
+    for edges in ([(1, None), (2, 3)], [(None, None), (2, 3)]):
+        df = spark.createDataFrame(edges, "id1 long, id2 long")
+        small = {(r.id, r.component) for r in connected_components(df).collect()}
+        labels, _rounds = connected_components(df, return_rounds=True)
+        dist = {(r.id, r.component) for r in labels.collect()}
+        assert small == dist == {(2, 2), (3, 2)}, edges
+
+
 texts_strategy = st.lists(
     st.text(alphabet="abcd", min_size=1, max_size=12), min_size=2, max_size=10
 )
@@ -164,16 +177,23 @@ def test_merge_exact_matches_union_find_and_is_idempotent(spark, rows):
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(texts=texts_strategy)
 def test_ngram_jaccard_both_strategies_match_brute_force(spark, texts):
+    """Both verify paths, forced by moving the vocabulary-size cutover:
+    bitmap below it (a tiny corpus always is), array above it (cutover 0)."""
+    from unittest import mock
+
+    from pgdedupe_spark.operators import dedup
+
     corpus = {i: t for i, t in enumerate(texts)}
     df = spark.createDataFrame(list(corpus.items()), "doc_id long, text string")
     want = _brute_jaccard_pairs(corpus, n=3, t=0.5)
-    for strategy in ("bitmap", "array"):
-        got = {
-            (r.id1, r.id2)
-            for r in ngram_jaccard_pairs(
-                df, "doc_id", "text", n=3, threshold=0.5, strategy=strategy
-            ).collect()
-        }
+    for strategy, cutover in (("bitmap", dedup._BITMAP_MAX_VOCAB), ("array", 0)):
+        with mock.patch.object(dedup, "_BITMAP_MAX_VOCAB", cutover):
+            got = {
+                (r.id1, r.id2)
+                for r in ngram_jaccard_pairs(
+                    df, "doc_id", "text", n=3, threshold=0.5
+                ).collect()
+            }
         assert got == want, f"strategy={strategy}"
 
 

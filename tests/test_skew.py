@@ -71,6 +71,7 @@ def test_candidate_pairs_hot_block_skew_split_and_cap(spark):
     splits — the cap is the load-bearing defense, not AQE."""
     from pyspark.sql import functions as F
 
+    from pgdedupe_spark.operators.blocking import blocking_chain
     from pgdedupe_spark.operators.pairs import candidate_pairs
 
     H, T = 1500, 60
@@ -100,15 +101,15 @@ def test_candidate_pairs_hot_block_skew_split_and_cap(spark):
             saved[k] = None
         spark.conf.set(k, v)
     try:
-        cnt = candidate_pairs(cov, max_block_size=None).agg(
-            F.count(F.lit(1)).alias("n")
-        )
+        cnt = candidate_pairs(cov).agg(F.count(F.lit(1)).alias("n"))
         assert cnt.collect()[0]["n"] == H * (H - 1) // 2 + T * 45
         plan = cnt._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in plan
         assert "skew=true" in plan or "AQEShuffleRead skewed" in plan, plan[:2000]
         # the reference's guard: cap drops the hot block, keeps the tail
-        assert candidate_pairs(cov, max_block_size=100).count() == T * 45
+        keyed = cov.select("_unique_id", F.array("block_id").alias("keys"))
+        capped = blocking_chain(keyed, F.col("keys"), max_block_size=100)[4]
+        assert candidate_pairs(capped).count() == T * 45
     finally:
         for k, v in saved.items():
             if v is None:
@@ -119,31 +120,32 @@ def test_candidate_pairs_hot_block_skew_split_and_cap(spark):
 
 def test_candidate_pairs_cap_audit_no_silent_drops(spark):
     """r10 (VERDICT r9 #8): the cap defaults ON (10000 — the DedupeConfig
-    guard value) and drops are never silent: the returned frame carries a
-    ``_block_audit`` Observation reporting entries dropped / max block
-    size / entries seen, in-band with the first action (no second job)."""
+    guard value) and drops are never silent: blocking_chain returns a
+    block audit Observation reporting entries dropped / max block size /
+    entries seen, filled by the blocking checkpoint (no second job)."""
     from pyspark.sql import functions as F
 
+    from pgdedupe_spark.operators.blocking import blocking_chain
     from pgdedupe_spark.operators.pairs import candidate_pairs
 
     hot = spark.range(12).select(
-        F.lit("hot").alias("block_id"),
-        F.col("id").alias("_unique_id"),
-        F.array().cast("array<long>").alias("smaller_ids"),
+        F.col("id").alias("_unique_id"), F.array(F.lit("hot")).alias("keys")
     )
     tail = spark.range(8).select(
-        F.concat(F.lit("t"), (F.col("id") % 2).cast("string")).alias("block_id"),
         (F.col("id") + 100).alias("_unique_id"),
-        F.array().cast("array<long>").alias("smaller_ids"),
+        F.array(F.concat(F.lit("t"), (F.col("id") % 2).cast("string"))).alias("keys"),
     )
-    cov = hot.unionByName(tail)
+    entries = hot.unionByName(tail)
+
+    def chain(**kw):
+        out = blocking_chain(entries, F.col("keys"), **kw)
+        return candidate_pairs(out[4]), out[5]
 
     # capped at 10: the 12-member hot block drops, the two 4-member tail
     # blocks survive (4·3/2 pairs each)
-    pairs = candidate_pairs(cov, max_block_size=10)
+    pairs, audit = chain(max_block_size=10)
     assert pairs.count() == 2 * 6
-    audit = pairs._block_audit.get
-    assert audit == {
+    assert audit.get == {
         "entries_dropped": 12,
         "blocks_seen_max": 12,
         "entries_seen": 20,
@@ -151,13 +153,13 @@ def test_candidate_pairs_cap_audit_no_silent_drops(spark):
 
     # the DEFAULT is capped (10000) and carries the audit; nothing under
     # the cap is dropped here
-    dflt = candidate_pairs(cov)
+    dflt, audit = chain()
     assert dflt.count() == 12 * 11 // 2 + 2 * 6
-    assert dflt._block_audit.get["entries_dropped"] == 0
+    assert audit.get["entries_dropped"] == 0
 
-    # explicit opt-out: no cap, no audit attached
-    uncapped = candidate_pairs(cov, max_block_size=None)
-    assert uncapped._block_audit is None
+    # explicit opt-out: no cap, no audit
+    uncapped, audit = chain(max_block_size=None)
+    assert audit is None
     assert uncapped.count() == 12 * 11 // 2 + 2 * 6
 
 
@@ -174,12 +176,13 @@ def test_candidate_pairs_cap_keeps_pair_of_under_cap_block(spark):
         [(1, ["f", "g"]), (2, ["f", "g"]), (3, ["f"]), (4, ["f"])],
         "_unique_id long, keys array<string>",
     )
-    smaller = blocking_chain(entries, F.col("keys"))[4]
-    assert candidate_pairs(smaller, max_block_size=None).count() == 6
+    smaller = blocking_chain(entries, F.col("keys"), max_block_size=None)[4]
+    assert candidate_pairs(smaller).count() == 6
 
-    pairs = candidate_pairs(smaller, max_block_size=3)
+    out = blocking_chain(entries, F.col("keys"), max_block_size=3)
+    pairs = candidate_pairs(out[4])
     assert [(r.id1, r.id2) for r in pairs.collect()] == [(1, 2)]
-    assert pairs._block_audit.get == {
+    assert out[5].get == {
         "entries_dropped": 4,
         "blocks_seen_max": 4,
         "entries_seen": 6,
