@@ -319,10 +319,10 @@ def plural_key(bmap: DataFrame, max_block_size: int | None = None):
         size = F.col("count")
         sized = sized.observe(
             audit,
-            F.sum(F.when(size > max_block_size, size).otherwise(0)).alias(
-                "entries_dropped"
-            ),
-            F.max(size).alias("blocks_seen_max"),
+            F.coalesce(
+                F.sum(F.when(size > max_block_size, size).otherwise(0)), F.lit(0)
+            ).alias("entries_dropped"),
+            F.coalesce(F.max(size), F.lit(0)).alias("blocks_seen_max"),
             F.coalesce(F.sum(size), F.lit(0)).alias("entries_seen"),
         ).filter(size <= max_block_size)
     plural = sized.drop("count").localCheckpoint(eager=True)

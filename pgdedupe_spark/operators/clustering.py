@@ -7,12 +7,15 @@ agglomerative clustering (SURVEY.md §2.7 D9, §2.8 G1).
   propagation over DataFrames — "large/small-star"-style hash joins until
   fixpoint, O(log d) rounds for diameter d; each round is one shuffle on the
   vertex id. Component label = min vertex id, observationally equivalent to
-  the reference's relabel-to-min (``exact_matches.py:78``).
+  the reference's relabel-to-min (``exact_matches.py:78``). A graph of at
+  most ``CC_SMALL_GRAPH_MAX_EDGES`` edge rows skips the loop: one bounded
+  Arrow collect, then min-id union-find on the driver.
 
 * :func:`cluster_components` replaces ``dedupe.matchBlocks``' fastcluster
   HAC (``pgdedupe/run.py:362-379``): candidate-pair graph → components →
-  per-component average-linkage HAC cut at (1 - threshold), run inside
-  ``applyInPandas``, pure numpy (no scipy in this environment). Every
+  per-component average-linkage HAC cut at (1 - threshold), run by one
+  ``mapInArrow`` pass per partition over the component-sorted pairs, pure
+  numpy (no scipy in this environment). Every
   component takes the same path; HAC keeps only the component's scored
   pairs, so its memory grows with pairs, not members squared. Per-record
   ``cluster_score`` follows dedupe's confidence definition: 1 minus the
@@ -24,8 +27,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 # edge ceiling of connected_components' driver-side union-find fast path
@@ -61,6 +66,40 @@ def _free_local_checkpoint(df: DataFrame) -> bool:
         return False
 
 
+def _uf_labels(edges: DataFrame, srcs: list, dsts: list) -> DataFrame:
+    """(id, component) by min-id union-find over the collected edge rows;
+    the component label is the smallest id reachable, as in the loop."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in zip(srcs, dsts):
+        if a not in parent:
+            parent[a] = a
+        if b not in parent:
+            parent[b] = b
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by min id: the root IS the component label
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    id_type = edges.schema["id1"].dataType
+    schema = StructType(
+        [StructField("id", id_type, True), StructField("component", id_type, True)]
+    )
+    ids = list(parent)
+    comps = [find(v) for v in ids]
+    pdf = pd.DataFrame({"id": ids, "component": comps})
+    return edges.sparkSession.createDataFrame(pdf, schema=schema)
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
@@ -81,93 +120,68 @@ def connected_components(
     Small-graph fast path (r12): composite pipelines routinely feed CC a
     few hundred post-blocking edges, where the distributed loop's cost is
     pure per-round fixed overhead (2 jobs + a checkpoint × O(log d)
-    rounds — measured ~8 s for a 133-edge graph). The symmetric edge
-    frame must be fully materialized for the loop anyway, so the gate is
-    free: persist ``sym``, count the cache, and when it holds at most
-    2×``CC_SMALL_GRAPH_MAX_EDGES`` rows collect it — BOUNDED by
-    the gate itself, the same bounded-collect discipline as the
-    k-means/centroid sidecars — and label by min-id union-find,
-    bit-identical to the fixpoint labels. Oversized graphs pay one cached
-    count (~0.1 s); ``return_rounds=True`` (the probe observable) always
-    runs the distributed loop.
+    rounds — measured ~8 s for a 133-edge graph). The gate is one bounded
+    Arrow collect of the raw edge rows: ``limit(CC_SMALL_GRAPH_MAX_EDGES +
+    1).toArrow()``, the same bounded-collect discipline as the
+    k-means/centroid sidecars. When it returns at most
+    ``CC_SMALL_GRAPH_MAX_EDGES`` rows, min-id union-find labels them,
+    bit-identical to the fixpoint labels (duplicate and reversed edges
+    change no union-find label), with no shuffle at all. The edge frame is
+    persisted before the probe, so an oversized graph's loop reads the
+    probed partitions from the cache instead of recomputing an expensive
+    edge query (exact-merge's join, say). ``return_rounds=True`` (the
+    probe observable) always runs the distributed loop.
     """
     # an edge with a NULL endpoint links nothing: SQL `=` never matches
     # NULL, the same semantics exact_merge relies on (J5)
-    edges = edges.filter(F.col("id1").isNotNull() & F.col("id2").isNotNull())
-    sym = (
-        edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .union(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
-        .distinct()
-        # r12: hash-partition the persisted edge frame on the join key ONCE.
-        # Every round joins sym on `dst`; without this the EDGE-sized frame
-        # is re-exchanged every round (the single largest shuffle in the
-        # loop — ~2|E| rows vs the |V|-sized label frames). The cached
-        # partitioning satisfies the join's required distribution, so each
-        # round exchanges only the label frame. Partition count follows
-        # spark.sql.shuffle.partitions (scale-adaptive, not a local tune).
-        .repartition("dst")
+    edges = edges.filter(F.col("id1").isNotNull() & F.col("id2").isNotNull()).select(
+        "id1", "id2"
     )
-    # Persist BEFORE the first action so the materializing pass fills the
-    # sym cache (r12: persisting after the label init meant the edge
-    # union+distinct+repartition pipeline ran twice — once uncached for the
-    # init, once again on round 1 to populate the cache).
-    sym.persist(StorageLevel.MEMORY_AND_DISK)
-    if not return_rounds:
-        # the count materializes the cache the loop needs anyway
-        if sym.count() <= 2 * CC_SMALL_GRAPH_MAX_EDGES:
+    edges.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if not return_rounds:
             # Arrow transfer, not .collect() (r12): at the gate ceiling the
             # Row-object collect and the pickled createDataFrame dominated
-            # the fast path (~4 s at 1M sym rows vs ~0.9 s columnar). Both
-            # directions of each edge ride along; the second union is a
-            # no-op, so the labels are unchanged.
-            tbl = sym.toArrow()  # bounded: the gate above caps this
-            sym.unpersist()
-            srcs = tbl.column(0).to_pylist()
-            dsts = tbl.column(1).to_pylist()
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for a, b in zip(srcs, dsts):
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by min id: the root IS the component label
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            spark = edges.sparkSession
-            from pyspark.sql.types import StructField, StructType
-
-            id_type = edges.schema["id1"].dataType
-            schema = StructType(
-                [StructField("id", id_type, True), StructField("component", id_type, True)]
-            )
-            ids = list(parent)
-            comps = [find(v) for v in ids]
-            import pandas as pd
-
-            pdf = pd.DataFrame({"id": ids, "component": comps})
-            return spark.createDataFrame(pdf, schema=schema)
-    # localCheckpoint (not persist): truncates the logical plan each round —
-    # the iterative lineage otherwise grows superlinearly and OOMs the
-    # driver's plan renderer long before the data is big. On a cluster with
-    # unreliable executors, swap for checkpoint() with a checkpoint dir.
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("component"))
-        .select(F.col("src").alias("id"), "component")
-        .withColumn("component", F.least("id", "component"))
-    ).localCheckpoint(eager=True)
+            # the fast path (~4 s at 1M rows vs ~0.9 s columnar)
+            tbl = edges.limit(CC_SMALL_GRAPH_MAX_EDGES + 1).toArrow()
+            if tbl.num_rows <= CC_SMALL_GRAPH_MAX_EDGES:
+                return _uf_labels(
+                    edges, tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
+                )
+        sym = (
+            edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+            .union(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
+            .distinct()
+            # r12: hash-partition the persisted edge frame on the join key
+            # ONCE. Every round joins sym on `dst`; without this the
+            # EDGE-sized frame is re-exchanged every round (the single
+            # largest shuffle in the loop — ~2|E| rows vs the |V|-sized
+            # label frames). The cached partitioning satisfies the join's
+            # required distribution, so each round exchanges only the label
+            # frame. Partition count follows spark.sql.shuffle.partitions
+            # (scale-adaptive, not a local tune).
+            .repartition("dst")
+        )
+        # Persist BEFORE the first action so the materializing pass fills
+        # the sym cache (r12: persisting after the label init meant the edge
+        # union+distinct+repartition pipeline ran twice — once uncached for
+        # the init, once again on round 1 to populate the cache).
+        sym.persist(StorageLevel.MEMORY_AND_DISK)
+        # localCheckpoint (not persist): truncates the logical plan each
+        # round — the iterative lineage otherwise grows superlinearly and
+        # OOMs the driver's plan renderer long before the data is big. On a
+        # cluster with unreliable executors, swap for checkpoint() with a
+        # checkpoint dir.
+        labels = (
+            sym.groupBy("src")
+            .agg(F.min("dst").alias("component"))
+            .select(F.col("src").alias("id"), "component")
+            .withColumn("component", F.least("id", "component"))
+        ).localCheckpoint(eager=True)
+    finally:
+        # the label init read every sym partition, so the sym cache is full
+        # and the raw edges are no longer needed
+        edges.unpersist()
     # the frame returned by localCheckpoint analyzes straight to LogicalRDD;
     # keep THAT reference for the release call — `labels` is rebound to a
     # .drop() projection over it from round 2 onward, and freeing via the
@@ -349,38 +363,71 @@ def cluster_components(scored_pairs: DataFrame, threshold: float = 0.5) -> DataF
     canon_id = min member id (the reference uses first-member id,
     ``run.py:405-408``; with our deterministic ordering that is the min).
 
-    Every component runs HAC, as the reference does. Each component is one
-    ``applyInPandas`` group, and HAC's state is sparse, so an executor
-    holds O(pairs-in-component) for it — the same rows the group already
-    holds."""
+    Every component runs HAC, as the reference does. The pairs are
+    hash-partitioned and sorted on their component, and one ``mapInArrow``
+    call per partition walks the sorted batches, running HAC on each
+    component once its last row has arrived. The component still open is
+    kept as a list of batch slices and concatenated once when it closes,
+    so a component spanning many batches costs O(rows). HAC's state is
+    sparse, so an executor holds O(largest component + one batch)."""
     edges = scored_pairs.select("id1", "id2", "score")
     comp = connected_components(edges.select("id1", "id2"))
-    with_comp = (
-        edges.join(comp.withColumnRenamed("id", "id1"), "id1")
-        .withColumnRenamed("component", "component_")
+    with_comp = edges.join(comp.withColumnRenamed("id", "id1"), "id1").select(
+        F.col("component").alias("component_"), "id1", "id2", "score"
     )
-
-    schema = "component long, _unique_id long, canon_id long, cluster_score double"
     cutoff = 1.0 - threshold
+    out_schema = "_unique_id long, canon_id long, cluster_score double"
 
-    def _cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = np.unique(np.concatenate([pdf["id1"].values, pdf["id2"].values]))
-        comp_id = int(pdf["component_"].iloc[0])
-        dist = {
-            (r.id1, r.id2): 1.0 - float(r.score)
-            for r in pdf.itertuples(index=False)
-        }
+    def _cluster(parts: list) -> list:
+        # parts: the component's (id1, id2, score) numpy slices, in order
+        id1 = np.concatenate([p[0] for p in parts])
+        id2 = np.concatenate([p[1] for p in parts])
+        dist = 1.0 - np.concatenate([p[2] for p in parts]).astype(np.float64)
+        ids = np.unique(np.concatenate([id1, id2]))
+        pairs = dict(zip(zip(id1.tolist(), id2.tolist()), dist.tolist()))
         rows = []
-        for mids, scores in _hac_average_linkage(ids, dist, cutoff=cutoff):
+        for mids, scores in _hac_average_linkage(ids, pairs, cutoff=cutoff):
             canon = int(min(mids))
-            for m, s in zip(mids, scores):
-                rows.append((comp_id, int(m), canon, float(s)))
-        return pd.DataFrame(rows, columns=["component", "_unique_id", "canon_id", "cluster_score"])
+            rows.extend((int(m), canon, float(sc)) for m, sc in zip(mids, scores))
+        return rows
+
+    def _batch(rows: list):
+        uid, canon, score = zip(*rows)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(uid, pa.int64()), pa.array(canon, pa.int64()), pa.array(score, pa.float64())],
+            names=["_unique_id", "canon_id", "cluster_score"],
+        )
+
+    def batches(it):
+        open_comp, open_parts = None, []
+        for b in it:
+            if b.num_rows == 0:
+                continue
+            c, i1, i2, sc = (b.column(k).to_numpy(zero_copy_only=False) for k in range(4))
+            # segment bounds: the batch ends and every component change
+            cuts = (np.flatnonzero(c[1:] != c[:-1]) + 1).tolist()
+            bounds = [0, *cuts, len(c)]
+            rows = []
+            for s0, e0 in zip(bounds, bounds[1:]):
+                part = (i1[s0:e0], i2[s0:e0], sc[s0:e0])
+                if c[s0] == open_comp:
+                    # only a batch's first segment can continue the open one
+                    open_parts.append(part)
+                    continue
+                if open_parts:
+                    rows.extend(_cluster(open_parts))
+                open_comp, open_parts = c[s0], [part]
+            if rows:
+                yield _batch(rows)
+        if open_parts:
+            rows = _cluster(open_parts)
+            if rows:
+                yield _batch(rows)
 
     return (
-        with_comp.groupBy("component_")
-        .applyInPandas(_cluster, schema=schema)
-        .select("_unique_id", "canon_id", "cluster_score")
+        with_comp.repartition("component_")
+        .sortWithinPartitions("component_", "id1", "id2")
+        .mapInArrow(batches, schema=out_schema)
     )
 
 

@@ -5,8 +5,8 @@ chosen so the same logical plans scale to a multi-executor cluster:
 
 * AQE on (runtime coalescing + skew-join splitting — hot block keys are the
   known skew hazard of dedup blocking, SURVEY.md §4).
-* Arrow on (every Python-side operator uses Pandas UDFs / applyInPandas,
-  never row-at-a-time Python UDFs).
+* Arrow on (every Python-side operator is Arrow-batched — mapInArrow,
+  mapInPandas, Pandas UDFs — never row-at-a-time Python UDFs).
 * shuffle.partitions sized to cores locally; on a real cluster this is
   overridden by AQE's coalescing from a larger initial number.
 """

@@ -31,6 +31,9 @@ def test_collapse_blocking_pairs_on_empty(spark):
     pairs = candidate_pairs(smaller, entries, ["c_name"])
     assert pairs.count() == 0
     assert audit.get["entries_seen"] == 0
+    # the audit publishes 0, not NULL, for an empty input
+    assert audit.get["entries_dropped"] == 0
+    assert audit.get["blocks_seen_max"] == 0
 
 
 def test_connected_components_on_empty(spark):

@@ -330,7 +330,7 @@ def test_completeness_floor(spark, source):
 def test_stage_outputs_are_checkpointed(spark):
     """Every multiply-read stage output is computed once: the frames
     run_pipeline returns plan against the stage checkpoints, so neither
-    the HAC (FlatMapGroupsInPandas) nor the candidate-pair self-join
+    the HAC (MapInArrow) nor the candidate-pair self-join
     (smaller_ids) is re-planned by a downstream read or write. The stages
     checkpoint rather than persist, so a run leaves no frame registered
     in the CacheManager (a leaked persist grows it by one per call)."""
@@ -345,4 +345,5 @@ def test_stage_outputs_are_checkpointed(spark):
     for name in ("entity_map", "mapping", "unique_map", "deduped_source"):
         plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan, name
+        assert "MapInArrow" not in plan, name
         assert "smaller_ids" not in plan, name

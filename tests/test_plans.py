@@ -48,7 +48,8 @@ def test_no_python_udf_in_relational_path(spark):
     node in any of these plans means someone snuck a row-at-a-time UDF
     into a hot path. (Python legitimately appears only outside the
     registry: per-component HAC, multimodal decode batches, and the
-    stateful streaming op — all applyInPandas/mapInPandas by design.)"""
+    stateful streaming op — all mapInArrow, mapInPandas or
+    applyInPandasWithState by design.)"""
     offenders = []
     for name in registry.QUERIES:
         r = _report(spark, name)
@@ -334,3 +335,17 @@ def test_candidate_pairs_is_plain_block_id_self_join(spark):
     assert not re.search(r"\bWindow\b", plan), plan
     parts = re.findall(r"hashpartitioning\((\w+)#", plan)
     assert parts and set(parts) == {"block_id"}, plan
+
+
+def test_cluster_components_is_one_arrow_pass(spark):
+    """HAC runs as one mapInArrow call per partition over the
+    component-sorted pairs, not as a grouped pandas UDF with one Python
+    call per component."""
+    from pgdedupe_spark.operators.clustering import cluster_components
+
+    scored = spark.createDataFrame(
+        [(1, 2, 0.9), (2, 3, 0.8), (10, 11, 0.7)], "id1 long, id2 long, score double"
+    )
+    plan = cluster_components(scored)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan

@@ -197,6 +197,85 @@ def test_ngram_jaccard_both_strategies_match_brute_force(spark, texts):
         assert got == want, f"strategy={strategy}"
 
 
+def test_cc_gate_edges_take_each_path_and_release_the_probe(spark, monkeypatch):
+    """The small-graph gate counts raw edge rows: at the ceiling the
+    union-find labels them, one past it the distributed loop runs (over a
+    graph with duplicate and reversed edges). Both label like union-find,
+    and neither leaves the probe's persisted edge frame in the
+    CacheManager."""
+    from pgdedupe_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "CC_SMALL_GRAPH_MAX_EDGES", 3)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cases = (
+        ([(1, 2), (2, 3), (7, 8)], False),
+        ([(1, 2), (2, 1), (1, 2), (3, 4), (4, 5)], True),
+    )
+    for edges, loop in cases:
+        df = spark.createDataFrame(edges, "id1 long, id2 long")
+        before = cache.cachedData().size()
+        labels = clustering.connected_components(df)
+        assert cache.cachedData().size() == before, edges
+        plan = labels._jdf.queryExecution().optimizedPlan().toString()
+        # the loop's labels are a local checkpoint; union-find's a local relation
+        assert ("LogicalRDD" in plan) == loop, plan
+        got = {r.id: r.component for r in labels.collect()}
+        assert got == _uf_components(edges), edges
+
+
+def test_cluster_components_across_arrow_batch_boundaries(spark):
+    """With 3-row Arrow batches nearly every component straddles batches,
+    so the per-partition HAC pass must carry the open component across
+    them. Its rows, float scores included, equal a driver-side reference:
+    union-find components, then _hac_average_linkage per component. The
+    graphs have tied scores and scores exactly at the threshold."""
+    import random
+
+    import numpy as np
+
+    from pgdedupe_spark.operators.clustering import (
+        _hac_average_linkage,
+        cluster_components,
+    )
+
+    threshold = 0.5
+    rng = random.Random(11)
+    scored = {}
+    base = 0
+    for _ in range(12):
+        n = rng.randint(2, 60)
+        ids = list(range(base, base + n))
+        base += n + rng.randint(1, 5)
+        # a random spanning tree plus extra pairs, so each is one component
+        links = [(rng.choice(ids[:i]), ids[i]) for i in range(1, n)]
+        links += [tuple(rng.sample(ids, 2)) for _ in range(rng.randint(0, n))]
+        for a, b in links:
+            score = rng.choice([threshold, 0.75, 0.75, 0.9, round(rng.uniform(threshold, 1.0), 3)])
+            scored[(min(a, b), max(a, b))] = score
+    rows = [(a, b, s) for (a, b), s in scored.items()]
+
+    comp = _uf_components([(a, b) for a, b, _ in rows])
+    by_comp = {}
+    for a, b, s in rows:
+        by_comp.setdefault(comp[a], {})[(a, b)] = 1.0 - s
+    want = []
+    for dist in by_comp.values():
+        ids = np.unique([x for p in dist for x in p])
+        for mids, scores in _hac_average_linkage(ids, dist, cutoff=1.0 - threshold):
+            want += [(int(m), int(min(mids)), sc) for m, sc in zip(mids, scores)]
+    assert len(want) > 100, "test premise: most members cluster"
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        df = spark.createDataFrame(rows, "id1 long, id2 long, score double")
+        got = [tuple(r) for r in cluster_components(df, threshold=threshold).collect()]
+    finally:
+        spark.conf.set(key, saved)
+    assert sorted(got) == sorted(want)
+
+
 # --- HAC heap implementation vs exhaustive-rescan reference ----------------
 
 
