@@ -126,62 +126,56 @@ def connected_components(
     k-means/centroid sidecars. When it returns at most
     ``CC_SMALL_GRAPH_MAX_EDGES`` rows, min-id union-find labels them,
     bit-identical to the fixpoint labels (duplicate and reversed edges
-    change no union-find label), with no shuffle at all. The edge frame is
-    persisted before the probe, so an oversized graph's loop reads the
-    probed partitions from the cache instead of recomputing an expensive
-    edge query (exact-merge's join, say). ``return_rounds=True`` (the
-    probe observable) always runs the distributed loop.
+    change no union-find label), with no shuffle at all. An oversized
+    graph's loop recomputes the edge frame, so a caller whose edge query is
+    expensive persists its input first, as ``near_duplicate_clusters``
+    does. ``return_rounds=True`` (the probe observable) always runs the
+    distributed loop.
     """
     # an edge with a NULL endpoint links nothing: SQL `=` never matches
     # NULL, the same semantics exact_merge relies on (J5)
     edges = edges.filter(F.col("id1").isNotNull() & F.col("id2").isNotNull()).select(
         "id1", "id2"
     )
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        if not return_rounds:
-            # Arrow transfer, not .collect() (r12): at the gate ceiling the
-            # Row-object collect and the pickled createDataFrame dominated
-            # the fast path (~4 s at 1M rows vs ~0.9 s columnar)
-            tbl = edges.limit(CC_SMALL_GRAPH_MAX_EDGES + 1).toArrow()
-            if tbl.num_rows <= CC_SMALL_GRAPH_MAX_EDGES:
-                return _uf_labels(
-                    edges, tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
-                )
-        sym = (
-            edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-            .union(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
-            .distinct()
-            # r12: hash-partition the persisted edge frame on the join key
-            # ONCE. Every round joins sym on `dst`; without this the
-            # EDGE-sized frame is re-exchanged every round (the single
-            # largest shuffle in the loop — ~2|E| rows vs the |V|-sized
-            # label frames). The cached partitioning satisfies the join's
-            # required distribution, so each round exchanges only the label
-            # frame. Partition count follows spark.sql.shuffle.partitions
-            # (scale-adaptive, not a local tune).
-            .repartition("dst")
-        )
-        # Persist BEFORE the first action so the materializing pass fills
-        # the sym cache (r12: persisting after the label init meant the edge
-        # union+distinct+repartition pipeline ran twice — once uncached for
-        # the init, once again on round 1 to populate the cache).
-        sym.persist(StorageLevel.MEMORY_AND_DISK)
-        # localCheckpoint (not persist): truncates the logical plan each
-        # round — the iterative lineage otherwise grows superlinearly and
-        # OOMs the driver's plan renderer long before the data is big. On a
-        # cluster with unreliable executors, swap for checkpoint() with a
-        # checkpoint dir.
-        labels = (
-            sym.groupBy("src")
-            .agg(F.min("dst").alias("component"))
-            .select(F.col("src").alias("id"), "component")
-            .withColumn("component", F.least("id", "component"))
-        ).localCheckpoint(eager=True)
-    finally:
-        # the label init read every sym partition, so the sym cache is full
-        # and the raw edges are no longer needed
-        edges.unpersist()
+    if not return_rounds:
+        # Arrow transfer, not .collect() (r12): at the gate ceiling the
+        # Row-object collect and the pickled createDataFrame dominated
+        # the fast path (~4 s at 1M rows vs ~0.9 s columnar)
+        tbl = edges.limit(CC_SMALL_GRAPH_MAX_EDGES + 1).toArrow()
+        if tbl.num_rows <= CC_SMALL_GRAPH_MAX_EDGES:
+            return _uf_labels(
+                edges, tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
+            )
+    sym = (
+        edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+        .union(edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
+        .distinct()
+        # r12: hash-partition the persisted edge frame on the join key
+        # ONCE. Every round joins sym on `dst`; without this the
+        # EDGE-sized frame is re-exchanged every round (the single
+        # largest shuffle in the loop — ~2|E| rows vs the |V|-sized
+        # label frames). The cached partitioning satisfies the join's
+        # required distribution, so each round exchanges only the label
+        # frame. Partition count follows spark.sql.shuffle.partitions
+        # (scale-adaptive, not a local tune).
+        .repartition("dst")
+    )
+    # Persist BEFORE the first action so the materializing pass fills
+    # the sym cache (r12: persisting after the label init meant the edge
+    # union+distinct+repartition pipeline ran twice — once uncached for
+    # the init, once again on round 1 to populate the cache).
+    sym.persist(StorageLevel.MEMORY_AND_DISK)
+    # localCheckpoint (not persist): truncates the logical plan each
+    # round — the iterative lineage otherwise grows superlinearly and
+    # OOMs the driver's plan renderer long before the data is big. On a
+    # cluster with unreliable executors, swap for checkpoint() with a
+    # checkpoint dir.
+    labels = (
+        sym.groupBy("src")
+        .agg(F.min("dst").alias("component"))
+        .select(F.col("src").alias("id"), "component")
+        .withColumn("component", F.least("id", "component"))
+    ).localCheckpoint(eager=True)
     # the frame returned by localCheckpoint analyzes straight to LogicalRDD;
     # keep THAT reference for the release call — `labels` is rebound to a
     # .drop() projection over it from round 2 onward, and freeing via the

@@ -197,12 +197,11 @@ def test_ngram_jaccard_both_strategies_match_brute_force(spark, texts):
         assert got == want, f"strategy={strategy}"
 
 
-def test_cc_gate_edges_take_each_path_and_release_the_probe(spark, monkeypatch):
+def test_cc_gate_edges_take_each_path_and_cache_nothing(spark, monkeypatch):
     """The small-graph gate counts raw edge rows: at the ceiling the
     union-find labels them, one past it the distributed loop runs (over a
     graph with duplicate and reversed edges). Both label like union-find,
-    and neither leaves the probe's persisted edge frame in the
-    CacheManager."""
+    and neither leaves a cached frame in the CacheManager."""
     from pgdedupe_spark.operators import clustering
 
     monkeypatch.setattr(clustering, "CC_SMALL_GRAPH_MAX_EDGES", 3)
