@@ -36,7 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from pgdedupe_spark.operators.ids import add_deterministic_id, add_row_number_id
+from pgdedupe_spark.operators.ids import add_rank_id
 
 # ---------------------------------------------------------------------------
 # Predicate library (dedupe's "simple predicates": pure functions of one
@@ -282,11 +282,6 @@ def blocking_map(entries: DataFrame, block_keys: Column, id_col: str = "_unique_
     )
 
 
-# plural_key's id-assignment switch: at most this many plural keys take the
-# single-partition row_number path, more take the range-partitioned one
-PLURAL_KEY_SMALL_THRESHOLD = 5_000_000
-
-
 def plural_key(bmap: DataFrame, max_block_size: int | None = None):
     """Block keys covering ≥2 records, with a deterministic serial block_id
     [run.py:265-275; A2 + W1]. Ordering by block_key is a total order.
@@ -301,17 +296,18 @@ def plural_key(bmap: DataFrame, max_block_size: int | None = None):
     ``pyspark.sql.Observation`` whose ``.get`` reports ``entries_dropped``
     (coverage rows in over-cap blocks), ``blocks_seen_max`` (the largest
     plural block) and ``entries_seen`` (coverage rows before the cap). The
-    eager checkpoint below fills it, so it costs no extra job. ``None``
-    means uncapped, and ``audit`` is ``None``.
+    eager checkpoint in :func:`ids.add_rank_id` fills it, so it costs no
+    extra job. ``None`` means uncapped, and ``audit`` is ``None``.
 
-    Size-adaptive id assignment (the ngram auto-strategy pattern): the frame
-    is checkpointed and counted once, then a single-partition
-    ``row_number`` when it has at most :data:`PLURAL_KEY_SMALL_THRESHOLD`
-    rows, else the range-partitioned scale path — at 100 TB the distinct
-    plural keys of a loose predicate can be billions of rows, where a
-    single-partition window sort is the job-killer. A local checkpoint,
-    not ``persist()``: it registers nothing with the CacheManager, so
-    repeated calls in one session leave no cached frame behind."""
+    Size-adaptive id assignment through :func:`ids.add_rank_id`: the plural
+    keys are checkpointed once, and the same pass counts them. Up to
+    ``ids.ROW_NUMBER_MAX_ROWS`` keys take a single-partition
+    ``row_number``, more take the range-partitioned scale path — at 100 TB
+    the distinct plural keys of a loose predicate can be billions of rows,
+    where a single-partition window sort is the job-killer. A local
+    checkpoint, not ``persist()``: it registers nothing with the
+    CacheManager, so repeated calls in one session leave no cached frame
+    behind."""
     sized = bmap.groupBy("block_key").count().filter(F.col("count") > 1)
     audit = None
     if max_block_size is not None:
@@ -325,14 +321,7 @@ def plural_key(bmap: DataFrame, max_block_size: int | None = None):
             F.coalesce(F.max(size), F.lit(0)).alias("blocks_seen_max"),
             F.coalesce(F.sum(size), F.lit(0)).alias("entries_seen"),
         ).filter(size <= max_block_size)
-    plural = sized.drop("count").localCheckpoint(eager=True)
-    if plural.count() <= PLURAL_KEY_SMALL_THRESHOLD:
-        pkey = add_row_number_id(plural, ["block_key"], id_col="block_id")
-    else:
-        pkey = add_deterministic_id(
-            plural, ["block_key"], id_col="block_id", materialize=False
-        )
-    return pkey, audit
+    return add_rank_id(sized.drop("count"), ["block_key"], id_col="block_id"), audit
 
 
 def plural_block(bmap: DataFrame, pkey: DataFrame) -> DataFrame:

@@ -16,7 +16,10 @@ Spark-first notes:
   ``sort_array`` for reproducibility (Postgres ``array_agg`` without ORDER BY
   is insertion-ordered — also unspecified; our contract is *sorted*).
 * id assignment: the grouped field tuple is unique by construction, so the
-  scalable rank-based id (operators/ids.py) is deterministic.
+  rank-based id (``ids.add_rank_id``) is deterministic. Its checkpoint of
+  the grouped frame also counts it, and that count picks the path: a
+  single-partition ``row_number`` up to ``ids.ROW_NUMBER_MAX_ROWS`` distinct
+  rows, the range-partitioned scale path above. Both give the same ids.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pgdedupe_spark.operators.ids import add_deterministic_id
+from pgdedupe_spark.operators.ids import add_rank_id
 
 
 def collapse_exact_duplicates(
@@ -38,7 +41,7 @@ def collapse_exact_duplicates(
 
     Returns columns: ``*field_cols, src_ids ArrayType(Long), _unique_id``.
     """
-    return add_deterministic_id(
+    return add_rank_id(
         df.filter(F.expr(filter_condition or "1=1"))
         .groupBy(*field_cols)
         .agg(F.sort_array(F.collect_list(F.col(key_col))).alias("src_ids")),

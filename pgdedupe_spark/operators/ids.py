@@ -8,20 +8,33 @@ runs/partitionings, so we assign ``row_number`` by a total order instead.
 
 Two physical strategies:
 
-* ``row_number().over(Window.orderBy(...))`` — single-partition sort for the
-  window; fine for small/medium frames (``plural_key`` up to its size
-  threshold, the ngram bitmap vocabulary).
+* :func:`add_row_number_id` — ``row_number().over(Window.orderBy(...))``, a
+  single-partition sort for the window; fine for small frames (the ngram
+  bitmap vocabulary, and :func:`add_rank_id` up to
+  :data:`ROW_NUMBER_MAX_ROWS` rows).
 * :func:`add_deterministic_id` — the 100 TB path: range-partition on the
   ordering key, sort within partitions, then offset per-partition sequences
   by the cumulative counts of earlier partitions. Two narrow passes, no
   global single-partition sort. Requires ``order_cols`` to be a unique key
   (otherwise ties may swap ids between physically-identical rows).
+
+:func:`add_rank_id` picks between them by the row count it observes while
+materializing its input (``collapse_exact_duplicates``, ``plural_key``).
+Both give the same ids, the global rank by ``order_cols``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+# add_rank_id's switch: at most this many rows take the single-partition
+# row_number path, more take the range-partitioned one. The row_number
+# output is one partition, and every stage that streams from it inherits
+# that. On 4 cores at 200k rows, one explode+groupBy over it took 0.50 s
+# against 0.39 s over the range path's output, while the range path's own
+# extra jobs cost about 0.4 s once; at 100k the two are about even.
+ROW_NUMBER_MAX_ROWS = 100_000
 
 
 def add_row_number_id(df: DataFrame, order_cols: list[str], id_col: str = "_unique_id") -> DataFrame:
@@ -82,3 +95,17 @@ def add_deterministic_id(
         .withColumn(id_col, (F.col("_offset") + F.row_number().over(w_local)).cast("long"))
         .drop("_pid", "_offset")
     )
+
+
+def add_rank_id(df: DataFrame, order_cols: list[str], id_col: str = "_unique_id") -> DataFrame:
+    """Size-switched rank ids: ``df`` is materialized once with an eager
+    ``localCheckpoint``, and that same pass counts its rows through an
+    ``Observation`` (no separate ``count()`` job). Up to
+    :data:`ROW_NUMBER_MAX_ROWS` rows take :func:`add_row_number_id`, more
+    take :func:`add_deterministic_id` over the checkpoint. ``order_cols``
+    must be a unique key, so both paths give the same ids."""
+    rows = Observation()
+    frame = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    if rows.get["n"] <= ROW_NUMBER_MAX_ROWS:
+        return add_row_number_id(frame, order_cols, id_col)
+    return add_deterministic_id(frame, order_cols, id_col, materialize=False)

@@ -39,9 +39,12 @@ instead of re-analysing the whole pipeline. The four points:
     and written by the CLI. Mirrors the reference's ``unique_map`` table
     (run.py:471-475, relabelled by pass 2 at run.py:477-483).
 
-``mapping`` (the reference's ``map`` table, run.py:429-446) is read once,
-by the dedupe_id writeback, and stays lazy over the two checkpoints it
-joins.
+``mapping`` (the reference's ``map`` table, run.py:429-446) is the one
+join of ``entries_unique`` (``_unique_id``, ``src_ids``) with
+``entity_map``, and stays lazy over those two checkpoints. It carries
+``src_ids`` through exact-merge pass 1's relabel, so the dedupe_id
+writeback plus ``unique_map`` (run.py:463-475) is an ``explode`` of that
+frame, not a second join with ``entries_unique``.
 """
 
 from __future__ import annotations
@@ -148,14 +151,15 @@ def run_pipeline(
 
     # 5./6. write + apply results (run.py:383-491): right-join semantics —
     # every entries_unique row gets a canon_id (itself if unclustered) and a
-    # score (1.0 for singletons), J3.
+    # score (1.0 for singletons), J3. src_ids rides along for unique_map.
     mapping = (
-        entries_unique.select("_unique_id")
+        entries_unique.select("_unique_id", "src_ids")
         .join(entity_map, "_unique_id", "left")
         .select(
             F.coalesce("canon_id", "_unique_id").alias("canon_id"),
             "_unique_id",
             F.coalesce("cluster_score", F.lit(1.0)).alias("cluster_score"),
+            "src_ids",
         )
     )
 
@@ -171,13 +175,8 @@ def run_pipeline(
 
     # dedupe_id writeback on entries_unique (run.py:463-467) then explode
     # src_ids → unique_map (run.py:471-475, F3)
-    entries_with_id = entries_unique.join(
-        mapping2.select("_unique_id", F.col("canon_id").alias("dedupe_id")),
-        "_unique_id",
-        "left",
-    )
-    unique_map = entries_with_id.select(
-        F.col("dedupe_id"), F.explode("src_ids").alias(config.key)
+    unique_map = mapping2.select(
+        F.col("canon_id").alias("dedupe_id"), F.explode("src_ids").alias(config.key)
     )
 
     # exact-merge pass 2: on the full source table for merge columns outside
@@ -195,7 +194,7 @@ def run_pipeline(
     return PipelineResult(
         entries_unique=entries_unique,
         entity_map=entity_map,
-        mapping=mapping2,
+        mapping=mapping2.drop("src_ids"),
         unique_map=unique_map2,
         deduped_source=deduped_source,
         classifier=clf,

@@ -349,3 +349,16 @@ def test_cluster_components_is_one_arrow_pass(spark):
     plan = cluster_components(scored)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+def test_exact_match_edges_is_one_window(spark):
+    """J5: the exact-merge edge query is one window, min(cluster) over the
+    merge columns, with no aggregate-then-join-back."""
+    import re
+
+    from pgdedupe_spark.plans.inspect import explain_str
+
+    plan = explain_str(registry.QUERIES["j5_exact_edges"](spark, SF_DIR), "simple")
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan

@@ -174,6 +174,59 @@ def test_merge_exact_matches_union_find_and_is_idempotent(spark, rows):
     assert {r.key: r.cluster for r in again.collect()} == got
 
 
+def _ref_exact_edges(rows, cols):
+    """DuckDB running the reference's exact-merge edge query
+    (exact_matches.py:70-83) over rows = [(cluster, f1, f2)]: group by the
+    merge columns with HAVING count(*) > 1, join back, GROUP BY 1, 2."""
+    import duckdb
+
+    c = ", ".join(cols)
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE subset (cluster BIGINT, f1 VARCHAR, f2 VARCHAR)")
+        con.executemany("INSERT INTO subset VALUES (?, ?, ?)", rows)
+        return sorted(
+            con.execute(
+                f"""
+                SELECT t1.cluster AS id1, t.id2
+                FROM subset t1
+                JOIN (SELECT min(cluster) AS id2, {c} FROM subset
+                      GROUP BY {c} HAVING count(*) > 1) t USING ({c})
+                WHERE t1.cluster > id2 GROUP BY 1, 2
+                """
+            ).fetchall()
+        )
+
+
+def test_exact_match_edges_match_reference_sql(spark):
+    """The window form of J5 returns the reference SQL's edge list, row
+    for row (no duplicates, no self-edges), on seeded frames with NULL
+    merge values, NULL clusters, one cluster on many rows and keys, a key
+    shared by many clusters, and a group whose only non-NULL cluster is
+    its minimum."""
+    import random
+
+    from pgdedupe_spark.operators.exact_merge import exact_match_edges
+
+    for seed in range(3):
+        rng = random.Random(seed)
+        rows = [
+            (
+                rng.choice([None, *range(12)]),
+                rng.choice([None, "a", "b", "c", "d"]),
+                rng.choice([None, "x", "y"]),
+            )
+            for _ in range(40)
+        ]
+        rows += [(7, "a", "x"), (7, "a", "x"), (7, "b", "y"), (7, None, "x")]
+        rows += [(c, "hot", "x") for c in range(3, 12)]
+        rows += [(None, "solo", "y"), (4, "solo", "y"), (4, "solo", "y")]
+        rng.shuffle(rows)
+        df = spark.createDataFrame(rows, "cluster long, f1 string, f2 string")
+        for cols in (["f1"], ["f2"], ["f1", "f2"]):
+            got = sorted((r.id1, r.id2) for r in exact_match_edges(df, cols).collect())
+            assert got == _ref_exact_edges(rows, cols), (seed, cols)
+
+
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(texts=texts_strategy)
 def test_ngram_jaccard_both_strategies_match_brute_force(spark, texts):
